@@ -1,10 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-import graft.functions.DotFold
 
 /** Single place where engine sessions are configured, so every entry point
   * (Verify, Bench, tests) runs with identical semantics:
@@ -21,6 +17,9 @@ import graft.functions.DotFold
   *   - AQE on (Spark 4 default, made explicit): runtime coalescing of
   *     shuffle partitions and skew-join splitting are part of the scale
   *     design, not an accident of defaults.
+  *
+  * Sessions carry no extensions: engine code calls its native expressions
+  * (e.g. [[graft.functions.DotFold.dotFold]]) through the Column API.
   */
 object Sessions {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
@@ -37,35 +36,11 @@ object Sessions {
       // in-memory key budget is safe.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
       .config("spark.ui.enabled", "false")
-      // Engine extensions via the public SparkSessionExtensions hook:
-      // dot_fold(array<double>, array<double>) as a SQL-callable function
-      // backed by the codegen'd DotFold expression.
-      .withExtensions { ext =>
-        ext.injectFunction((
-          FunctionIdentifier("dot_fold"),
-          new ExpressionInfo(classOf[DotFold].getName, "dot_fold"),
-          (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-            require(children.length == 2, "dot_fold takes exactly 2 arguments")
-            DotFold(children.head, children(1))
-          }))
-        // Optimizer rule: the idiomatic HOF dot product
-        // aggregate(zip_with(a,b,(x,y)->x*y), 0.0D, (acc,v)->acc+v)
-        // rewrites to the codegen'd DotFold — same fold, same NULL
-        // semantics, interpreted-lambda cost removed (see
-        // graft.plans.RewriteHofDotProduct for the exact-match contract).
-        ext.injectOptimizerRule(_ => graft.plans.RewriteHofDotProduct)
-      }
 
-  /** Session for the harness mains: `local[$SPARK_GRAFT_CPUS]`.
-    * `SPARK_GRAFT_SHUFFLE_PARTITIONS` overrides the partition count
-    * (default = core count) — the knob behind the r13 partitions-scaled
-    * A/B on the sf1 relational outliers (BASELINE.md): on a real cluster
-    * this is the ~2-3× total-cores setting noted on [[builder]], and the
-    * A/B documents how the fixed local default behaves at 10× data.
-    */
+  /** Session for the harness mains: `local[$SPARK_GRAFT_CPUS]`, with one
+    * shuffle partition per core. */
   def local(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    builder(s"local[$cpus]", parts).appName(appName).getOrCreate()
+    builder(s"local[$cpus]", cpus).appName(appName).getOrCreate()
   }
 }

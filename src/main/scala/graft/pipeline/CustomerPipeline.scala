@@ -49,20 +49,21 @@ object CustomerPipeline {
 
   private val cols = CustomerSchema.fieldNames.toSeq
 
+  /** The [[WireSchema]] projection: balances cast decimal→double. */
+  private def wire: Seq[Column] = CustomerSchema.fields.toSeq.map { f =>
+    if (f.dataType.isInstanceOf[DecimalType]) col(f.name).cast("double").as(f.name)
+    else col(f.name)
+  }
+
   /** E1 produce semantics (P1–P3 → K1): named projection, decimal→double
     * cast, JSON-object-per-row. Output is the Kafka frame shape
     * (key: null — the reference sends unkeyed messages, so no per-entity
     * ordering guarantee; value: UTF-8 JSON).
     */
-  def toKafkaFrame(customers: DataFrame): DataFrame = {
-    val wire: Seq[Column] = CustomerSchema.fields.toSeq.map { f =>
-      if (f.dataType.isInstanceOf[DecimalType]) col(f.name).cast("double").as(f.name)
-      else col(f.name)
-    }
+  def toKafkaFrame(customers: DataFrame): DataFrame =
     customers.select(
       lit(null).cast("binary").as("key"),
       to_json(struct(wire: _*)).cast("binary").as("value"))
-  }
 
   /** E2 consume semantics (P4–P5): JSON parse with the wire schema, then
     * the sink re-round into DECIMAL(10,2) (HALF_UP) that MySQL's column
@@ -85,10 +86,6 @@ object CustomerPipeline {
     * the distributed variant.
     */
   def exportJsonArray(customers: DataFrame): DataFrame = {
-    val wire: Seq[Column] = CustomerSchema.fields.toSeq.map { f =>
-      if (f.dataType.isInstanceOf[DecimalType]) col(f.name).cast("double").as(f.name)
-      else col(f.name)
-    }
     // collect_list does NOT preserve a prior global sort (the single
     // reducer concatenates partition partials in fetch order), so order
     // inside the aggregate: sort_array on array<struct> orders by the

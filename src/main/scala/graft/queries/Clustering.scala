@@ -97,10 +97,10 @@ object Clustering {
     * cluster-quality report (q179) reads the same role table — the
     * [[Dedup.componentLabels]] sharing pattern.
     */
-  private val dbscanRolesMemo = Dedup.registerMemo("dbscan_roles")
+  private val dbscanRolesMemo = new Dedup.Memo[DataFrame]("dbscan_roles")
 
   private[graft] def dbscanRoles(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(dbscanRolesMemo, s, dir)(computeDbscan(s, dir))
+    dbscanRolesMemo(s, dir)(computeDbscan(s, dir))
 
   private def computeDbscan(s: SparkSession, dir: String): DataFrame = {
     val minDeg = DbscanMinPts - 1
@@ -296,21 +296,20 @@ object Clustering {
     * centered trace.
     */
   /** The d-bounded PCA state: per-dim means, PC1/PC2 power iterates,
-    * eigenvalue estimates, centered trace. Cached per (SESSION, dir) —
-    * the same key discipline as every [[Dedup.registerMemo]] memo (r15
-    * advice: a dir-only key would silently serve stale stats if a corpus
-    * were regenerated in-place within one JVM), so the d²-pass runs once
-    * per dataset per session tree (q174 reports it; q180 projects
-    * through it; q182 folds into it).
+    * eigenvalue estimates, centered trace. A [[Dedup.Memo]] like every
+    * other shared surface, keyed per (SESSION, dir) (r15 advice: a
+    * dir-only key would silently serve stale stats if a corpus were
+    * regenerated in-place within one JVM), so the d²-pass runs once per
+    * dataset per session tree (q174 reports it; q180 projects through
+    * it; q182 folds into it) and [[Dedup.clearMemos]] drops it.
     */
   private[graft] case class PcaStats(mu: Array[Double], v1: Array[Double],
       v2: Array[Double], lam1: Double, lam2: Double, trace: Double)
 
-  private val pcaCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), PcaStats]()
+  private val pcaStatsMemo = new Dedup.Memo[PcaStats]("pca_stats")
 
   private[graft] def pcaStats(s: SparkSession, dir: String): PcaStats =
-    pcaCache.getOrElseUpdate((s, dir), computePcaStats(s, dir))
+    pcaStatsMemo(s, dir)(computePcaStats(s, dir))
 
   /** Per-product quantization scale for the Gramian/sum partials: every
     * product xi·xj (and every component xi) is snapped to the 1e-9 grid
@@ -378,11 +377,10 @@ object Clustering {
     * associative across the doc-disjoint split). Memoized per (session,
     * dir): q174's stats and q182's registered output both read it.
     */
-  private val pcaMergedMemo = Dedup.registerMemo("pca_partials_full")
+  private val pcaMergedMemo = new Dedup.Memo[DataFrame]("pca_partials_full")
 
   private def mergedPartialsCached(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(pcaMergedMemo, s, dir)(
-      mergedPcaPartials(s, dir).localCheckpoint(true))
+    pcaMergedMemo(s, dir)(mergedPcaPartials(s, dir).localCheckpoint(true))
 
   private def computePcaStats(s: SparkSession, dir: String): PcaStats =
     solveFromPartials(mergedPartialsCached(s, dir))
@@ -538,7 +536,7 @@ object Clustering {
 
   // ---------------------------------------------------------------- q182
 
-  private val pcaGramMemo = Dedup.registerMemo("pca_gram_base")
+  private val pcaGramMemo = new Dedup.Memo[DataFrame]("pca_gram_base")
 
   /** The stored PCA state: the BASE corpus's quantized Gramian/sum/count
     * partials ([[pcaPartials]] over `vec_id % 10 ≠ 0`, q148's delta
@@ -548,7 +546,7 @@ object Clustering {
     * DIMENSION, never the corpus.
     */
   private[graft] def storedPcaPartials(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(pcaGramMemo, s, dir)(
+    pcaGramMemo(s, dir)(
       Layout.materializeBucketed(s, dir, "pca_gram", "i")(
         pcaPartials(Similarity.vecs(s, dir).filter(!isDeltaVec)
           .select(col("vec_id"), col("v")))))
@@ -597,8 +595,8 @@ object Clustering {
     */
   private def isDeltaVec = col("vec_id") % 10 === 0
 
-  private val dbscanPairsMemo = Dedup.registerMemo("dbscan_base_pairs")
-  private val dbscanLabelsMemo = Dedup.registerMemo("dbscan_base_labels")
+  private val dbscanPairsMemo = new Dedup.Memo[DataFrame]("dbscan_base_pairs")
+  private val dbscanLabelsMemo = new Dedup.Memo[DataFrame]("dbscan_base_labels")
 
   /** The stored clustering state, as DURABLE bucketed parquet tables
     * (q102's write pattern via [[Layout.materializeBucketed]], the q168
@@ -607,7 +605,7 @@ object Clustering {
     * base VECTORS are never re-scored.
     */
   private[graft] def storedDbscanPairs(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(dbscanPairsMemo, s, dir)(
+    dbscanPairsMemo(s, dir)(
       Layout.materializeBucketed(s, dir, "dbscan_pairs", "keep_id") {
         val base = Similarity.vecs(s, dir).filter(!isDeltaVec)
         Similarity.bruteNearDupBlocked(base, base.count(), DbscanEps,
@@ -616,7 +614,7 @@ object Clustering {
       })
 
   private[graft] def storedDbscanLabels(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(dbscanLabelsMemo, s, dir)(
+    dbscanLabelsMemo(s, dir)(
       Layout.materializeBucketed(s, dir, "dbscan_labels", "doc") {
         val bp = storedDbscanPairs(s, dir)
         val bd = bp.select(col("keep_id").as("id"))
@@ -1029,7 +1027,7 @@ object Clustering {
     * IS the corpus at ε = 0.40). All counts are integers: no division,
     * no rounding, nothing for two engines to disagree on.
     */
-  private val rawPairsMemo = Dedup.registerMemo("eps_raw_pairs")
+  private val rawPairsMemo = new Dedup.Memo[DataFrame]("eps_raw_pairs")
 
   /** The shared ε₀-pair list with RAW cosines: the mode-aware pair
     * relation at the widest radius ([[DbscanEps]]) plus one O(E·d)
@@ -1041,7 +1039,7 @@ object Clustering {
     * re-filter this ONE frame instead of re-running pair generation.
     */
   private[graft] def rawEpsPairs(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(rawPairsMemo, s, dir) {
+    rawPairsMemo(s, dir) {
       val v = Similarity.vecs(s, dir)
       dbscanPairs(s, dir).select(col("keep_id"), col("drop_id"))
         .join(v.select(col("vec_id").as("keep_id"), col("v").as("va"), col("norm").as("na")), "keep_id")

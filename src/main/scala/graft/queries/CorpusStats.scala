@@ -217,9 +217,9 @@ object CorpusStats {
     * Eagerly checkpointed: q80 alone reads it twice (per-source sizes +
     * per-gram pair expansion).
     */
-  private val sourceGramsMemo = graft.queries.Dedup.registerMemo("source_grams")
+  private val sourceGramsMemo = new Dedup.Memo[DataFrame]("source_grams")
   private[graft] def sourceGrams(s: SparkSession, dir: String): DataFrame =
-    graft.queries.Dedup.memoized(sourceGramsMemo, s, dir) {
+    sourceGramsMemo(s, dir) {
       resplit(documents(s, dir).select(col("source"), col("text")))
         .select(col("source"), explode(shingles(words(col("text")), SrcN)).as("g"))
         .distinct()
@@ -604,8 +604,8 @@ object CorpusStats {
     * the inline fallback compute is reachable only if clearMemos()
     * raced between the two calls, and it acquires no other monitor.
     */
-  private val bpeRulesMemo  = Dedup.registerMemo("bpe_rules")
-  private val bpeCorpusMemo = Dedup.registerMemo("bpe_corpus")
+  private val bpeRulesMemo  = new Dedup.Memo[DataFrame]("bpe_rules")
+  private val bpeCorpusMemo = new Dedup.Memo[DataFrame]("bpe_corpus")
 
   /** Fresh (un-memoized) rules frame — the PlanSpec pin target, exactly
     * like q22Fresh vs the memoized q22: the pin must see the real
@@ -614,15 +614,15 @@ object CorpusStats {
     bpeFold(s, dir)._1.reduce(_ unionByName _)
 
   private def bpeRules(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(bpeRulesMemo, s, dir) {
+    bpeRulesMemo(s, dir) {
       val (rules, fin) = bpeFold(s, dir)
-      Dedup.memoized(bpeCorpusMemo, s, dir)(fin)
+      bpeCorpusMemo(s, dir)(fin)
       rules.reduce(_ unionByName _).localCheckpoint(true)
     }
 
   private[graft] def bpeCorpus(s: SparkSession, dir: String): DataFrame = {
     bpeRules(s, dir)
-    Dedup.memoized(bpeCorpusMemo, s, dir)(bpeFold(s, dir)._2)
+    bpeCorpusMemo(s, dir)(bpeFold(s, dir)._2)
   }
 
   def q107BpeMerges(s: SparkSession, dir: String): DataFrame =
@@ -733,10 +733,10 @@ object CorpusStats {
     * does not CSE across consumers), and the two queries built it twice
     * over. Counts are exact integers; sharing cannot change results.
     */
-  private val docBigramsMemo = Dedup.registerMemo("doc_bigrams")
+  private val docBigramsMemo = new Dedup.Memo[DataFrame]("doc_bigrams")
 
   private def docBigrams(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(docBigramsMemo, s, dir)(
+    docBigramsMemo(s, dir)(
       resplit(documents(s, dir).select(col("doc_id"), col("text")))
         .select(col("doc_id"), words(col("text")).as("ww"))
         .filter(size(col("ww")) >= 2)
@@ -749,10 +749,10 @@ object CorpusStats {
 
   /** Memoized corpus bigram table (l, r, c_lr) over [[docBigrams]] —
     * vocabulary-sized, read by 4–5 model aggregates in each consumer. */
-  private val bigramTableMemo = Dedup.registerMemo("bigram_table")
+  private val bigramTableMemo = new Dedup.Memo[DataFrame]("bigram_table")
 
   private def bigramTable(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(bigramTableMemo, s, dir)(
+    bigramTableMemo(s, dir)(
       docBigrams(s, dir).groupBy(col("l"), col("r")).agg(sum(col("k")).as("c_lr"))
         .localCheckpoint(true))
 
@@ -1187,7 +1187,7 @@ object CorpusStats {
     */
   val GrowthPcts: Seq[Int] = Seq(1, 2, 5, 10, 25, 50, 100)
 
-  private val docRanksMemo = Dedup.registerMemo("doc_ranks")
+  private val docRanksMemo = new Dedup.Memo[DataFrame]("doc_ranks")
 
   /** Two-phase global 1-based rank of documents by doc_id — q50's
     * distributed rank pattern applied at corpus width: range-partition
@@ -1198,7 +1198,7 @@ object CorpusStats {
     * growth curves (q186, q187) read it, twice each.
     */
   private def docRanks(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(docRanksMemo, s, dir)(computeDocRanks(s, dir).localCheckpoint(true))
+    docRanksMemo(s, dir)(computeDocRanks(s, dir).localCheckpoint(true))
 
   private def computeDocRanks(s: SparkSession, dir: String): DataFrame = {
     val buckets = s.sparkContext.defaultParallelism

@@ -160,20 +160,15 @@ object Dedup {
         round(col("jacc_raw"), 6).as("jaccard"))
   }
 
-  /** Every memo table in the engine (including [[graft.queries.TrainingData]]'s
+  /** Every memo in the engine (including [[graft.queries.TrainingData]]'s
     * and [[graft.queries.CorpusStats]]'s shared gram surfaces), so
     * [[clearMemos]] honors the snapshot contract no matter which object
-    * owns the memo. Registration happens at object construction (a
-    * single-threaded effect under the JVM class-init lock), never after.
-    * Declared BEFORE the first `registerMemo()` call — object vals
-    * initialize in declaration order.
+    * owns the memo. A [[Memo]] adds itself when constructed, which happens
+    * at object construction (a single-threaded effect under the JVM
+    * class-init lock), never after. Declared BEFORE the first `Memo` below
+    * — object vals initialize in declaration order.
     */
-  private val allMemos =
-    new java.util.concurrent.CopyOnWriteArrayList[TrieMap[(SparkSession, String), Memo]]
-  /** Identity map memo-table → human name, so the build log below can say
-    * WHICH shared surface a query paid for (bench memo-tax attribution). */
-  private val memoNames = java.util.Collections.synchronizedMap(
-    new java.util.IdentityHashMap[AnyRef, String])
+  private val allMemos = new java.util.concurrent.CopyOnWriteArrayList[Memo[_]]
   /** Append-only log of completed memo builds — (name, build seconds), in
     * force order. The bench snapshots its size around each query timer:
     * any growth means that query was the first consumer of a shared
@@ -183,16 +178,60 @@ object Dedup {
     */
   private val memoBuildLog =
     new java.util.concurrent.CopyOnWriteArrayList[(String, Double)]
-  private[graft] def registerMemo(name: String): TrieMap[(SparkSession, String), Memo] = {
-    val m = TrieMap.empty[(SparkSession, String), Memo]
-    allMemos.add(m)
-    memoNames.put(m, name)
-    m
-  }
   private[graft] def memoBuildCount: Int = memoBuildLog.size
   private[graft] def memoBuildsSince(n: Int): Seq[(String, Double)] =
     memoBuildLog.toArray.iterator
       .map(_.asInstanceOf[(String, Double)]).drop(n).toSeq
+
+  /** A shared surface memoized per (session, sfDir): `memo(s, dir)(compute)`
+    * returns the value built for that key, running `compute` on the first
+    * access only. `name` labels the surface's builds in the build log, so
+    * the bench can say WHICH shared surface a query paid for.
+    *
+    * Each access first drops entries whose SparkContext has stopped,
+    * bounding what a session-cycling JVM can accumulate to the dead
+    * entries since the last access (eviction is access-triggered, not
+    * stop-triggered, and `newSession()` clones sharing a live context are
+    * kept).
+    */
+  private[graft] final class Memo[T](name: String) {
+    /** Once-only cell: `TrieMap.getOrElseUpdate` evaluates its by-name
+      * default BEFORE the atomic install, so two threads racing the first
+      * access would BOTH run an eager-checkpoint compute — the loser's RDD
+      * blocks would be stranded until the ContextCleaner notices.
+      * Installing a cheap cell and forcing its `lazy val` afterwards means
+      * the losing thread's cell is discarded un-evaluated and both threads
+      * block on the single installed compute (pinned by the concurrency
+      * test in DedupSpec).
+      */
+    private final class Cell(compute: () => T) { lazy val value: T = compute() }
+    private val table = TrieMap.empty[(SparkSession, String), Cell]
+    allMemos.add(this)
+
+    def apply(s: SparkSession, dir: String)(compute: => T): T = {
+      table.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
+      table.getOrElseUpdate((s, dir), new Cell(() => logged(compute))).value
+    }
+
+    def clear(): Unit = table.clear()
+
+    private def logged(compute: => T): T = {
+      val n0 = memoBuildLog.size
+      val t0 = System.nanoTime()
+      val v = compute
+      // logged AFTER the compute succeeds: a failed build isn't a paid
+      // tax. The duration covers the forced compute (for checkpointed
+      // memos, the actual cluster materialization) EXCLUSIVE of any
+      // nested memo builds it forced — those logged their own (already
+      // exclusive) durations during `compute`, so subtracting their sum
+      // keeps the line items additive: Σ items = true build wall time,
+      // never double-counted (q22_pairs forces ordered_sets inside it).
+      val gross = (System.nanoTime() - t0) / 1e9
+      val nested = memoBuildsSince(n0).map(_._2).sum
+      memoBuildLog.add((name, math.max(gross - nested, 0.0)))
+      v
+    }
+  }
 
   /** Memoized materialization of [[q22Fresh]] per (session, sfDir): the
     * near-dup pair list is the intermediate every downstream dedup stage
@@ -204,63 +243,20 @@ object Dedup {
     * assumes it). A caller that rewrites a dir in-session must
     * [[clearMemos]] first or results are the OLD snapshot's.
     */
-  private val q22Memo = registerMemo("q22_pairs")
+  private val q22Memo = new Memo[DataFrame]("q22_pairs")
 
   /** Memoized rarest-first per-doc shingle sets — the index substrate
     * shared by q22's pair generation and q121's incremental probe. */
-  private val orderedSetsMemo = registerMemo("ordered_sets")
+  private val orderedSetsMemo = new Memo[DataFrame]("ordered_sets")
 
   private def orderedSetsCached(s: SparkSession, dir: String): DataFrame =
-    memoized(orderedSetsMemo, s, dir)(
-      orderedSets(shingleRows(s, dir)).localCheckpoint(true))
+    orderedSetsMemo(s, dir)(orderedSets(shingleRows(s, dir)).localCheckpoint(true))
 
-  /** Per-key once-only holder: `TrieMap.getOrElseUpdate` evaluates its
-    * by-name default BEFORE the atomic install, so two threads racing the
-    * first access would BOTH run an eager-checkpoint compute — the loser's
-    * RDD blocks would be stranded until the ContextCleaner notices.
-    * Installing a cheap holder and forcing its `lazy val` afterwards means
-    * the losing thread's holder is discarded un-evaluated and both threads
-    * block on the single installed compute (pinned by the concurrency test
-    * in DedupSpec).
-    */
-  private[graft] final class Memo(compute: () => DataFrame) {
-    lazy val value: DataFrame = compute()
-  }
-
-  /** Fetch-or-compute with dead-session eviction: each access drops
-    * entries whose underlying SparkContext has stopped, bounding what a
-    * session-cycling JVM can accumulate to the dead entries since the
-    * last dedup call (eviction is access-triggered, not stop-triggered,
-    * and `newSession()` clones sharing a live context are kept).
-    */
-  private[graft] def memoized(memo: TrieMap[(SparkSession, String), Memo],
-      s: SparkSession, dir: String)(compute: => DataFrame): DataFrame = {
-    memo.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    memo.getOrElseUpdate((s, dir), new Memo(() => {
-      val n0 = memoBuildLog.size
-      val t0 = System.nanoTime()
-      val df = compute
-      // logged AFTER the compute succeeds: a failed build isn't a paid
-      // tax. The duration covers the forced compute (for checkpointed
-      // memos, the actual cluster materialization) EXCLUSIVE of any
-      // nested memo builds it forced — those logged their own (already
-      // exclusive) durations during `compute`, so subtracting their sum
-      // keeps the line items additive: Σ items = true build wall time,
-      // never double-counted (q22_pairs forces ordered_sets inside it).
-      val gross = (System.nanoTime() - t0) / 1e9
-      val nested = memoBuildLog.toArray.iterator.drop(n0)
-        .map(_.asInstanceOf[(String, Double)]._2).sum
-      memoBuildLog.add((Option(memoNames.get(memo)).getOrElse("anon"),
-        math.max(gross - nested, 0.0)))
-      df
-    })).value
-  }
-
-  /** Drop every memoized frame (see the snapshot contract above). */
+  /** Drop every memoized value (see the snapshot contract above). */
   def clearMemos(): Unit = allMemos.forEach(_.clear())
 
   private[graft] def q22Cached(s: SparkSession, dir: String): DataFrame =
-    memoized(q22Memo, s, dir)(q22Fresh(s, dir).localCheckpoint(true))
+    q22Memo(s, dir)(q22Fresh(s, dir).localCheckpoint(true))
 
   /** q22: n-gram Jaccard near-dup pairs (J ≥ [[JaccardT]] on word
     * 3-shingles) via a PREFIX-FILTERED inverted index (Bayardo All-Pairs /
@@ -466,13 +462,13 @@ object Dedup {
     * propagation loop twice (it was ⅓ of the round-4 bench). Holding the
     * frame here also keeps a live reference to its checkpointed RDDs, so
     * the ContextCleaner can't reclaim them between consumers; entries are
-    * evicted once their session stops (see [[memoized]]), and the
+    * evicted once their session stops (see [[Memo]]), and the
     * immutable-snapshot contract on [[q22Memo]] applies here too.
     */
-  private val labelsMemo = registerMemo("component_labels")
+  private val labelsMemo = new Memo[DataFrame]("component_labels")
 
   def componentLabels(s: SparkSession, dir: String): DataFrame =
-    memoized(labelsMemo, s, dir)(computeComponentLabels(s, dir))
+    labelsMemo(s, dir)(computeComponentLabels(s, dir))
 
   private def computeComponentLabels(s: SparkSession, dir: String): DataFrame =
     minLabelPropagation(q22Cached(s, dir).select(col("doc_a"), col("doc_b")))
@@ -921,10 +917,10 @@ object Dedup {
     * and bench accounting as [[q22Memo]]; consumers read the same frame
     * they built privately before, so results are unchanged.
     */
-  private val minhashMemo = registerMemo("minhash_state")
+  private val minhashMemo = new Memo[DataFrame]("minhash_state")
 
   private def minhashStateCached(s: SparkSession, dir: String): DataFrame =
-    memoized(minhashMemo, s, dir)(minhashState(s, dir))
+    minhashMemo(s, dir)(minhashState(s, dir))
 
   /** Per-doc MinHash state (doc_id, sig, n, sh) for every document —
     * q108's index substrate, eagerly checkpointed (band explode, probe,

@@ -33,7 +33,7 @@ import graft.Tables
   *     literal predicate can't express.
   *
   * Layout tables are materialized once per (session, sfDir) through the
-  * central memo registry ([[Dedup.registerMemo]]) — the write cost is a
+  * central memo registry ([[Dedup.Memo]]) — the write cost is a
   * load-time cost, labeled in the bench's `memo_builds` attribution like
   * every other shared surface, and the snapshot contract matches the rest
   * of the engine (corpus dirs are immutable for the session's lifetime).
@@ -170,17 +170,15 @@ object Layout {
     s.table(name)
   }
 
-  private val bucketedLiMemo  = Dedup.registerMemo("bucketed_lineitem")
-  private val bucketedOrdMemo = Dedup.registerMemo("bucketed_orders")
-  private val eventsByDateMemo = Dedup.registerMemo("events_by_date")
+  private val bucketedLiMemo  = new Dedup.Memo[DataFrame]("bucketed_lineitem")
+  private val bucketedOrdMemo = new Dedup.Memo[DataFrame]("bucketed_orders")
+  private val eventsByDateMemo = new Dedup.Memo[DataFrame]("events_by_date")
 
   def bucketedLineitem(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(bucketedLiMemo, s, dir)(
-      writeBucketed(s, dir, "lineitem", "l_orderkey"))
+    bucketedLiMemo(s, dir)(writeBucketed(s, dir, "lineitem", "l_orderkey"))
 
   def bucketedOrders(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(bucketedOrdMemo, s, dir)(
-      writeBucketed(s, dir, "orders", "o_orderkey"))
+    bucketedOrdMemo(s, dir)(writeBucketed(s, dir, "orders", "o_orderkey"))
 
   /** Events re-laid-out as a date-partitioned external table
     * (`event_date=YYYY-MM-DD/` directories, the universal warehouse
@@ -189,7 +187,7 @@ object Layout {
     * column type inference reads `event_date` back as a real DATE.
     */
   def partitionedEvents(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(eventsByDateMemo, s, dir) {
+    eventsByDateMemo(s, dir) {
       val name = s"graft_events_p_${sfTag(dir)}"
       val path = s"$layoutRoot/${sfTag(dir)}/events_p"
       // reuse-if-exists: same shared-catalog reasoning as [[writeBucketed]]
@@ -307,7 +305,7 @@ object Layout {
   private[graft] def morton(x: Column, y: Column): Column =
     spread8(x).bitwiseOR(shiftleft(spread8(y), 1))
 
-  private val eventsZMemo = Dedup.registerMemo("events_zorder")
+  private val eventsZMemo = new Dedup.Memo[DataFrame]("events_zorder")
 
   /** Events re-laid-out on a 2-D Z-ORDER (Morton) curve over (user_id,
     * day) — the multi-dimensional clustering lever (Delta/Iceberg
@@ -323,7 +321,7 @@ object Layout {
     * one-time write cost, exactly like [[writeBucketed]].
     */
   private[graft] def zorderedEvents(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(eventsZMemo, s, dir) {
+    eventsZMemo(s, dir) {
       val name = s"graft_events_z_${sfTag(dir)}"
       val path = s"$layoutRoot/${sfTag(dir)}/events_z"
       if (!s.catalog.tableExists(name)) {

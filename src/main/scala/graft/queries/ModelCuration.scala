@@ -204,10 +204,10 @@ object ModelCuration {
     * margins) — the classifier trains once per session, exactly like the
     * dedup pair memos. Doc-count-sized, eagerly checkpointed.
     */
-  private val qfMarginsMemo = Dedup.registerMemo("qf_margins")
+  private val qfMarginsMemo = new Dedup.Memo[DataFrame]("qf_margins")
 
   private[graft] def qfMarginsCached(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(qfMarginsMemo, s, dir) {
+    qfMarginsMemo(s, dir) {
       val m = qfTrain(s, dir)
       m.feats.join(broadcast(weightsDf(s, m.weights)), Seq("b"))
         .groupBy(col("doc_id"))

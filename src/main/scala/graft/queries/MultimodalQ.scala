@@ -278,10 +278,10 @@ object MultimodalQ {
     * the band join self-joins it, and un-materialized the decode kernel
     * ran on BOTH branches.
     */
-  private val imgPairsMemo = Dedup.registerMemo("img_pairs")
+  private val imgPairsMemo = new Dedup.Memo[DataFrame]("img_pairs")
 
   private[graft] def imagePairs(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(imgPairsMemo, s, dir) {
+    imgPairsMemo(s, dir) {
       import s.implicits._
       import PerceptualHash._
       val nDocs = requireSeedLane(s, dir)
@@ -373,10 +373,10 @@ object MultimodalQ {
     * PCM round-trip AND the banding end-to-end.
     */
   /** Memoized verified audio pair set — see [[imagePairs]]. */
-  private val audPairsMemo = Dedup.registerMemo("aud_pairs")
+  private val audPairsMemo = new Dedup.Memo[DataFrame]("aud_pairs")
 
   private[graft] def audioPairs(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(audPairsMemo, s, dir) {
+    audPairsMemo(s, dir) {
       import s.implicits._
       import PerceptualHash._
       val nDocs = requireSeedLane(s, dir)
@@ -463,10 +463,10 @@ object MultimodalQ {
     * banded shape — frame count only multiplies the map side.
     */
   /** Memoized verified video pair votes — see [[imagePairs]]. */
-  private val vidPairsMemo = Dedup.registerMemo("vid_pairs")
+  private val vidPairsMemo = new Dedup.Memo[DataFrame]("vid_pairs")
 
   private[graft] def videoPairs(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(vidPairsMemo, s, dir) {
+    vidPairsMemo(s, dir) {
       import s.implicits._
       import PerceptualHash._
       val nDocs = requireSeedLane(s, dir)

@@ -82,15 +82,15 @@ object Retrieval {
     * q172, q185, q196) previously rebuilt the identical tokenize +
     * aggregate + eager checkpoint PER QUERY (six corpus passes per bench
     * session where one suffices). Same immutable-snapshot contract and
-    * bench accounting as every other [[Dedup.registerMemo]] surface;
+    * bench accounting as every other [[Dedup.Memo]] surface;
     * results are unchanged — consumers read the same frame they built
     * privately before. (q168's STORED base index is deliberately not
     * this: its substrate is the durable bucketed parquet table.)
     */
-  private val postingsMemo = Dedup.registerMemo("bm25_postings_full")
+  private val postingsMemo = new Dedup.Memo[DataFrame]("bm25_postings_full")
 
   private def postingsCached(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(postingsMemo, s, dir)(
+    postingsMemo(s, dir)(
       postings(resplit(documents(s, dir).select(col("doc_id"), col("text"))))
         .localCheckpoint())
 
@@ -222,7 +222,7 @@ object Retrieval {
   /** The corpus increment (q124's convention: a fresh crawl batch). */
   private val isDeltaDoc = col("doc_id") % 10 === 3
 
-  private val bm25BaseMemo = Dedup.registerMemo("bm25_base_index")
+  private val bm25BaseMemo = new Dedup.Memo[DataFrame]("bm25_base_index")
 
   /** The STORED base index: base-corpus postings written ONCE as a
     * bucketed-by-term external parquet table (q102's layout pattern,
@@ -233,7 +233,7 @@ object Retrieval {
     * vocabulary derivation below exchange-free.
     */
   private[graft] def storedBasePostings(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(bm25BaseMemo, s, dir)(
+    bm25BaseMemo(s, dir)(
       Layout.materializeBucketed(s, dir, "bm25_postings", "term")(
         postings(resplit(documents(s, dir).select(col("doc_id"), col("text")))
           .filter(!isDeltaDoc))))

@@ -138,11 +138,10 @@ object Similarity {
     * A vector's signature depends only on (v, geometry), so the shared
     * materialization cannot change any consumer's result.
     */
-  private val lshBucketsMemo = Dedup.registerMemo("lsh_buckets")
+  private val lshBucketsMemo = new Dedup.Memo[DataFrame]("lsh_buckets")
 
   private def lshBuckets(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(lshBucketsMemo, s, dir)(
-      lshBucketsFresh(s, dir).localCheckpoint(true))
+    lshBucketsMemo(s, dir)(lshBucketsFresh(s, dir).localCheckpoint(true))
 
   def q26AnnLsh(s: SparkSession, dir: String): DataFrame =
     annFromBuckets(lshBuckets(s, dir))
@@ -903,8 +902,8 @@ object Similarity {
   private def isDeltaVec(shift: Long): Column =
     col("vec_id") >= shift && (col("vec_id") - shift) % 16 === 0
 
-  private val ndSigIndexMemo  = Dedup.registerMemo("nd_sig_index")
-  private val ndBasePairsMemo = Dedup.registerMemo("nd_base_pairs")
+  private val ndSigIndexMemo  = new Dedup.Memo[DataFrame]("nd_sig_index")
+  private val ndBasePairsMemo = new Dedup.Memo[DataFrame]("nd_base_pairs")
 
   /** The FROZEN index geometry: rung/bands from the BASE corpus size —
     * an incremental index's geometry is fixed when the index is built,
@@ -928,7 +927,7 @@ object Similarity {
     */
   private[graft] def storedBandSigs(s: SparkSession, dir: String,
       base: DataFrame, rung: Int, bands: Int): DataFrame =
-    Dedup.memoized(ndSigIndexMemo, s, dir)(
+    ndSigIndexMemo(s, dir)(
       Layout.materializeBucketed(s, dir, "nd_sigs", "band_sig")(
         bandSigs(base, rung, bands)))
 
@@ -940,7 +939,7 @@ object Similarity {
     */
   private[graft] def storedBasePairs(s: SparkSession, dir: String,
       base: DataFrame, rung: Int, bands: Int): DataFrame =
-    Dedup.memoized(ndBasePairsMemo, s, dir) {
+    ndBasePairsMemo(s, dir) {
       val sigB = storedBandSigs(s, dir, base, rung, bands)
       val cand = resplit(sigB.as("a").join(sigB.as("b"),
           col("a.band") === col("b.band") && col("a.band_sig") === col("b.band_sig")
@@ -1377,10 +1376,10 @@ object Similarity {
   /** Memoized per (session, dir) (r19-opt): q101 and q155 both need the
     * trained index, and each previously re-ran the entire Lloyd loop —
     * the slowest stage of the sf1 sweep, paid twice per session. */
-  private val trainedAssignMemo = Dedup.registerMemo("ivf_trained_assign")
+  private val trainedAssignMemo = new Dedup.Memo[DataFrame]("ivf_trained_assign")
 
   private[graft] def trainedAssignment(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(trainedAssignMemo, s, dir)(computeTrainedAssignment(s, dir))
+    trainedAssignMemo(s, dir)(computeTrainedAssignment(s, dir))
 
   private def computeTrainedAssignment(s: SparkSession, dir: String): DataFrame = {
     // one materialization of the widened vectors: every round scans them
@@ -1888,7 +1887,7 @@ object Similarity {
   /** The q39/q101 seeded-centroid cell assignment as a reusable frame
     * (vec_id, v, norm, cell) — shared by q117 and the SemDeDup spec. */
   private[graft] def seededAssignment(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(seededAssignMemo, s, dir) {
+    seededAssignMemo(s, dir) {
       val e = vecs(s, dir)
       val cents = e.orderBy(col("vec_id")).limit(IvfCells)
         .select(col("vec_id").as("c_id"), col("v").as("cv"), col("norm").as("cnorm"))
@@ -1899,7 +1898,7 @@ object Similarity {
     }
 
   /** Memoized per (session, dir) — see [[seededAssignment]]. */
-  private val seededAssignMemo = Dedup.registerMemo("ivf_seeded_assign")
+  private val seededAssignMemo = new Dedup.Memo[DataFrame]("ivf_seeded_assign")
 
   /** q117: SemDeDup — semantic dedup with CLUSTER-bucketed candidates:
     * assign every vector to its IVF cell (the q39 seeded assignment),

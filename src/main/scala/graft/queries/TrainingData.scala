@@ -576,9 +576,9 @@ object TrainingData {
     * read each half, and the frame is gram-surface-sized (bounded by
     * corpus tokens), the same thing the join itself must shuffle.
     */
-  private val docGramsMemo = Dedup.registerMemo("decontam_doc_grams")
+  private val docGramsMemo = new Dedup.Memo[DataFrame]("decontam_doc_grams")
   private[graft] def docGrams(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoized(docGramsMemo, s, dir) {
+    docGramsMemo(s, dir) {
       resplit(documents(s, dir).select(col("doc_id"), col("text")))
         .select(col("doc_id"), explode(shingles(words(col("text")), DecontamN)).as("g"))
         .distinct()
@@ -1161,7 +1161,7 @@ object TrainingData {
 
   // ---------------------------------------------------------------- q192
 
-  private val shardManifestMemo = Dedup.registerMemo("shard_manifest")
+  private val shardManifestMemo = new Dedup.Memo[DataFrame]("shard_manifest")
 
   /** The id threshold splitting the already-planned base from the append
     * batch: the top tenth of the id RANGE (integer arithmetic on
@@ -1179,7 +1179,7 @@ object TrainingData {
     * artifact a production shard planner keeps between ingest batches.
     */
   private[graft] def storedShardManifest(s: SparkSession, dir: String, thr: Long): DataFrame =
-    Dedup.memoized(shardManifestMemo, s, dir)(
+    shardManifestMemo(s, dir)(
       Layout.materializeBucketed(s, dir, "shard_manifest", "shard_id")(
         shardManifest(prefixTokens(s, docTokens(s, dir).filter(col("doc_id") < thr)), 0L)))
 

@@ -83,11 +83,12 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("clearMemos reaches memos owned by other objects (registry wiring)") {
-    // The shared gram surfaces live in TrainingData/CorpusStats but must
-    // honor Dedup.clearMemos' snapshot contract: same frame back while
-    // memoized, a fresh frame after a clear. `eq` is the right check —
-    // memoization is object identity, not value equality.
-    import graft.queries.{CorpusStats, TrainingData}
+    // The shared gram surfaces live in TrainingData/CorpusStats and the
+    // PCA stats in Clustering, but all must honor Dedup.clearMemos'
+    // snapshot contract: same value back while memoized, a fresh value
+    // after a clear. `eq` is the right check — memoization is object
+    // identity, not value equality.
+    import graft.queries.{Clustering, CorpusStats, TrainingData}
     val dir = docsDir(Seq(
       "alpha beta gamma delta epsilon zeta eta",
       "alpha beta gamma delta epsilon zeta theta"))
@@ -95,22 +96,28 @@ class DedupSpec extends SparkTestBase {
     assert(TrainingData.docGrams(spark, dir) eq dg)
     val sg = CorpusStats.sourceGrams(spark, dir)
     assert(CorpusStats.sourceGrams(spark, dir) eq sg)
+    val pca = Clustering.pcaStats(spark, sf)
+    assert(Clustering.pcaStats(spark, sf) eq pca)
     Dedup.clearMemos()
     assert(!(TrainingData.docGrams(spark, dir) eq dg),
       "clearMemos must evict TrainingData's gram memo")
     assert(!(CorpusStats.sourceGrams(spark, dir) eq sg),
       "clearMemos must evict CorpusStats' gram memo")
+    val n0 = Dedup.memoBuildCount
+    assert(!(Clustering.pcaStats(spark, sf) eq pca),
+      "clearMemos must evict Clustering's PCA stats")
+    assert(Dedup.memoBuildsSince(n0).map(_._1).contains("pca_stats"),
+      "the PCA stats build must be logged as a memo line item")
   }
 
-  test("memoized: concurrent first access runs the compute exactly once") {
+  test("Memo: concurrent first access runs the compute exactly once") {
     // TrieMap.getOrElseUpdate evaluates its by-name default BEFORE the
-    // atomic install, so without the lazy holder two racing threads would
+    // atomic install, so without the lazy cell two racing threads would
     // BOTH run an eager-checkpoint compute (stranding the loser's RDD
     // blocks). All threads are released simultaneously through a latch to
     // maximize the race window on the first access.
-    import scala.collection.concurrent.TrieMap
     import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
-    val memo = TrieMap.empty[(org.apache.spark.sql.SparkSession, String), Dedup.Memo]
+    val memo = new Dedup.Memo[org.apache.spark.sql.DataFrame]("race_test")
     val computes = new java.util.concurrent.atomic.AtomicInteger(0)
     val start = new CountDownLatch(1)
     val threads = 8
@@ -121,7 +128,7 @@ class DedupSpec extends SparkTestBase {
         pool.submit(new Callable[org.apache.spark.sql.DataFrame] {
           def call(): org.apache.spark.sql.DataFrame = {
             start.await(30, TimeUnit.SECONDS)
-            Dedup.memoized(memo, spark, "race-dir") {
+            memo(spark, "race-dir") {
               computes.incrementAndGet()
               Thread.sleep(100) // widen the window a racing compute would hit
               Seq(1L).toDF("x")

@@ -439,39 +439,6 @@ class PlanSpec extends SparkTestBase {
         s"the fact side reads all partitions despite the dim filter:\n$p")
   }
 
-  test("the HOF dot product rewrites to codegen'd dot_fold; near-misses stay untouched") {
-    // RewriteHofDotProduct (injected via SparkSessionExtensions) must turn
-    // the idiomatic aggregate(zip_with(a,b,*),0,+) spelling into DotFold —
-    // and must NOT touch anything that isn't exactly that fold.
-    val vecs = Tables.embeddings(spark, sf)
-      .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
-      .limit(32).localCheckpoint(true)
-    val hof = vecs.selectExpr("vec_id",
-      "aggregate(zip_with(v, v, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, e) -> acc + e) AS d")
-    assert(hof.queryExecution.optimizedPlan.toString.contains("dot_fold"),
-      s"HOF dot product not rewritten:\n${hof.queryExecution.optimizedPlan}")
-    // observational equivalence: the rewritten plan computes the exact
-    // left-to-right fold (bit-identical doubles, not approximately equal)
-    val got = hof.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    vecs.collect().foreach { r =>
-      val v = r.getSeq[Double](1)
-      val expect = v.foldLeft(0.0)((acc, x) => acc + x * x)
-      assert(got(r.getLong(0)) === expect, s"vec ${r.getLong(0)} diverged")
-    }
-    // near-misses must not fire: a scaled merge lambda, a non-zero seed,
-    // and a non-identity finish are all semantically different folds
-    for (expr <- Seq(
-        "aggregate(zip_with(v, v, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, e) -> acc + 2 * e)",
-        "aggregate(zip_with(v, v, (x, y) -> x * y), CAST(1 AS DOUBLE), (acc, e) -> acc + e)",
-        "aggregate(zip_with(v, v, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, e) -> acc + e, s -> s + 1)",
-        // -0.0 seed is observable on empty arrays (the fold returns the
-        // seed; DotFold's accumulator starts at +0.0) — must not fire
-        "aggregate(zip_with(v, v, (x, y) -> x * y), double('-0.0'), (acc, e) -> acc + e)")) {
-      val p = vecs.selectExpr(s"$expr AS d").queryExecution.optimizedPlan.toString
-      assert(!p.contains("dot_fold"), s"near-miss was wrongly rewritten: $expr\n$p")
-    }
-  }
-
   test("q132/q135: running totals are segmented prefix sums, never a global sort") {
     // Both queries need a cumulative sum over an ordered domain — the shape
     // that tempts a global `SUM() OVER (ORDER BY …)`. Pin the scale-safe

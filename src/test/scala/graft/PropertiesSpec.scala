@@ -106,11 +106,12 @@ class PropertiesSpec extends SparkTestBase {
     assert(bad.isEmpty, s"blocks lost content: ${bad.collect().take(3).mkString}")
   }
 
-  test("dot_fold is SQL-callable via the injected session extension") {
-    val r = spark.sql("SELECT dot_fold(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").head()
-    assert(r.getDouble(0) === 11.0)
+  test("dotFold on Columns: the value, and NULL on an array length mismatch") {
+    def d(a: Seq[Double], b: Seq[Double]) =
+      spark.range(1).select(dotFold(typedLit(a), typedLit(b))).head()
+    assert(d(Seq(1.0, 2.0), Seq(3.0, 4.0)).getDouble(0) === 11.0)
     // null propagation on length mismatch, matching the HOF fold
-    assert(spark.sql("SELECT dot_fold(array(1.0D), array(1.0D, 2.0D)) AS d").head().isNullAt(0))
+    assert(d(Seq(1.0), Seq(1.0, 2.0)).isNullAt(0))
   }
 
   test("law: DotFold ≡ sequential left fold, bit for bit") {
