@@ -19,8 +19,9 @@ import graft.streaming.EventStreams
   *      fire-and-forget producer, dags/etl_dags.py:26-27).
   *   I2 ingest: ONE streaming pipeline — dedup on event_id within the
   *      watermark, then the watermarked tumbling (1 hour × event_type)
-  *      aggregate — drained with AvailableNow + checkpoint, so each
-  *      scheduler tick processes exactly the backlog and exits.
+  *      aggregate — drained with AvailableNow + checkpoint through
+  *      [[KafkaIO.drainTo]] (EtlJob's drain), so each scheduler tick
+  *      processes exactly the backlog and exits.
   *   I3 upsert: foreachBatch MERGEs each micro-batch's updated windows
   *      into the keyed aggregate store (full-outer by (w_start,
   *      event_type) — q122's SCD1 merge shape), REPLACING stale window
@@ -97,13 +98,8 @@ object EventsIngestJob {
         .parquet(incoming)
       val deduped = EventStreams.dedupWithinWatermark(stream, "30 minutes", Seq("event_id"))
       val agg = EventStreams.tumbling(deduped, "1 hour")
-      val q = agg.writeStream
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => upsertWindows(spark, b, store) }
-        .start()
-      q.awaitTermination()
+      KafkaIO.drainTo(agg, ckpt)((b, _) => upsertWindows(spark, b, store))
+        .outputMode("update").start().awaitTermination()
     }
 
     // Slice by TIME, the real arrival order of a stream: tick 1 lands

@@ -540,14 +540,15 @@ object Clustering {
 
   /** The stored PCA state: the BASE corpus's quantized Gramian/sum/count
     * partials ([[pcaPartials]] over `vec_id % 10 ≠ 0`, q148's delta
-    * convention) as a durable bucketed parquet table (q102's writer, the
-    * q168/q178 stored-state idiom). d² + d + 1 = 4161 integer rows — the
+    * convention) as a durable bucketed parquet table (q102's writer
+    * [[Layout.materializeBucketed]], the q168/q178 stored-state idiom; a
+    * fresh table per memo build). d² + d + 1 = 4161 integer rows — the
     * RowMatrix contract means the durable state is bounded by the
     * DIMENSION, never the corpus.
     */
   private[graft] def storedPcaPartials(s: SparkSession, dir: String): DataFrame =
     pcaGramMemo(s, dir)(
-      Layout.materializeBucketed(s, dir, "pca_gram", "i")(
+      Layout.materializeBucketed(s, "pca_gram", "i")(
         pcaPartials(Similarity.vecs(s, dir).filter(!isDeltaVec)
           .select(col("vec_id"), col("v")))))
 
@@ -600,13 +601,13 @@ object Clustering {
 
   /** The stored clustering state, as DURABLE bucketed parquet tables
     * (q102's write pattern via [[Layout.materializeBucketed]], the q168
-    * stored-index idiom): the base ε-pair list and the base core labels.
-    * Degrees and the core set derive from the read-back pair table — the
-    * base VECTORS are never re-scored.
+    * stored-index idiom; a fresh table per memo build): the base ε-pair
+    * list and the base core labels. Degrees and the core set derive from
+    * the read-back pair table — the base VECTORS are never re-scored.
     */
   private[graft] def storedDbscanPairs(s: SparkSession, dir: String): DataFrame =
     dbscanPairsMemo(s, dir)(
-      Layout.materializeBucketed(s, dir, "dbscan_pairs", "keep_id") {
+      Layout.materializeBucketed(s, "dbscan_pairs", "keep_id") {
         val base = Similarity.vecs(s, dir).filter(!isDeltaVec)
         Similarity.bruteNearDupBlocked(base, base.count(), DbscanEps,
             ordered = false) // bucketed write re-shuffles by key anyway
@@ -615,7 +616,7 @@ object Clustering {
 
   private[graft] def storedDbscanLabels(s: SparkSession, dir: String): DataFrame =
     dbscanLabelsMemo(s, dir)(
-      Layout.materializeBucketed(s, dir, "dbscan_labels", "doc") {
+      Layout.materializeBucketed(s, "dbscan_labels", "doc") {
         val bp = storedDbscanPairs(s, dir)
         val bd = bp.select(col("keep_id").as("id"))
           .union(bp.select(col("drop_id").as("id")))

@@ -224,17 +224,18 @@ object Retrieval {
 
   private val bm25BaseMemo = new Dedup.Memo[DataFrame]("bm25_base_index")
 
-  /** The STORED base index: base-corpus postings written ONCE as a
-    * bucketed-by-term external parquet table (q102's layout pattern,
-    * shared writer [[graft.queries.Layout.materializeBucketed]]) and read
-    * back through the catalog. Durable-index semantics, not a
-    * session-lifetime checkpoint (r13 verdict #3): a production increment
-    * folds against the index ON DISK, and the bucket metadata makes the
-    * vocabulary derivation below exchange-free.
+  /** The STORED base index: base-corpus postings written once per memo
+    * build as a bucketed-by-term external parquet table (q102's layout
+    * pattern, shared writer [[graft.queries.Layout.materializeBucketed]],
+    * a fresh table after [[Dedup.clearMemos]]) and read back through the
+    * catalog. Durable-index semantics, not a session-lifetime checkpoint
+    * (r13 verdict #3): a production increment folds against the index ON
+    * DISK, and the bucket metadata makes the vocabulary derivation below
+    * exchange-free.
     */
   private[graft] def storedBasePostings(s: SparkSession, dir: String): DataFrame =
     bm25BaseMemo(s, dir)(
-      Layout.materializeBucketed(s, dir, "bm25_postings", "term")(
+      Layout.materializeBucketed(s, "bm25_postings", "term")(
         postings(resplit(documents(s, dir).select(col("doc_id"), col("text")))
           .filter(!isDeltaDoc))))
 

@@ -918,17 +918,18 @@ object Similarity {
   }
 
   /** The STORED signature index: base-corpus band signatures written
-    * ONCE as a bucketed-by-band_sig external parquet table (q102's
-    * layout pattern, shared writer [[Layout.materializeBucketed]]) and
-    * read back through the catalog — durable-index semantics, the q168
-    * stored-postings idiom applied to LSH. Bucketing by band_sig
-    * co-locates each delta probe with the base rows it can collide
-    * with.
+    * once per memo build as a bucketed-by-band_sig external parquet
+    * table (q102's layout pattern, shared writer
+    * [[Layout.materializeBucketed]], a fresh table after
+    * [[Dedup.clearMemos]]) and read back through the catalog —
+    * durable-index semantics, the q168 stored-postings idiom applied to
+    * LSH. Bucketing by band_sig co-locates each delta probe with the
+    * base rows it can collide with.
     */
   private[graft] def storedBandSigs(s: SparkSession, dir: String,
       base: DataFrame, rung: Int, bands: Int): DataFrame =
     ndSigIndexMemo(s, dir)(
-      Layout.materializeBucketed(s, dir, "nd_sigs", "band_sig")(
+      Layout.materializeBucketed(s, "nd_sigs", "band_sig")(
         bandSigs(base, rung, bands)))
 
   /** The STORED base-base verified pair list — the second half of the
@@ -947,7 +948,7 @@ object Similarity {
         .select(col("a.vec_id").as("keep_id"), col("b.vec_id").as("drop_id"))
         .distinct()
         .localCheckpoint(true))
-      Layout.materializeBucketed(s, dir, "nd_base_pairs", "keep_id")(
+      Layout.materializeBucketed(s, "nd_base_pairs", "keep_id")(
         verifyCandidates(cand, base, ProdNearDupThreshold))
     }
 

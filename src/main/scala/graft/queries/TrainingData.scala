@@ -1174,13 +1174,14 @@ object TrainingData {
   }
 
   /** The STORED base manifest: the q189 plan over the base corpus,
-    * written once as a bucketed-by-shard_id external parquet table
-    * (q102's writer) and read back through the catalog — the durable
-    * artifact a production shard planner keeps between ingest batches.
+    * written once per memo build as a bucketed-by-shard_id external
+    * parquet table (q102's writer, [[Layout.materializeBucketed]]) and
+    * read back through the catalog — the durable artifact a production
+    * shard planner keeps between ingest batches.
     */
   private[graft] def storedShardManifest(s: SparkSession, dir: String, thr: Long): DataFrame =
     shardManifestMemo(s, dir)(
-      Layout.materializeBucketed(s, dir, "shard_manifest", "shard_id")(
+      Layout.materializeBucketed(s, "shard_manifest", "shard_id")(
         shardManifest(prefixTokens(s, docTokens(s, dir).filter(col("doc_id") < thr)), 0L)))
 
   /** q192: INCREMENTAL shard-plan maintenance — extend the stored

@@ -381,7 +381,7 @@ class PlanSpec extends SparkTestBase {
     // listing to establish one-file-per-bucket, so the default plan pays
     // per-task Sorts under the SMJ even on a sorted layout. The layout
     // itself is written sorted with exactly one file per bucket
-    // (writeBucketed's aligned repartition), which this pin proves: with
+    // (materializeBucketed's aligned repartition), which this pin proves: with
     // the legacy conf restoring the ordering report, BOTH sorts vanish
     // and the bucket sort is paid at write time only.
     import org.apache.spark.sql.execution.SortExec

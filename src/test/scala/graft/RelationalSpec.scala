@@ -21,6 +21,10 @@ class RelationalSpec extends SparkTestBase {
     // hash-checkable.
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(noOracle.isEmpty, s"queries missing oracle SQL: $noOracle")
+    // and the reverse: an oracle whose key matches no registered query
+    // (a typo or a renamed query) would never be compared
+    val noQuery = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(noQuery.isEmpty, s"oracle SQL without a registered query: $noQuery")
   }
 
   test("q01 aggregates lineitem exactly") {

@@ -9,8 +9,17 @@ cd "$(dirname "$0")/.."
 
 quick=${1:-}
 
+# The same sbt invocation as the ROADMAP tier-1 command: offline
+# resolvers, then Test/compile and `testOnly *` with the test JVM sized
+# to this host.
+export COURSIER_MODE=offline SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+
 echo "== compile + test =="
-sbt -batch compile test
+sbt --batch -Dsbt.log.noformat=true Test/compile
+SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" \
+  SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)" \
+  SPARK_LOCAL_DIRS=/tmp/spark-local \
+  sbt --batch -Dsbt.log.noformat=true "testOnly *"
 
 verify_at() {
   local sf="$1" out="/tmp/graft_gate_$1"
