@@ -97,10 +97,7 @@ object Clustering {
     * cluster-quality report (q179) reads the same role table — the
     * [[Dedup.componentLabels]] sharing pattern.
     */
-  private val dbscanRolesMemo = new Dedup.Memo[DataFrame]("dbscan_roles")
-
-  private[graft] def dbscanRoles(s: SparkSession, dir: String): DataFrame =
-    dbscanRolesMemo(s, dir)(computeDbscan(s, dir))
+  private[graft] val dbscanRoles = new Dedup.Memo[DataFrame]("dbscan_roles")(computeDbscan)
 
   private def computeDbscan(s: SparkSession, dir: String): DataFrame = {
     val minDeg = DbscanMinPts - 1
@@ -306,10 +303,8 @@ object Clustering {
   private[graft] case class PcaStats(mu: Array[Double], v1: Array[Double],
       v2: Array[Double], lam1: Double, lam2: Double, trace: Double)
 
-  private val pcaStatsMemo = new Dedup.Memo[PcaStats]("pca_stats")
-
-  private[graft] def pcaStats(s: SparkSession, dir: String): PcaStats =
-    pcaStatsMemo(s, dir)(computePcaStats(s, dir))
+  private[graft] val pcaStats = new Dedup.Memo[PcaStats]("pca_stats")((s, dir) =>
+    solveFromPartials(mergedPartialsCached(s, dir)))
 
   /** Per-product quantization scale for the Gramian/sum partials: every
     * product xi·xj (and every component xi) is snapped to the 1e-9 grid
@@ -377,13 +372,9 @@ object Clustering {
     * associative across the doc-disjoint split). Memoized per (session,
     * dir): q174's stats and q182's registered output both read it.
     */
-  private val pcaMergedMemo = new Dedup.Memo[DataFrame]("pca_partials_full")
-
-  private def mergedPartialsCached(s: SparkSession, dir: String): DataFrame =
-    pcaMergedMemo(s, dir)(mergedPcaPartials(s, dir).localCheckpoint(true))
-
-  private def computePcaStats(s: SparkSession, dir: String): PcaStats =
-    solveFromPartials(mergedPartialsCached(s, dir))
+  private val mergedPartialsCached =
+    new Dedup.Memo[DataFrame]("pca_partials_full")((s, dir) =>
+      mergedPcaPartials(s, dir).localCheckpoint(true))
 
   /** Collect the d-bounded stats and eigensolve — d² = 4096 doubles of
     * state: the RowMatrix contract, collect bounded by the DIMENSION,
@@ -536,8 +527,6 @@ object Clustering {
 
   // ---------------------------------------------------------------- q182
 
-  private val pcaGramMemo = new Dedup.Memo[DataFrame]("pca_gram_base")
-
   /** The stored PCA state: the BASE corpus's quantized Gramian/sum/count
     * partials ([[pcaPartials]] over `vec_id % 10 ≠ 0`, q148's delta
     * convention) as a durable bucketed parquet table (q102's writer
@@ -546,11 +535,10 @@ object Clustering {
     * RowMatrix contract means the durable state is bounded by the
     * DIMENSION, never the corpus.
     */
-  private[graft] def storedPcaPartials(s: SparkSession, dir: String): DataFrame =
-    pcaGramMemo(s, dir)(
-      Layout.materializeBucketed(s, "pca_gram", "i")(
-        pcaPartials(Similarity.vecs(s, dir).filter(!isDeltaVec)
-          .select(col("vec_id"), col("v")))))
+  private[graft] val storedPcaPartials = new Dedup.Memo[DataFrame]("pca_gram_base")((s, dir) =>
+    Layout.materializeBucketed(s, "pca_gram", "i")(
+      pcaPartials(Similarity.vecs(s, dir).filter(!isDeltaVec)
+        .select(col("vec_id"), col("v")))))
 
   /** q182: INCREMENTAL PCA maintenance — fold a vector batch into the
     * stored Gramian state without re-scanning the base corpus, then
@@ -596,17 +584,14 @@ object Clustering {
     */
   private def isDeltaVec = col("vec_id") % 10 === 0
 
-  private val dbscanPairsMemo = new Dedup.Memo[DataFrame]("dbscan_base_pairs")
-  private val dbscanLabelsMemo = new Dedup.Memo[DataFrame]("dbscan_base_labels")
-
   /** The stored clustering state, as DURABLE bucketed parquet tables
     * (q102's write pattern via [[Layout.materializeBucketed]], the q168
     * stored-index idiom; a fresh table per memo build): the base ε-pair
     * list and the base core labels. Degrees and the core set derive from
     * the read-back pair table — the base VECTORS are never re-scored.
     */
-  private[graft] def storedDbscanPairs(s: SparkSession, dir: String): DataFrame =
-    dbscanPairsMemo(s, dir)(
+  private[graft] val storedDbscanPairs =
+    new Dedup.Memo[DataFrame]("dbscan_base_pairs")((s, dir) =>
       Layout.materializeBucketed(s, "dbscan_pairs", "keep_id") {
         val base = Similarity.vecs(s, dir).filter(!isDeltaVec)
         Similarity.bruteNearDupBlocked(base, base.count(), DbscanEps,
@@ -614,8 +599,8 @@ object Clustering {
           .select(col("keep_id"), col("drop_id"))
       })
 
-  private[graft] def storedDbscanLabels(s: SparkSession, dir: String): DataFrame =
-    dbscanLabelsMemo(s, dir)(
+  private[graft] val storedDbscanLabels =
+    new Dedup.Memo[DataFrame]("dbscan_base_labels")((s, dir) =>
       Layout.materializeBucketed(s, "dbscan_labels", "doc") {
         val bp = storedDbscanPairs(s, dir)
         val bd = bp.select(col("keep_id").as("id"))
@@ -1028,8 +1013,6 @@ object Clustering {
     * IS the corpus at ε = 0.40). All counts are integers: no division,
     * no rounding, nothing for two engines to disagree on.
     */
-  private val rawPairsMemo = new Dedup.Memo[DataFrame]("eps_raw_pairs")
-
   /** The shared ε₀-pair list with RAW cosines: the mode-aware pair
     * relation at the widest radius ([[DbscanEps]]) plus one O(E·d)
     * verify pass recovering each pair's unrounded cosine (rounded sims
@@ -1039,16 +1022,15 @@ object Clustering {
     * parameter sweep (q184) and the threshold calibration (q193) both
     * re-filter this ONE frame instead of re-running pair generation.
     */
-  private[graft] def rawEpsPairs(s: SparkSession, dir: String): DataFrame =
-    rawPairsMemo(s, dir) {
-      val v = Similarity.vecs(s, dir)
-      dbscanPairs(s, dir).select(col("keep_id"), col("drop_id"))
-        .join(v.select(col("vec_id").as("keep_id"), col("v").as("va"), col("norm").as("na")), "keep_id")
-        .join(v.select(col("vec_id").as("drop_id"), col("v").as("vb"), col("norm").as("nb")), "drop_id")
-        .select(col("keep_id"), col("drop_id"),
-          (dotFold(col("va"), col("vb")) / (col("na") * col("nb"))).as("rsim"))
-        .localCheckpoint(true)
-    }
+  private[graft] val rawEpsPairs = new Dedup.Memo[DataFrame]("eps_raw_pairs")((s, dir) => {
+    val v = Similarity.vecs(s, dir)
+    dbscanPairs(s, dir).select(col("keep_id"), col("drop_id"))
+      .join(v.select(col("vec_id").as("keep_id"), col("v").as("va"), col("norm").as("na")), "keep_id")
+      .join(v.select(col("vec_id").as("drop_id"), col("v").as("vb"), col("norm").as("nb")), "drop_id")
+      .select(col("keep_id"), col("drop_id"),
+        (dotFold(col("va"), col("vb")) / (col("na") * col("nb"))).as("rsim"))
+      .localCheckpoint(true)
+  })
 
   def q184DbscanSweep(s: SparkSession, dir: String): DataFrame = {
     // static half of the CellOffset precondition (see its Scaladoc): the

@@ -217,14 +217,11 @@ object CorpusStats {
     * Eagerly checkpointed: q80 alone reads it twice (per-source sizes +
     * per-gram pair expansion).
     */
-  private val sourceGramsMemo = new Dedup.Memo[DataFrame]("source_grams")
-  private[graft] def sourceGrams(s: SparkSession, dir: String): DataFrame =
-    sourceGramsMemo(s, dir) {
-      resplit(documents(s, dir).select(col("source"), col("text")))
-        .select(col("source"), explode(shingles(words(col("text")), SrcN)).as("g"))
-        .distinct()
-        .localCheckpoint(true)
-    }
+  private[graft] val sourceGrams = new Dedup.Memo[DataFrame]("source_grams")((s, dir) =>
+    resplit(documents(s, dir).select(col("source"), col("text")))
+      .select(col("source"), explode(shingles(words(col("text")), SrcN)).as("g"))
+      .distinct()
+      .localCheckpoint(true))
 
   /** q80: cross-source n-gram similarity matrix — Jaccard overlap of the
     * distinct word-[[SrcN]]-gram vocabularies of every source pair. The
@@ -553,12 +550,11 @@ object CorpusStats {
     * fully merged) passes the corpus through unchanged and simply stops
     * emitting rules, instead of silently emptying it.
     */
-  /** The [[BpeRounds]]-round training fold shared by q107 (which reads
-    * the RULES) and q111 (which reads the final ENCODED corpus): per
-    * round, count adjacent pairs, pick the top rule, rewrite the corpus,
-    * checkpoint. Returns the in-order rule frames and the final corpus.
+  /** The [[BpeRounds]]-round training fold: per round, count adjacent
+    * pairs, pick the top rule, rewrite the corpus, checkpoint. Returns
+    * the in-order rule frames and the final corpus.
     */
-  private def bpeFold(s: SparkSession, dir: String): (Seq[DataFrame], DataFrame) = {
+  private def bpeRounds(s: SparkSession, dir: String): (Seq[DataFrame], DataFrame) = {
     val docs0 = resplit(documents(s, dir).select(col("doc_id"), col("text")))
       .select(col("doc_id"), array_join(words(col("text")), " ").as("txt"))
       .localCheckpoint(true)
@@ -592,41 +588,24 @@ object CorpusStats {
     (rulesRev.reverse, fin)
   }
 
-  /** Both fold outputs memoized per (session, dir) through the central
-    * registry, seeded from ONE fold run (q107 reads the rules, q111 the
-    * encoded corpus; without the memo the 3-round fold — the expensive
-    * part — would run once per consumer). Lock DISCIPLINE: only the
-    * rules memo's build ever runs the fold and seeds the corpus memo,
-    * so memo monitors are always acquired in the fixed order
-    * rules → corpus — a concurrent q107/q111 pair serializes on the
-    * rules build instead of deadlocking on a circular wait. bpeCorpus
-    * first forces bpeRules (which seeds both), then reads its own memo;
-    * the inline fallback compute is reachable only if clearMemos()
-    * raced between the two calls, and it acquires no other monitor.
+  /** The fold's two outputs — (rules with their round, encoded corpus) —
+    * memoized together per (session, dir): q107 reads the RULES and q111
+    * the final ENCODED corpus, and one fold run (the expensive part)
+    * serves both.
     */
-  private val bpeRulesMemo  = new Dedup.Memo[DataFrame]("bpe_rules")
-  private val bpeCorpusMemo = new Dedup.Memo[DataFrame]("bpe_corpus")
+  private[graft] val bpeFold = new Dedup.Memo[(DataFrame, DataFrame)]("bpe_fold")((s, dir) => {
+    val (rules, fin) = bpeRounds(s, dir)
+    (rules.reduce(_ unionByName _).localCheckpoint(true), fin)
+  })
 
   /** Fresh (un-memoized) rules frame — the PlanSpec pin target, exactly
     * like q22Fresh vs the memoized q22: the pin must see the real
     * aggregate tree, not a checkpointed-RDD scan. */
   private[graft] def bpeRulesFresh(s: SparkSession, dir: String): DataFrame =
-    bpeFold(s, dir)._1.reduce(_ unionByName _)
-
-  private def bpeRules(s: SparkSession, dir: String): DataFrame =
-    bpeRulesMemo(s, dir) {
-      val (rules, fin) = bpeFold(s, dir)
-      bpeCorpusMemo(s, dir)(fin)
-      rules.reduce(_ unionByName _).localCheckpoint(true)
-    }
-
-  private[graft] def bpeCorpus(s: SparkSession, dir: String): DataFrame = {
-    bpeRules(s, dir)
-    bpeCorpusMemo(s, dir)(bpeFold(s, dir)._2)
-  }
+    bpeRounds(s, dir)._1.reduce(_ unionByName _)
 
   def q107BpeMerges(s: SparkSession, dir: String): DataFrame =
-    bpeRules(s, dir)
+    bpeFold(s, dir)._1
       .select(col("round"), col("left_sym"), col("right_sym"),
         concat(col("left_sym"), lit("\u0001"), col("right_sym")).as("merged"),
         col("pair_count"))
@@ -696,7 +675,7 @@ object CorpusStats {
     * stage.
     */
   def q111BpeEncode(s: SparkSession, dir: String): DataFrame = {
-    val fin = bpeCorpus(s, dir)
+    val (_, fin) = bpeFold(s, dir)
     val raw = documents(s, dir)
       .select(col("doc_id"),
         size(words(col("text"))).cast("long").as("n_tok_raw"))
@@ -733,28 +712,22 @@ object CorpusStats {
     * does not CSE across consumers), and the two queries built it twice
     * over. Counts are exact integers; sharing cannot change results.
     */
-  private val docBigramsMemo = new Dedup.Memo[DataFrame]("doc_bigrams")
-
-  private def docBigrams(s: SparkSession, dir: String): DataFrame =
-    docBigramsMemo(s, dir)(
-      resplit(documents(s, dir).select(col("doc_id"), col("text")))
-        .select(col("doc_id"), words(col("text")).as("ww"))
-        .filter(size(col("ww")) >= 2)
-        .select(col("doc_id"), explode(transform(sequence(lit(1), size(col("ww")) - 1),
-          i => struct(element_at(col("ww"), i).as("l"),
-            element_at(col("ww"), i + 1).as("r")))).as("b"))
-        .groupBy(col("doc_id"), col("b.l").as("l"), col("b.r").as("r"))
-        .agg(count(lit(1)).as("k"))
-        .localCheckpoint(true))
+  private val docBigrams = new Dedup.Memo[DataFrame]("doc_bigrams")((s, dir) =>
+    resplit(documents(s, dir).select(col("doc_id"), col("text")))
+      .select(col("doc_id"), words(col("text")).as("ww"))
+      .filter(size(col("ww")) >= 2)
+      .select(col("doc_id"), explode(transform(sequence(lit(1), size(col("ww")) - 1),
+        i => struct(element_at(col("ww"), i).as("l"),
+          element_at(col("ww"), i + 1).as("r")))).as("b"))
+      .groupBy(col("doc_id"), col("b.l").as("l"), col("b.r").as("r"))
+      .agg(count(lit(1)).as("k"))
+      .localCheckpoint(true))
 
   /** Memoized corpus bigram table (l, r, c_lr) over [[docBigrams]] —
     * vocabulary-sized, read by 4–5 model aggregates in each consumer. */
-  private val bigramTableMemo = new Dedup.Memo[DataFrame]("bigram_table")
-
-  private def bigramTable(s: SparkSession, dir: String): DataFrame =
-    bigramTableMemo(s, dir)(
-      docBigrams(s, dir).groupBy(col("l"), col("r")).agg(sum(col("k")).as("c_lr"))
-        .localCheckpoint(true))
+  private val bigramTable = new Dedup.Memo[DataFrame]("bigram_table")((s, dir) =>
+    docBigrams(s, dir).groupBy(col("l"), col("r")).agg(sum(col("k")).as("c_lr"))
+      .localCheckpoint(true))
 
   /** q115: bigram-LM document perplexity — score every document by its
     * average negative log-likelihood under an add-k-smoothed bigram
@@ -862,7 +835,7 @@ object CorpusStats {
             element_at(col("ww"), i + 1).as("r")))).as("b"))
         .groupBy(col("b.l").as("left_sym"), col("b.r").as("right_sym"))
         .agg(count(lit(1)).as("pc"))
-    val enc = bpeCorpus(s, dir)
+    val (_, enc) = bpeFold(s, dir)
     // the stored pair-count table (checkpoint = materialization boundary)
     val base = partial(enc.filter(!isDelta))
       .select(col("left_sym"), col("right_sym"), col("pc").as("base_count"))
@@ -1187,8 +1160,6 @@ object CorpusStats {
     */
   val GrowthPcts: Seq[Int] = Seq(1, 2, 5, 10, 25, 50, 100)
 
-  private val docRanksMemo = new Dedup.Memo[DataFrame]("doc_ranks")
-
   /** Two-phase global 1-based rank of documents by doc_id — q50's
     * distributed rank pattern applied at corpus width: range-partition
     * the ids, row_number within each partition, add broadcast cumulative
@@ -1197,8 +1168,8 @@ object CorpusStats {
     * (the suite-wide PlanSpec ban). Memoized per (session, dir): both
     * growth curves (q186, q187) read it, twice each.
     */
-  private def docRanks(s: SparkSession, dir: String): DataFrame =
-    docRanksMemo(s, dir)(computeDocRanks(s, dir).localCheckpoint(true))
+  private val docRanks = new Dedup.Memo[DataFrame]("doc_ranks")((s, dir) =>
+    computeDocRanks(s, dir).localCheckpoint(true))
 
   private def computeDocRanks(s: SparkSession, dir: String): DataFrame = {
     val buckets = s.sparkContext.defaultParallelism
@@ -1400,7 +1371,7 @@ object CorpusStats {
     * int/int→ROUND(…,6) discipline q111's compression column ships.
     */
   def q188TokenizerFertility(s: SparkSession, dir: String): DataFrame = {
-    val enc = bpeCorpus(s, dir)
+    val enc = bpeFold(s, dir)._2
       .select(col("doc_id"), size(split(col("txt"), " ")).cast("long").as("n_bpe"))
     val meta = documents(s, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"),

@@ -183,10 +183,12 @@ object Dedup {
     memoBuildLog.toArray.iterator
       .map(_.asInstanceOf[(String, Double)]).drop(n).toSeq
 
-  /** A shared surface memoized per (session, sfDir): `memo(s, dir)(compute)`
-    * returns the value built for that key, running `compute` on the first
-    * access only. `name` labels the surface's builds in the build log, so
-    * the bench can say WHICH shared surface a query paid for.
+  /** A shared surface memoized per (session, sfDir), declared with its
+    * one compute: `memo(s, dir)` returns `compute(s, dir)`, run on the
+    * first access to that key only. The key is the compute's whole input,
+    * so a memoized value is a function of (session, dir) and nothing
+    * else. `name` labels the surface's builds in the build log, so the
+    * bench can say WHICH shared surface a query paid for.
     *
     * Each access first drops entries whose SparkContext has stopped,
     * bounding what a session-cycling JVM can accumulate to the dead
@@ -194,7 +196,7 @@ object Dedup {
     * stop-triggered, and `newSession()` clones sharing a live context are
     * kept).
     */
-  private[graft] final class Memo[T](name: String) {
+  private[graft] final class Memo[T](name: String)(compute: (SparkSession, String) => T) {
     /** Once-only cell: `TrieMap.getOrElseUpdate` evaluates its by-name
       * default BEFORE the atomic install, so two threads racing the first
       * access would BOTH run an eager-checkpoint compute — the loser's RDD
@@ -202,15 +204,17 @@ object Dedup {
       * Installing a cheap cell and forcing its `lazy val` afterwards means
       * the losing thread's cell is discarded un-evaluated and both threads
       * block on the single installed compute (pinned by the concurrency
-      * test in DedupSpec).
+      * tests in DedupSpec and CorpusStatsSpec).
       */
-    private final class Cell(compute: () => T) { lazy val value: T = compute() }
+    private final class Cell(s: SparkSession, dir: String) {
+      lazy val value: T = logged(compute(s, dir))
+    }
     private val table = TrieMap.empty[(SparkSession, String), Cell]
     allMemos.add(this)
 
-    def apply(s: SparkSession, dir: String)(compute: => T): T = {
+    def apply(s: SparkSession, dir: String): T = {
       table.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      table.getOrElseUpdate((s, dir), new Cell(() => logged(compute))).value
+      table.getOrElseUpdate((s, dir), new Cell(s, dir)).value
     }
 
     def clear(): Unit = table.clear()
@@ -233,6 +237,9 @@ object Dedup {
     }
   }
 
+  /** Drop every memoized value (see the snapshot contract on [[q22Cached]]). */
+  def clearMemos(): Unit = allMemos.forEach(_.clear())
+
   /** Memoized materialization of [[q22Fresh]] per (session, sfDir): the
     * near-dup pair list is the intermediate every downstream dedup stage
     * consumes (q45's graph, hence q58's funnel), exactly like the label
@@ -243,20 +250,13 @@ object Dedup {
     * assumes it). A caller that rewrites a dir in-session must
     * [[clearMemos]] first or results are the OLD snapshot's.
     */
-  private val q22Memo = new Memo[DataFrame]("q22_pairs")
+  private[graft] val q22Cached = new Memo[DataFrame]("q22_pairs")((s, dir) =>
+    q22Fresh(s, dir).localCheckpoint(true))
 
   /** Memoized rarest-first per-doc shingle sets — the index substrate
     * shared by q22's pair generation and q121's incremental probe. */
-  private val orderedSetsMemo = new Memo[DataFrame]("ordered_sets")
-
-  private def orderedSetsCached(s: SparkSession, dir: String): DataFrame =
-    orderedSetsMemo(s, dir)(orderedSets(shingleRows(s, dir)).localCheckpoint(true))
-
-  /** Drop every memoized value (see the snapshot contract above). */
-  def clearMemos(): Unit = allMemos.forEach(_.clear())
-
-  private[graft] def q22Cached(s: SparkSession, dir: String): DataFrame =
-    q22Memo(s, dir)(q22Fresh(s, dir).localCheckpoint(true))
+  private val orderedSetsCached = new Memo[DataFrame]("ordered_sets")((s, dir) =>
+    orderedSets(shingleRows(s, dir)).localCheckpoint(true))
 
   /** q22: n-gram Jaccard near-dup pairs (J ≥ [[JaccardT]] on word
     * 3-shingles) via a PREFIX-FILTERED inverted index (Bayardo All-Pairs /
@@ -463,15 +463,17 @@ object Dedup {
     * frame here also keeps a live reference to its checkpointed RDDs, so
     * the ContextCleaner can't reclaim them between consumers; entries are
     * evicted once their session stops (see [[Memo]]), and the
-    * immutable-snapshot contract on [[q22Memo]] applies here too.
+    * immutable-snapshot contract on [[q22Cached]] applies here too.
     */
-  private val labelsMemo = new Memo[DataFrame]("component_labels")
-
-  def componentLabels(s: SparkSession, dir: String): DataFrame =
-    labelsMemo(s, dir)(computeComponentLabels(s, dir))
+  val componentLabels = new Memo[DataFrame]("component_labels")(computeComponentLabels)
 
   private def computeComponentLabels(s: SparkSession, dir: String): DataFrame =
     minLabelPropagation(q22Cached(s, dir).select(col("doc_a"), col("doc_b")))
+
+  /** An undirected pair list `(doc_a, doc_b)` as a directed edge list:
+    * both orientations of every pair. Callers pick the checkpoint. */
+  private def symmetricEdges(pairs: DataFrame): DataFrame =
+    pairs.union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
 
   /** Min-label propagation (hash-min + pointer doubling) to fixpoint over
     * an undirected pair list `(doc_a, doc_b)` → `(doc, comp)` where comp
@@ -492,8 +494,7 @@ object Dedup {
     // unpersist) — the memos pin only the shared frames.
     // lazy checkpoints from here on: the next action both materializes and
     // truncates, so each round costs exactly one job
-    val edges = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+    val edges = symmetricEdges(pairs)
       .localCheckpoint(false) // reused every propagation round
     var labels = edges.select(col("doc_a").as("doc")).distinct()
       .withColumn("comp", col("doc"))
@@ -814,9 +815,7 @@ object Dedup {
     */
   def q97PageRank(s: SparkSession, dir: String): DataFrame = {
     val pairs = q22Cached(s, dir).select(col("doc_a"), col("doc_b"))
-    val edges = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .localCheckpoint(false)
+    val edges = symmetricEdges(pairs).localCheckpoint(false)
     val deg = edges.groupBy(col("doc_a")).agg(count(lit(1)).as("deg"))
       .select(col("doc_a").as("doc"), col("deg"))
       .localCheckpoint(false)
@@ -914,13 +913,10 @@ object Dedup {
     * q108 each paid their OWN build of the identical corpus-wide
     * shingle + K-hash-min aggregate (two full tokenize+aggregate passes
     * per session where one suffices). Same immutable-snapshot contract
-    * and bench accounting as [[q22Memo]]; consumers read the same frame
+    * and bench accounting as [[q22Cached]]; consumers read the same frame
     * they built privately before, so results are unchanged.
     */
-  private val minhashMemo = new Memo[DataFrame]("minhash_state")
-
-  private def minhashStateCached(s: SparkSession, dir: String): DataFrame =
-    minhashMemo(s, dir)(minhashState(s, dir))
+  private val minhashStateCached = new Memo[DataFrame]("minhash_state")(minhashState)
 
   /** Per-doc MinHash state (doc_id, sig, n, sh) for every document —
     * q108's index substrate, eagerly checkpointed (band explode, probe,
@@ -1727,9 +1723,7 @@ object Dedup {
     * DedupSpec.
     */
   private[graft] def chainDepths(pairs: DataFrame, labels: DataFrame): DataFrame = {
-    val edges = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .localCheckpoint(true) // read every BFS round
+    val edges = symmetricEdges(pairs).localCheckpoint(true) // read every BFS round
     var dist = labels.select(col("doc"), col("comp"),
         when(col("doc") === col("comp"), lit(0L))
           .otherwise(lit(null).cast("long")).as("dist"))

@@ -109,17 +109,11 @@ object Layout {
       .repartition(BucketCount, col(key))
       .write.bucketBy(BucketCount, key).sortBy(key))
 
-  private val bucketedLiMemo  = new Dedup.Memo[DataFrame]("bucketed_lineitem")
-  private val bucketedOrdMemo = new Dedup.Memo[DataFrame]("bucketed_orders")
-  private val eventsByDateMemo = new Dedup.Memo[DataFrame]("events_by_date")
+  val bucketedLineitem = new Dedup.Memo[DataFrame]("bucketed_lineitem")((s, dir) =>
+    materializeBucketed(s, "lineitem", "l_orderkey")(Tables.lineitem(s, dir)))
 
-  def bucketedLineitem(s: SparkSession, dir: String): DataFrame =
-    bucketedLiMemo(s, dir)(materializeBucketed(s, "lineitem", "l_orderkey")(
-      Tables.lineitem(s, dir)))
-
-  def bucketedOrders(s: SparkSession, dir: String): DataFrame =
-    bucketedOrdMemo(s, dir)(materializeBucketed(s, "orders", "o_orderkey")(
-      Tables.orders(s, dir)))
+  val bucketedOrders = new Dedup.Memo[DataFrame]("bucketed_orders")((s, dir) =>
+    materializeBucketed(s, "orders", "o_orderkey")(Tables.orders(s, dir)))
 
   /** Events re-laid-out as a date-partitioned external table
     * (`event_date=YYYY-MM-DD/` directories, the universal warehouse
@@ -127,12 +121,11 @@ object Layout {
     * gives one file per partition directory at fixture scale; partition
     * column type inference reads `event_date` back as a real DATE.
     */
-  def partitionedEvents(s: SparkSession, dir: String): DataFrame =
-    eventsByDateMemo(s, dir)(
-      saveLayout(s, "events_p", Tables.events(s, dir)
-        .withColumn("event_date", to_date(col("ts")))
-        .repartition(col("event_date"))
-        .write.partitionBy("event_date")))
+  val partitionedEvents = new Dedup.Memo[DataFrame]("events_by_date")((s, dir) =>
+    saveLayout(s, "events_p", Tables.events(s, dir)
+      .withColumn("event_date", to_date(col("ts")))
+      .repartition(col("event_date"))
+      .write.partitionBy("event_date")))
 
   /** q102: fact-fact revenue rollup through the BUCKETED layout — the
     * join co-locates by bucket and plans no exchange under the join
@@ -234,8 +227,6 @@ object Layout {
   private[graft] def morton(x: Column, y: Column): Column =
     spread8(x).bitwiseOR(shiftleft(spread8(y), 1))
 
-  private val eventsZMemo = new Dedup.Memo[DataFrame]("events_zorder")
-
   /** Events re-laid-out on a 2-D Z-ORDER (Morton) curve over (user_id,
     * day) — the multi-dimensional clustering lever (Delta/Iceberg
     * OPTIMIZE ZORDER BY): range-partition + sort by the interleaved
@@ -249,20 +240,19 @@ object Layout {
     * 5-bit and stretches monotonically across the byte. The layout is a
     * one-time write cost, exactly like [[materializeBucketed]].
     */
-  private[graft] def zorderedEvents(s: SparkSession, dir: String): DataFrame =
-    eventsZMemo(s, dir) {
-      val ev = Tables.events(s, dir)
-      val bounds = ev.agg(min(col("user_id")).as("u_lo"), max(col("user_id")).as("u_hi"))
-      saveLayout(s, "events_z", ev.crossJoin(broadcast(bounds))
-        .withColumn("x8", floor((col("user_id") - col("u_lo")) * 256 /
-          (col("u_hi") - col("u_lo") + 1)).cast("int"))
-        .withColumn("y8", ((dayofmonth(col("ts")) - 1) * 8).cast("int"))
-        .withColumn("zcode", morton(col("x8"), col("y8")))
-        .drop("u_lo", "u_hi", "x8", "y8")
-        .repartitionByRange(ZFiles, col("zcode"))
-        .sortWithinPartitions(col("zcode"))
-        .write)
-    }
+  private[graft] val zorderedEvents = new Dedup.Memo[DataFrame]("events_zorder")((s, dir) => {
+    val ev = Tables.events(s, dir)
+    val bounds = ev.agg(min(col("user_id")).as("u_lo"), max(col("user_id")).as("u_hi"))
+    saveLayout(s, "events_z", ev.crossJoin(broadcast(bounds))
+      .withColumn("x8", floor((col("user_id") - col("u_lo")) * 256 /
+        (col("u_hi") - col("u_lo") + 1)).cast("int"))
+      .withColumn("y8", ((dayofmonth(col("ts")) - 1) * 8).cast("int"))
+      .withColumn("zcode", morton(col("x8"), col("y8")))
+      .drop("u_lo", "u_hi", "x8", "y8")
+      .repartitionByRange(ZFiles, col("zcode"))
+      .sortWithinPartitions(col("zcode"))
+      .write)
+  })
 
   /** Target file count for the z-ordered layout (fixture-sized; a 100 TB
     * deployment targets HDFS-block-ish files, same curve). */

@@ -204,18 +204,15 @@ object ModelCuration {
     * margins) — the classifier trains once per session, exactly like the
     * dedup pair memos. Doc-count-sized, eagerly checkpointed.
     */
-  private val qfMarginsMemo = new Dedup.Memo[DataFrame]("qf_margins")
-
-  private[graft] def qfMarginsCached(s: SparkSession, dir: String): DataFrame =
-    qfMarginsMemo(s, dir) {
-      val m = qfTrain(s, dir)
-      m.feats.join(broadcast(weightsDf(s, m.weights)), Seq("b"))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("k") * col("x")).as("margin"))
-        .join(m.labels, Seq("doc_id"))
-        .select(col("doc_id"), col("y"), col("margin"))
-        .localCheckpoint(true)
-    }
+  private[graft] val qfMarginsCached = new Dedup.Memo[DataFrame]("qf_margins")((s, dir) => {
+    val m = qfTrain(s, dir)
+    m.feats.join(broadcast(weightsDf(s, m.weights)), Seq("b"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("k") * col("x")).as("margin"))
+      .join(m.labels, Seq("doc_id"))
+      .select(col("doc_id"), col("y"), col("margin"))
+      .localCheckpoint(true)
+  })
 
   /** q201: TRAINED quality-filter classifier — train [[QfRounds]] exact
     * GD rounds, then score every document with the final weights. Output

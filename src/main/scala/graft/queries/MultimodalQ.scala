@@ -278,29 +278,26 @@ object MultimodalQ {
     * the band join self-joins it, and un-materialized the decode kernel
     * ran on BOTH branches.
     */
-  private val imgPairsMemo = new Dedup.Memo[DataFrame]("img_pairs")
-
-  private[graft] def imagePairs(s: SparkSession, dir: String): DataFrame =
-    imgPairsMemo(s, dir) {
-      import s.implicits._
-      import PerceptualHash._
-      val nDocs = requireSeedLane(s, dir)
-      val sigs = documents(s, dir).select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { docId =>
-          val twin = docId % ImgTwinMod == ImgTwinOff
-          val seed = if (twin) docId - ImgTwinOff else docId
-          val bytes = BmpCodec.encode(ImgW, ImgH, (x, y) => {
-            var v = grayAt(seed, x, y)
-            if (twin && x == PerturbX && y == PerturbY) v = (v + 128) % 256
-            (v, v, v)
-          })
-          (docId, dHash(BmpCodec.decodePixels(bytes)))
-        }).toDF("doc_id", "sig").localCheckpoint(true)
-      Dedup.hammingBandPairs(sigs, simHashBlocks(nDocs))
-        .select(col("doc_a"), col("doc_b"),
-          col("sig_a").as("hash_a"), col("sig_b").as("hash_b"), col("hamming"))
-        .localCheckpoint(true)
-    }
+  private[graft] val imagePairs = new Dedup.Memo[DataFrame]("img_pairs")((s, dir) => {
+    import s.implicits._
+    import PerceptualHash._
+    val nDocs = requireSeedLane(s, dir)
+    val sigs = documents(s, dir).select(col("doc_id")).as[Long]
+      .mapPartitions(_.map { docId =>
+        val twin = docId % ImgTwinMod == ImgTwinOff
+        val seed = if (twin) docId - ImgTwinOff else docId
+        val bytes = BmpCodec.encode(ImgW, ImgH, (x, y) => {
+          var v = grayAt(seed, x, y)
+          if (twin && x == PerturbX && y == PerturbY) v = (v + 128) % 256
+          (v, v, v)
+        })
+        (docId, dHash(BmpCodec.decodePixels(bytes)))
+      }).toDF("doc_id", "sig").localCheckpoint(true)
+    Dedup.hammingBandPairs(sigs, simHashBlocks(nDocs))
+      .select(col("doc_a"), col("doc_b"),
+        col("sig_a").as("hash_a"), col("sig_b").as("hash_b"), col("hamming"))
+      .localCheckpoint(true)
+  })
 
   def q197ImageNearDup(s: SparkSession, dir: String): DataFrame =
     imagePairs(s, dir).orderBy(col("doc_a"), col("doc_b"))
@@ -373,29 +370,26 @@ object MultimodalQ {
     * PCM round-trip AND the banding end-to-end.
     */
   /** Memoized verified audio pair set — see [[imagePairs]]. */
-  private val audPairsMemo = new Dedup.Memo[DataFrame]("aud_pairs")
-
-  private[graft] def audioPairs(s: SparkSession, dir: String): DataFrame =
-    audPairsMemo(s, dir) {
-      import s.implicits._
-      import PerceptualHash._
-      val nDocs = requireSeedLane(s, dir)
-      val sigs = documents(s, dir).select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { docId =>
-          val twin = docId % WavTwinMod == WavTwinOff
-          val seed = if (twin) docId - WavTwinOff else docId
-          val samples = new Array[Short](FpSamples)
-          var k = 0
-          while (k < FpSamples) { samples(k) = sampleAt(seed, k).toShort; k += 1 }
-          if (twin) samples(PerturbK) = (samples(PerturbK) + 1).toShort
-          val bytes = WavCodec.encode(8000, 1, samples)
-          (docId, audioFp(WavCodec.decodeSamples(bytes)))
-        }).toDF("doc_id", "sig").localCheckpoint(true)
-      Dedup.hammingBandPairs(sigs, simHashBlocks(nDocs))
-        .select(col("doc_a"), col("doc_b"),
-          col("sig_a").as("fp_a"), col("sig_b").as("fp_b"), col("hamming"))
-        .localCheckpoint(true)
-    }
+  private[graft] val audioPairs = new Dedup.Memo[DataFrame]("aud_pairs")((s, dir) => {
+    import s.implicits._
+    import PerceptualHash._
+    val nDocs = requireSeedLane(s, dir)
+    val sigs = documents(s, dir).select(col("doc_id")).as[Long]
+      .mapPartitions(_.map { docId =>
+        val twin = docId % WavTwinMod == WavTwinOff
+        val seed = if (twin) docId - WavTwinOff else docId
+        val samples = new Array[Short](FpSamples)
+        var k = 0
+        while (k < FpSamples) { samples(k) = sampleAt(seed, k).toShort; k += 1 }
+        if (twin) samples(PerturbK) = (samples(PerturbK) + 1).toShort
+        val bytes = WavCodec.encode(8000, 1, samples)
+        (docId, audioFp(WavCodec.decodeSamples(bytes)))
+      }).toDF("doc_id", "sig").localCheckpoint(true)
+    Dedup.hammingBandPairs(sigs, simHashBlocks(nDocs))
+      .select(col("doc_a"), col("doc_b"),
+        col("sig_a").as("fp_a"), col("sig_b").as("fp_b"), col("hamming"))
+      .localCheckpoint(true)
+  })
 
   def q198AudioNearDup(s: SparkSession, dir: String): DataFrame =
     audioPairs(s, dir).orderBy(col("doc_a"), col("doc_b"))
@@ -463,36 +457,33 @@ object MultimodalQ {
     * banded shape — frame count only multiplies the map side.
     */
   /** Memoized verified video pair votes — see [[imagePairs]]. */
-  private val vidPairsMemo = new Dedup.Memo[DataFrame]("vid_pairs")
-
-  private[graft] def videoPairs(s: SparkSession, dir: String): DataFrame =
-    vidPairsMemo(s, dir) {
-      import s.implicits._
-      import PerceptualHash._
-      val nDocs = requireSeedLane(s, dir)
-      val sigs = documents(s, dir).select(col("doc_id")).as[Long]
-        .mapPartitions(_.flatMap { docId =>
-          val twin = docId % VidTwinMod == VidTwinOff
-          val seed = if (twin) docId - VidTwinOff else docId
-          (0 until VidFrames).iterator.map { f =>
-            val bytes = BmpCodec.encode(FrameW, FrameH, (x, y) => {
-              var v = vidGrayAt(seed, f, x, y)
-              if (twin && f == VidPerturbF && x == VidPerturbX && y == VidPerturbY)
-                v = (v + 128) % 256
-              (v, v, v)
-            })
-            (docId * VidFrames + f, f, dHash(BmpCodec.decodePixels(bytes)))
-          }
-        }).toDF("doc_id", "f", "sig").localCheckpoint(true)
-      Dedup.hammingBandPairs(sigs, simHashBlocks(nDocs * VidFrames), Seq("f"))
-        .select(expr(s"doc_a div $VidFrames").as("da"),
-          expr(s"doc_b div $VidFrames").as("db"), col("hamming"))
-        .groupBy(col("da").as("doc_a"), col("db").as("doc_b"))
-        .agg(count(lit(1)).as("frames_matched"),
-          sum(col("hamming")).as("total_hamming"))
-        .filter(col("frames_matched") >= VidMinFrames)
-        .localCheckpoint(true)
-    }
+  private[graft] val videoPairs = new Dedup.Memo[DataFrame]("vid_pairs")((s, dir) => {
+    import s.implicits._
+    import PerceptualHash._
+    val nDocs = requireSeedLane(s, dir)
+    val sigs = documents(s, dir).select(col("doc_id")).as[Long]
+      .mapPartitions(_.flatMap { docId =>
+        val twin = docId % VidTwinMod == VidTwinOff
+        val seed = if (twin) docId - VidTwinOff else docId
+        (0 until VidFrames).iterator.map { f =>
+          val bytes = BmpCodec.encode(FrameW, FrameH, (x, y) => {
+            var v = vidGrayAt(seed, f, x, y)
+            if (twin && f == VidPerturbF && x == VidPerturbX && y == VidPerturbY)
+              v = (v + 128) % 256
+            (v, v, v)
+          })
+          (docId * VidFrames + f, f, dHash(BmpCodec.decodePixels(bytes)))
+        }
+      }).toDF("doc_id", "f", "sig").localCheckpoint(true)
+    Dedup.hammingBandPairs(sigs, simHashBlocks(nDocs * VidFrames), Seq("f"))
+      .select(expr(s"doc_a div $VidFrames").as("da"),
+        expr(s"doc_b div $VidFrames").as("db"), col("hamming"))
+      .groupBy(col("da").as("doc_a"), col("db").as("doc_b"))
+      .agg(count(lit(1)).as("frames_matched"),
+        sum(col("hamming")).as("total_hamming"))
+      .filter(col("frames_matched") >= VidMinFrames)
+      .localCheckpoint(true)
+  })
 
   def q200VideoNearDup(s: SparkSession, dir: String): DataFrame =
     videoPairs(s, dir).orderBy(col("doc_a"), col("doc_b"))

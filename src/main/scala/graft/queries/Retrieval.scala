@@ -87,12 +87,9 @@ object Retrieval {
     * privately before. (q168's STORED base index is deliberately not
     * this: its substrate is the durable bucketed parquet table.)
     */
-  private val postingsMemo = new Dedup.Memo[DataFrame]("bm25_postings_full")
-
-  private def postingsCached(s: SparkSession, dir: String): DataFrame =
-    postingsMemo(s, dir)(
-      postings(resplit(documents(s, dir).select(col("doc_id"), col("text"))))
-        .localCheckpoint())
+  private val postingsCached = new Dedup.Memo[DataFrame]("bm25_postings_full")((s, dir) =>
+    postings(resplit(documents(s, dir).select(col("doc_id"), col("text"))))
+      .localCheckpoint())
 
   /** Corpus stats `(n_total, avgdl)` (1 row) from a lengths frame. */
   private def corpusStats(dl: DataFrame): DataFrame =
@@ -222,8 +219,6 @@ object Retrieval {
   /** The corpus increment (q124's convention: a fresh crawl batch). */
   private val isDeltaDoc = col("doc_id") % 10 === 3
 
-  private val bm25BaseMemo = new Dedup.Memo[DataFrame]("bm25_base_index")
-
   /** The STORED base index: base-corpus postings written once per memo
     * build as a bucketed-by-term external parquet table (q102's layout
     * pattern, shared writer [[graft.queries.Layout.materializeBucketed]],
@@ -233,8 +228,8 @@ object Retrieval {
     * DISK, and the bucket metadata makes the vocabulary derivation below
     * exchange-free.
     */
-  private[graft] def storedBasePostings(s: SparkSession, dir: String): DataFrame =
-    bm25BaseMemo(s, dir)(
+  private[graft] val storedBasePostings =
+    new Dedup.Memo[DataFrame]("bm25_base_index")((s, dir) =>
       Layout.materializeBucketed(s, "bm25_postings", "term")(
         postings(resplit(documents(s, dir).select(col("doc_id"), col("text")))
           .filter(!isDeltaDoc))))

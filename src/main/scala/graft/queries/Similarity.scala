@@ -138,10 +138,8 @@ object Similarity {
     * A vector's signature depends only on (v, geometry), so the shared
     * materialization cannot change any consumer's result.
     */
-  private val lshBucketsMemo = new Dedup.Memo[DataFrame]("lsh_buckets")
-
-  private def lshBuckets(s: SparkSession, dir: String): DataFrame =
-    lshBucketsMemo(s, dir)(lshBucketsFresh(s, dir).localCheckpoint(true))
+  private val lshBuckets = new Dedup.Memo[DataFrame]("lsh_buckets")((s, dir) =>
+    lshBucketsFresh(s, dir).localCheckpoint(true))
 
   def q26AnnLsh(s: SparkSession, dir: String): DataFrame =
     annFromBuckets(lshBuckets(s, dir))
@@ -902,19 +900,23 @@ object Similarity {
   private def isDeltaVec(shift: Long): Column =
     col("vec_id") >= shift && (col("vec_id") - shift) % 16 === 0
 
-  private val ndSigIndexMemo  = new Dedup.Memo[DataFrame]("nd_sig_index")
-  private val ndBasePairsMemo = new Dedup.Memo[DataFrame]("nd_base_pairs")
-
-  /** The FROZEN index geometry: rung/bands from the BASE corpus size —
-    * an incremental index's geometry is fixed when the index is built,
-    * before any delta exists (re-deriving it from base+delta would
-    * re-signature the whole base on every increment, which is exactly
-    * what incremental maintenance must not do). The oracle derives the
-    * same integers from the same filtered count ([[q183Sql]]).
+  /** The q183 index input, derived from (session, dir) alone: the
+    * dup-injected corpus (eagerly checkpointed — it feeds the base
+    * filter, the delta filter and the candidate verify's vector lookups),
+    * the delta predicate, and the FROZEN index geometry. Rung/bands come
+    * from the BASE corpus size — an incremental index's geometry is fixed
+    * when the index is built, before any delta exists (re-deriving it
+    * from base+delta would re-signature the whole base on every
+    * increment, which is exactly what incremental maintenance must not
+    * do). The oracle derives the same integers from the same filtered
+    * count ([[q183Sql]]).
     */
-  private def prodBaseGeometry(baseN: Long): (Int, Int) = {
-    val rung = math.max(ndPlanesFor(baseN), NdProdMinPlanes)
-    (rung, prodBandsFor(rung))
+  private def ndIndexInput(s: SparkSession, dir: String): (DataFrame, Column, Int, Int) = {
+    val (shift, _) = prodStats(s, dir)
+    val corpus = prodCorpus(s, dir, shift).localCheckpoint(true)
+    val isDelta = isDeltaVec(shift)
+    val rung = math.max(ndPlanesFor(corpus.filter(!isDelta).count()), NdProdMinPlanes)
+    (corpus, isDelta, rung, prodBandsFor(rung))
   }
 
   /** The STORED signature index: base-corpus band signatures written
@@ -926,11 +928,11 @@ object Similarity {
     * LSH. Bucketing by band_sig co-locates each delta probe with the
     * base rows it can collide with.
     */
-  private[graft] def storedBandSigs(s: SparkSession, dir: String,
-      base: DataFrame, rung: Int, bands: Int): DataFrame =
-    ndSigIndexMemo(s, dir)(
-      Layout.materializeBucketed(s, "nd_sigs", "band_sig")(
-        bandSigs(base, rung, bands)))
+  private val storedBandSigs = new Dedup.Memo[DataFrame]("nd_sig_index")((s, dir) => {
+    val (corpus, isDelta, rung, bands) = ndIndexInput(s, dir)
+    Layout.materializeBucketed(s, "nd_sigs", "band_sig")(
+      bandSigs(corpus.filter(!isDelta), rung, bands))
+  })
 
   /** The STORED base-base verified pair list — the second half of the
     * durable index state: built once FROM the stored signature table
@@ -938,19 +940,18 @@ object Similarity {
     * keep_id; every later increment unions against it without touching
     * base-base work again.
     */
-  private[graft] def storedBasePairs(s: SparkSession, dir: String,
-      base: DataFrame, rung: Int, bands: Int): DataFrame =
-    ndBasePairsMemo(s, dir) {
-      val sigB = storedBandSigs(s, dir, base, rung, bands)
-      val cand = resplit(sigB.as("a").join(sigB.as("b"),
-          col("a.band") === col("b.band") && col("a.band_sig") === col("b.band_sig")
-            && col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("keep_id"), col("b.vec_id").as("drop_id"))
-        .distinct()
-        .localCheckpoint(true))
-      Layout.materializeBucketed(s, "nd_base_pairs", "keep_id")(
-        verifyCandidates(cand, base, ProdNearDupThreshold))
-    }
+  private val storedBasePairs = new Dedup.Memo[DataFrame]("nd_base_pairs")((s, dir) => {
+    val sigB = storedBandSigs(s, dir)
+    val (corpus, isDelta, _, _) = ndIndexInput(s, dir)
+    val cand = resplit(sigB.as("a").join(sigB.as("b"),
+        col("a.band") === col("b.band") && col("a.band_sig") === col("b.band_sig")
+          && col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("keep_id"), col("b.vec_id").as("drop_id"))
+      .distinct()
+      .localCheckpoint(true))
+    Layout.materializeBucketed(s, "nd_base_pairs", "keep_id")(
+      verifyCandidates(cand, corpus.filter(!isDelta), ProdNearDupThreshold))
+  })
 
   /** q183: INCREMENTAL maintenance of the banded near-dup index — fold a
     * corpus increment into the stored signature index without
@@ -977,17 +978,12 @@ object Similarity {
     * batch and an append.
     */
   def q183NearDupIncrement(s: SparkSession, dir: String): DataFrame = {
-    val (shift, _) = prodStats(s, dir)
-    // one materialization feeds the base filter, delta filter and the
-    // candidate verify's vector lookups
-    val corpus = prodCorpus(s, dir, shift).localCheckpoint(true)
-    val base = corpus.filter(!isDeltaVec(shift))
-    val (rung, bands) = prodBaseGeometry(base.count())
-    val sigB = storedBandSigs(s, dir, base, rung, bands)
-    val basePairs = storedBasePairs(s, dir, base, rung, bands)
+    val (corpus, isDelta, rung, bands) = ndIndexInput(s, dir)
+    val sigB = storedBandSigs(s, dir)
+    val basePairs = storedBasePairs(s, dir)
     // the increment, signatured fresh exactly once (two consumers:
     // the index probe and the delta-delta self-join)
-    val sigD = bandSigs(corpus.filter(isDeltaVec(shift)), rung, bands).localCheckpoint(true)
+    val sigD = bandSigs(corpus.filter(isDelta), rung, bands).localCheckpoint(true)
     val candBD = sigD.as("d").join(sigB.as("b"),
         col("d.band") === col("b.band") && col("d.band_sig") === col("b.band_sig"))
       .select(least(col("d.vec_id"), col("b.vec_id")).as("keep_id"),
@@ -1377,10 +1373,8 @@ object Similarity {
   /** Memoized per (session, dir) (r19-opt): q101 and q155 both need the
     * trained index, and each previously re-ran the entire Lloyd loop —
     * the slowest stage of the sf1 sweep, paid twice per session. */
-  private val trainedAssignMemo = new Dedup.Memo[DataFrame]("ivf_trained_assign")
-
-  private[graft] def trainedAssignment(s: SparkSession, dir: String): DataFrame =
-    trainedAssignMemo(s, dir)(computeTrainedAssignment(s, dir))
+  private[graft] val trainedAssignment =
+    new Dedup.Memo[DataFrame]("ivf_trained_assign")(computeTrainedAssignment)
 
   private def computeTrainedAssignment(s: SparkSession, dir: String): DataFrame = {
     // one materialization of the widened vectors: every round scans them
@@ -1886,9 +1880,10 @@ object Similarity {
   }
 
   /** The q39/q101 seeded-centroid cell assignment as a reusable frame
-    * (vec_id, v, norm, cell) — shared by q117 and the SemDeDup spec. */
-  private[graft] def seededAssignment(s: SparkSession, dir: String): DataFrame =
-    seededAssignMemo(s, dir) {
+    * (vec_id, v, norm, cell) — shared by q117 and the SemDeDup spec,
+    * memoized per (session, dir). */
+  private[graft] val seededAssignment =
+    new Dedup.Memo[DataFrame]("ivf_seeded_assign")((s, dir) => {
       val e = vecs(s, dir)
       val cents = e.orderBy(col("vec_id")).limit(IvfCells)
         .select(col("vec_id").as("c_id"), col("v").as("cv"), col("norm").as("cnorm"))
@@ -1896,10 +1891,7 @@ object Similarity {
       // self-join, q130, q163's IVFADC scan, q155's audit, the SemDeDup
       // spec) and each previously re-ran the corpus × centroid pass
       assignToCells(e, cents).localCheckpoint(true)
-    }
-
-  /** Memoized per (session, dir) — see [[seededAssignment]]. */
-  private val seededAssignMemo = new Dedup.Memo[DataFrame]("ivf_seeded_assign")
+    })
 
   /** q117: SemDeDup — semantic dedup with CLUSTER-bucketed candidates:
     * assign every vector to its IVF cell (the q39 seeded assignment),

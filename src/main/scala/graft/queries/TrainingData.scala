@@ -576,14 +576,11 @@ object TrainingData {
     * read each half, and the frame is gram-surface-sized (bounded by
     * corpus tokens), the same thing the join itself must shuffle.
     */
-  private val docGramsMemo = new Dedup.Memo[DataFrame]("decontam_doc_grams")
-  private[graft] def docGrams(s: SparkSession, dir: String): DataFrame =
-    docGramsMemo(s, dir) {
-      resplit(documents(s, dir).select(col("doc_id"), col("text")))
-        .select(col("doc_id"), explode(shingles(words(col("text")), DecontamN)).as("g"))
-        .distinct()
-        .localCheckpoint(true)
-    }
+  private[graft] val docGrams = new Dedup.Memo[DataFrame]("decontam_doc_grams")((s, dir) =>
+    resplit(documents(s, dir).select(col("doc_id"), col("text")))
+      .select(col("doc_id"), explode(shingles(words(col("text")), DecontamN)).as("g"))
+      .distinct()
+      .localCheckpoint(true))
 
   /** q60: benchmark decontamination — flag training documents sharing any
     * word [[DecontamN]]-gram with the held-out eval set (stand-in: every
@@ -1161,8 +1158,6 @@ object TrainingData {
 
   // ---------------------------------------------------------------- q192
 
-  private val shardManifestMemo = new Dedup.Memo[DataFrame]("shard_manifest")
-
   /** The id threshold splitting the already-planned base from the append
     * batch: the top tenth of the id RANGE (integer arithmetic on
     * min/max, identical in both engines). Appends arrive at the top of
@@ -1179,10 +1174,11 @@ object TrainingData {
     * read back through the catalog — the durable artifact a production
     * shard planner keeps between ingest batches.
     */
-  private[graft] def storedShardManifest(s: SparkSession, dir: String, thr: Long): DataFrame =
-    shardManifestMemo(s, dir)(
+  private[graft] val storedShardManifest =
+    new Dedup.Memo[DataFrame]("shard_manifest")((s, dir) =>
       Layout.materializeBucketed(s, "shard_manifest", "shard_id")(
-        shardManifest(prefixTokens(s, docTokens(s, dir).filter(col("doc_id") < thr)), 0L)))
+        shardManifest(prefixTokens(s,
+          docTokens(s, dir).filter(col("doc_id") < shardSplitAt(s, dir))), 0L)))
 
   /** q192: INCREMENTAL shard-plan maintenance — extend the stored
     * manifest (q189's artifact) with an append batch without re-scanning
@@ -1203,7 +1199,7 @@ object TrainingData {
     */
   def q192ShardIncrement(s: SparkSession, dir: String): DataFrame = {
     val thr = shardSplitAt(s, dir)
-    val base = storedShardManifest(s, dir, thr)
+    val base = storedShardManifest(s, dir)
     val baseTotal = base.agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
     val delta = shardManifest(
       prefixTokens(s, docTokens(s, dir).filter(col("doc_id") >= thr)), baseTotal)

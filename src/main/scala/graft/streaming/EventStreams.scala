@@ -23,13 +23,11 @@ object EventStreams {
   private def exactSum(c: Column): Column =
     sum(c.cast(DecimalType(18, 6))).cast("double")
 
-  /** Tumbling event-time windows per event type. */
+  /** Tumbling event-time windows per event type: the sliding aggregate
+    * with slide = width, which Spark plans without the window-expanding
+    * generator (the same optimized plan as `window(ts, width)`). */
   def tumbling(events: DataFrame, width: String): DataFrame =
-    events
-      .groupBy(window(col("ts"), width), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), exactSum(col("value")).as("sum_value"))
-      .select(col("window.start").as("w_start"), col("event_type"),
-        col("n_events"), col("sum_value"))
+    sliding(events, width, width)
 
   /** Sliding (hopping) event-time windows: every event lands in
     * width/slide overlapping windows; Spark expands them with a generator

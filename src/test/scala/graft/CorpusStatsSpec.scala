@@ -449,6 +449,37 @@ class CorpusStatsSpec extends SparkTestBase {
     enc.unpersist()
   }
 
+  test("q107 and q111 started together trigger one BPE fold build") {
+    // the two consumers of the one bpe_fold memo, released at once
+    // through a latch after a clear: both block on a single build and
+    // both answer exactly as they do run one after the other
+    import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+    import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+    val sequential = Seq(CorpusStats.q107BpeMerges(spark, sf).collect().toSeq,
+      CorpusStats.q111BpeEncode(spark, sf).collect().toSeq)
+    Dedup.clearMemos()
+    val n0 = Dedup.memoBuildCount
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val futures = Seq[(SparkSession, String) => DataFrame](
+          CorpusStats.q107BpeMerges, CorpusStats.q111BpeEncode)
+        .map { q =>
+          pool.submit(new Callable[Seq[Row]] {
+            def call(): Seq[Row] = {
+              start.await(30, TimeUnit.SECONDS)
+              q(spark, sf).collect().toSeq
+            }
+          })
+        }
+      start.countDown()
+      val concurrent = futures.map(_.get(300, TimeUnit.SECONDS))
+      val folds = Dedup.memoBuildsSince(n0).map(_._1).count(_ == "bpe_fold")
+      assert(folds === 1, s"$folds BPE fold builds for two concurrent consumers")
+      assert(concurrent === sequential, "concurrent answers differ from sequential runs")
+    } finally pool.shutdown()
+  }
+
   test("q107: an exhausted corpus stops emitting rules instead of being emptied") {
     // Round 1 merges the only pair; rounds 2-3 find zero adjacent pairs.
     // The LEFT-join rule application must pass the corpus through
@@ -494,7 +525,7 @@ class CorpusStatsSpec extends SparkTestBase {
         r.getAs[Long]("delta_count")))
     // independent ground truth: one driver-side pass over the encoded
     // corpus, counting adjacent pairs with base/delta provenance
-    val enc = CorpusStats.bpeCorpus(spark, sf)
+    val enc = CorpusStats.bpeFold(spark, sf)._2
       .select(col("doc_id"), col("txt")).collect()
     val counts = scala.collection.mutable.Map.empty[(String, String), (Long, Long)]
       .withDefaultValue((0L, 0L))

@@ -117,22 +117,22 @@ class DedupSpec extends SparkTestBase {
     // blocks). All threads are released simultaneously through a latch to
     // maximize the race window on the first access.
     import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
-    val memo = new Dedup.Memo[org.apache.spark.sql.DataFrame]("race_test")
+    import spark.implicits._
     val computes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val memo = new Dedup.Memo[org.apache.spark.sql.DataFrame]("race_test")((_, _) => {
+      computes.incrementAndGet()
+      Thread.sleep(100) // widen the window a racing compute would hit
+      Seq(1L).toDF("x")
+    })
     val start = new CountDownLatch(1)
     val threads = 8
     val pool = Executors.newFixedThreadPool(threads)
     try {
-      import spark.implicits._
       val futures = (1 to threads).map { _ =>
         pool.submit(new Callable[org.apache.spark.sql.DataFrame] {
           def call(): org.apache.spark.sql.DataFrame = {
             start.await(30, TimeUnit.SECONDS)
-            memo(spark, "race-dir") {
-              computes.incrementAndGet()
-              Thread.sleep(100) // widen the window a racing compute would hit
-              Seq(1L).toDF("x")
-            }
+            memo(spark, "race-dir")
           }
         })
       }

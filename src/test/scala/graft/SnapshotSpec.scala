@@ -2,16 +2,17 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.queries.{Dedup, Layout, Retrieval}
+import graft.queries.{CorpusStats, Dedup, Layout, Retrieval, TrainingData}
 
-/** The snapshot contract for the layout-backed surfaces: the memo is
-  * their only reuse, so [[Dedup.clearMemos]] alone makes the next call
-  * see the current corpus — including the bucketed and date-partitioned
-  * layouts and the durable indexes written as catalog tables — and a
-  * rebuild never disturbs a frame some session resolved earlier.
+/** The snapshot contract for the shared surfaces: the memo is their
+  * only reuse, so [[Dedup.clearMemos]] alone makes the next call see the
+  * current corpus — including the bucketed and date-partitioned layouts,
+  * the durable indexes written as catalog tables and the memos whose
+  * computes derive their own inputs from (session, dir) — and a rebuild
+  * never disturbs a frame some session resolved earlier.
   */
 class SnapshotSpec extends SparkTestBase {
 
@@ -30,11 +31,16 @@ class SnapshotSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(s"$dir/$t.parquet")
   }
 
-  /** q102 (bucketed join), q103 (partition pruning) and q168 (the
-    * durable bucketed BM25 index), collected. */
+  /** q102 (bucketed join), q103 (partition pruning), q168 (the durable
+    * bucketed BM25 index), q111 (the BPE fold memo) and q192 (the stored
+    * shard manifest, split at an id threshold its compute derives from
+    * the corpus). */
+  private val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q102" -> Layout.q102BucketedJoin, "q103" -> Layout.q103PartitionPruned,
+    "q168" -> Retrieval.q168Bm25Increment, "q111" -> CorpusStats.q111BpeEncode,
+    "q192" -> TrainingData.q192ShardIncrement)
   private def answers(s: SparkSession, dir: String): Seq[Seq[Row]] =
-    Seq(Layout.q102BucketedJoin(s, dir), Layout.q103PartitionPruned(s, dir),
-      Retrieval.q168Bm25Increment(s, dir)).map(_.collect().toSeq)
+    queries.map { case (_, q) => q(s, dir).collect().toSeq }
 
   test("clearMemos alone re-snapshots layout-backed surfaces; earlier frames still read") {
     val dir = Files.createTempDirectory("graft_snapshot").toString
@@ -59,7 +65,7 @@ class SnapshotSpec extends SparkTestBase {
     writeRewritten(fresh)
     val expected = answers(spark.newSession(), fresh)
 
-    Seq("q102", "q103", "q168").zipWithIndex.foreach { case (q, i) =>
+    queries.map(_._1).zipWithIndex.foreach { case (q, i) =>
       assert(expected(i) !== before(i),
         s"$q: the rewrite did not change the answer — test proves nothing")
       assert(after(i) === expected(i), s"$q: answered from the old corpus after clearMemos")

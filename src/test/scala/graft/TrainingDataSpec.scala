@@ -272,7 +272,7 @@ class TrainingDataSpec extends SparkTestBase {
     val thr = TrainingData.shardSplitAt(spark, sf)
     val deltaDocs = batch.count(r => r(3).asInstanceOf[Long] >= thr) // shards fully in delta
     assert(batch.exists(r => r(4).asInstanceOf[Long] >= thr), "no delta docs reached the plan")
-    val baseManifest = TrainingData.storedShardManifest(spark, sf, thr).collect()
+    val baseManifest = TrainingData.storedShardManifest(spark, sf).collect()
     val baseTotal = baseManifest.map(_.getAs[Long]("n_tokens")).sum
     if (baseTotal % TrainingData.ShardTokenBudget != 0) {
       val straddle = baseTotal / TrainingData.ShardTokenBudget

@@ -8,25 +8,26 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 quick=${1:-}
+testdata="$HOME/testdata"
 
 # The same sbt invocation as the ROADMAP tier-1 command: offline
 # resolvers, then Test/compile and `testOnly *` with the test JVM sized
-# to this host.
+# to this host. One CPU count for every phase (tests, verify, bench):
+# this host's, unless the caller already set one.
 export COURSIER_MODE=offline SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 
 echo "== compile + test =="
 sbt --batch -Dsbt.log.noformat=true Test/compile
-SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" \
-  SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)" \
+SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)" \
   SPARK_LOCAL_DIRS=/tmp/spark-local \
   sbt --batch -Dsbt.log.noformat=true "testOnly *"
 
 verify_at() {
   local sf="$1" out="/tmp/graft_gate_$1"
   echo "== verify sf$sf =="
-  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} \
-    sbt -batch "runMain graft.Verify /root/testdata/sf$sf $out"
-  python3 tools/check.py "$out" "/root/testdata/sf$sf"
+  sbt -batch "runMain graft.Verify $testdata/sf$sf $out"
+  python3 tools/check.py "$out" "$testdata/sf$sf"
 }
 
 verify_at 0.01
@@ -34,7 +35,6 @@ if [[ "$quick" != "--quick" ]]; then
   verify_at 0.001
   verify_at 0.1
   echo "== bench sf0.1 =="
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-    sbt -batch "runMain graft.Bench" | grep '"metric"'
+  SPARK_GRAFT_SF_DIR="$testdata/sf0.1" sbt -batch "runMain graft.Bench" | grep '"metric"'
 fi
 echo "== gate green =="
