@@ -2,21 +2,9 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // fail on ANY unknown name: a typo in a multi-name filter must not
-    // silently bench a subset that masquerades as a fast/passing run
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown query names in SPARK_GRAFT_ONLY: ${unknown.toSeq.sorted.mkString(",")}")
-    }
+    val queries = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY").toSeq.flatMap(_.split(",")))
     val spark = Sessions.local("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
-    // deterministic (alphabetical) execution order: per-query times are
-    // comparable across rounds instead of shifting with Map hash order
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    require(queries.nonEmpty, s"no queries match filter $only")
     // JVM/codegen/shuffle-machinery warmup so the first measured query
     // doesn't absorb one-time session init.
     spark.range(1000000).selectExpr("sum(id) s").write.mode("overwrite").format("noop").save()
@@ -42,7 +30,7 @@ object Bench {
     var failed = List.empty[String]
     var memoBuilds = List.empty[(String, Seq[(String, Double)])]
     var loadPerQuery = List.empty[(String, Double)]
-    val results = queries.map { case (name, fn) =>
+    val results = queries.map { case SparkEntry.Query(name, fn, _) =>
       val m0 = graft.queries.Dedup.memoBuildCount
       val t0 = System.nanoTime()
       // noop sink: full materialization of every output column (count()

@@ -6,12 +6,12 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val queries = SparkEntry.select(args.drop(1))
     val spark = Sessions.local("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
-      println(s"\n================ $n ================")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+    queries.foreach { q =>
+      println(s"\n================ ${q.name} ================")
+      q.plan(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

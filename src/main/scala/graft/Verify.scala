@@ -7,17 +7,15 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing names restrict the dump (dev iteration only — the
     // driver always passes exactly two args and dumps the full suite)
-    val only = args.drop(2).toSet
+    val queries = SparkEntry.select(args.drop(2))
     val spark = Sessions.local("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    queries.foreach { q =>
+      try q.plan(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -100,22 +100,34 @@ object Clustering {
   private[graft] val dbscanRoles = new Dedup.Memo[DataFrame]("dbscan_roles")(computeDbscan)
 
   private def computeDbscan(s: SparkSession, dir: String): DataFrame = {
-    val minDeg = DbscanMinPts - 1
     // consumed by the degree aggregate and the core-flag annotation
     val pairs = dbscanPairs(s, dir).select(col("keep_id"), col("drop_id"))
       .localCheckpoint(true)
+    val (dg, ann, labels) = labelCores(pairs,
+      embeddings(s, dir).select(col("vec_id").as("id")))
+    // materialized once for its consumers (q173's dump, q179's report)
+    assembleRoles(ann, dg, labels).localCheckpoint(true)
+  }
+
+  /** DBSCAN core labelling over an undirected (keep_id, drop_id) ε-pair
+    * list: the one path behind q173's batch roles and q178's stored base
+    * labels. `ids` is every vector's `id`, isolated ones included.
+    * Returns the (id, degree) frame, the core-flag-annotated pairs
+    * ([[annotatePairs]]) and (doc, comp) for every core.
+    */
+  private def labelCores(pairs: DataFrame,
+      ids: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     // ONE degree aggregate straight off the undirected pair list (r20-opt:
     // the r19 shape materialized a doubled `edges` frame — 2E rows through
     // a checkpoint — whose only aggregate consumer was this groupBy)
     val deg = pairs
       .select(explode(array(col("keep_id"), col("drop_id"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("degree"))
-    val dg = embeddings(s, dir).select(col("vec_id").as("id"))
-      .join(deg, Seq("id"), "left")
+    val dg = ids.join(deg, Seq("id"), "left")
       .select(col("id"), coalesce(col("degree"), lit(0L)).as("degree"))
       .localCheckpoint(true)
     // narrow filter of the materialized dg — no separate checkpoint needed
-    val core = dg.filter(col("degree") >= minDeg).select(col("id"))
+    val core = dg.filter(col("degree") >= DbscanMinPts - 1).select(col("id"))
     // core flags attached to every pair ONCE (r20-opt): the core-core
     // subgraph and the border attachment both derive as filters of this
     // one annotated frame, replacing the r19 shape's two semi-joins (core
@@ -131,8 +143,7 @@ object Clustering {
         .join(propagated.select(col("doc").as("id")), Seq("id"), "left_anti")
         .select(col("id").as("doc"), col("id").as("comp")))
       .localCheckpoint(true)
-    // materialized once for its consumers (q173's dump, q179's report)
-    assembleRoles(ann, dg, labels).localCheckpoint(true)
+    (dg, ann, labels)
   }
 
   /** The undirected pair list with both endpoints' core flags attached —
@@ -602,20 +613,8 @@ object Clustering {
   private[graft] val storedDbscanLabels =
     new Dedup.Memo[DataFrame]("dbscan_base_labels")((s, dir) =>
       Layout.materializeBucketed(s, "dbscan_labels", "doc") {
-        val bp = storedDbscanPairs(s, dir)
-        val bd = bp.select(col("keep_id").as("id"))
-          .union(bp.select(col("drop_id").as("id")))
-          .groupBy(col("id")).agg(count(lit(1)).as("degree"))
-        val bCore = bd.filter(col("degree") >= DbscanMinPts - 1).select(col("id"))
-          .localCheckpoint(true)
-        val cp = bp
-          .join(bCore.withColumnRenamed("id", "keep_id"), Seq("keep_id"), "left_semi")
-          .join(bCore.withColumnRenamed("id", "drop_id"), Seq("drop_id"), "left_semi")
-          .select(col("keep_id").as("doc_a"), col("drop_id").as("doc_b"))
-        val prop = Dedup.minLabelPropagation(cp)
-        prop.union(bCore
-          .join(prop.select(col("doc").as("id")), Seq("id"), "left_anti")
-          .select(col("id").as("doc"), col("id").as("comp")))
+        labelCores(storedDbscanPairs(s, dir), embeddings(s, dir)
+          .filter(!isDeltaVec).select(col("vec_id").as("id")))._3
       })
 
   /** q178: INCREMENTAL density-clustering maintenance — fold a vector

@@ -14,17 +14,27 @@ class RelationalSpec extends SparkTestBase {
   }
 
   test("every query has an oracle — no rows-only entries remain") {
-    // r13 retired the last three rows-only entries (q35/q55/q114) via
-    // bound-contract oracles: the engine emits its own sketch-vs-exact
-    // verdict, the oracle emits TRUE from exact values, and the hash
-    // match proves the bound held. Every registered query is now
-    // hash-checkable.
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(noOracle.isEmpty, s"queries missing oracle SQL: $noOracle")
-    // and the reverse: an oracle whose key matches no registered query
-    // (a typo or a renamed query) would never be compared
-    val noQuery = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(noQuery.isEmpty, s"oracle SQL without a registered query: $noQuery")
+    // queries and oracleSql are both derived from the registry rows, so
+    // their key sets agree by construction; what can still go wrong is a
+    // duplicate name (toMap keeps one row and drops the other), a lost
+    // row, or an empty oracle string
+    val names = SparkEntry.registry.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"registry names declared more than once: $dups")
+    assert(names.size === 211)
+    val empty = SparkEntry.registry.filter(_.oracleSql.trim.isEmpty).map(_.name)
+    assert(empty.isEmpty, s"registry rows with an empty oracle: $empty")
+  }
+
+  test("select rejects an unknown name, naming it, and orders the rest alphabetically") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("q22_ngram_jaccard", "q22_ngram_jacard", "q01_nope")))
+    assert(e.getMessage.contains("q22_ngram_jacard") && e.getMessage.contains("q01_nope"),
+      e.getMessage)
+    assert(!e.getMessage.contains("q22_ngram_jaccard"), e.getMessage)
+    assert(SparkEntry.select(Seq("q22_ngram_jaccard", "q01_pricing_summary")).map(_.name)
+      === Seq("q01_pricing_summary", "q22_ngram_jaccard"))
+    assert(SparkEntry.select(Nil).map(_.name) === SparkEntry.registry.map(_.name).sorted)
   }
 
   test("q01 aggregates lineitem exactly") {

@@ -131,18 +131,10 @@ def main():
         n = sum(1 for v in oracle.values() if v.startswith(CTE_PREFIX + block))
         print(f"built CTE cache {build_db} (serves {n} oracles)")
         return
-    # a name may legitimately have no oracle (rows-only queries like
-    # q35_approx_distinct) — its Verify output dir still exists; only
-    # names with neither an oracle nor an output are typos
-    dumped = {n for n in os.listdir(out) if os.path.isdir(os.path.join(out, n))}
-    unknown = only - set(oracle) - dumped
+    unknown = only - set(oracle)
     if unknown:
         sys.exit(f"ERROR: unknown query name(s) {sorted(unknown)}; "
-                 f"known: {sorted(set(oracle) | dumped)}")
-    n_skip = 0
-    for name in sorted(only - set(oracle)):
-        print(f"SKIP {name}: registered but has no oracle (rows-only check)")
-        n_skip += 1
+                 f"known: {sorted(oracle)}")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf}/{t}.parquet"
@@ -197,7 +189,7 @@ def main():
         else:
             n_fail += 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
-    if n_pass + n_fail + n_skip == 0:
+    if n_pass + n_fail == 0:
         sys.exit("ERROR: zero queries compared — nothing was checked")
     sys.exit(1 if n_fail else 0)
 

@@ -18,12 +18,14 @@ report=${1:-CORRECTNESS_SF1.json}
 corpus=${2:-realistic}
 sfdir="$PWD/testdata_sf1"
 dump=/tmp/graft_sf1_out
-cpus=${SPARK_GRAFT_CPUS:-32}
+# this host's CPU count unless the caller already set one (as tools/gate.sh)
+cpus=${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}
+testdata="$HOME/testdata"
 tag=$(date -u +%m%dT%H%M)
 
 echo "== gendata 10x ($corpus) =="
 SPARK_GRAFT_CPUS=$cpus sbt -batch \
-  "runMain graft.GenData /root/testdata/sf0.1 $sfdir 10 $corpus"
+  "runMain graft.GenData $testdata/sf0.1 $sfdir 10 $corpus"
 
 echo "== verify dump at sf1 =="
 SPARK_GRAFT_CPUS=$cpus sbt -batch "runMain graft.Verify $sfdir $dump"
@@ -32,7 +34,7 @@ echo "== paired bench: sf0.1 then sf1 (same boot) =="
 # Bench persists its metric line to SPARK_GRAFT_BENCH_OUT itself — no
 # grep|head pipeline, which under pipefail could fail the whole gate on
 # head's early-exit SIGPIPE (Bench prints TWO metric-shaped lines).
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=$cpus \
+SPARK_GRAFT_SF_DIR="$testdata/sf0.1" SPARK_GRAFT_CPUS=$cpus \
   SPARK_GRAFT_BENCH_OUT="bench_records/sf1pair_${tag}_sf01.json" \
   sbt -batch "runMain graft.Bench"
 SPARK_GRAFT_SF_DIR=$sfdir SPARK_GRAFT_CPUS=$cpus \

@@ -18,7 +18,7 @@ Usage: python3 tools/sweep.py <verify_out_dir> <sf_dir> <report.json>
   the recursive closure spills ~78 GB per execution, and 13 oracles embed
   it, so without the cache those compares hit the disk wall.
 
-Report: {query: {"status": "pass"|"fail"|"oracle_timeout"|"no_oracle",
+Report: {query: {"status": "pass"|"fail"|"oracle_error"|"oracle_timeout",
                  "secs": float, "spark_rows": int|null}}
 A timeout is NOT a pass — it records that the ORACLE (not the engine)
 exceeded the budget; the Spark result exists and its row count is kept.
@@ -46,12 +46,12 @@ def main():
         workers = int(sys.argv[sys.argv.index("--workers") + 1])
     if "--retry-timeouts" in sys.argv:
         retry_secs = int(sys.argv[sys.argv.index("--retry-timeouts") + 1])
-    oracle = json.load(open(os.path.join(out, "oracle_sql.json")))
-    dumped = sorted(n for n in os.listdir(out)
-                    if os.path.isdir(os.path.join(out, n)))
+    # every registered query has an oracle, so its keys are the suite: a
+    # query whose dump is missing is compared (and fails), not dropped
+    names = sorted(json.load(open(os.path.join(out, "oracle_sql.json"))))
     if "--only" in sys.argv:
         only = set(sys.argv[sys.argv.index("--only") + 1].split(","))
-        dumped = [n for n in dumped if n in only]
+        names = [n for n in names if n in only]
 
     check_py = os.path.join(os.path.dirname(__file__), "check.py")
     cte_args = []
@@ -83,9 +83,6 @@ def main():
 
     def one(name, budget=None):
         t0 = time.time()
-        if name not in oracle:
-            return name, {"status": "no_oracle", "secs": 0.0,
-                          "spark_rows": spark_rows(name)}
         try:
             p = subprocess.run(
                 [sys.executable, check_py, out, sf, name] + cte_args,
@@ -120,7 +117,7 @@ def main():
                       "spark_rows": spark_rows(name)}
 
     with ThreadPoolExecutor(max_workers=workers) as ex:
-        results = dict(ex.map(one, dumped))
+        results = dict(ex.map(one, names))
     if retry_secs:
         # the declared O(n^2)-oracle yardsticks need big SEQUENTIAL
         # budgets; rerun just the timeouts, one at a time
