@@ -82,9 +82,9 @@ object Tables {
     // (shuffles emit spark.sql.shuffle.partitions splits), so re-splitting
     // adds nothing: exchange-bearing input passes through untouched and the
     // probe only ever runs where it is free (pinned by ScaleSpec's
-    // zero-jobs test). Callers that need the verify stage fanned out
-    // checkpoint first (q22/q23/q67), which truncates to a scan-shaped
-    // plan and re-enables the probe.
+    // zero-jobs test). Callers that need the verify stage fanned out go
+    // through [[fanOut]], which checkpoints first: that truncates to a
+    // scan-shaped plan and re-enables the probe.
     // String match on the PREPARED plan: exchanges are inserted by the
     // preparation rules (EnsureRequirements), so `sparkPlan` doesn't have
     // them yet, and under AQE the executedPlan root is an opaque
@@ -99,8 +99,8 @@ object Tables {
     // even though it doesn't repartition the stream side: the probe on a
     // broadcast-bearing plan would eagerly build the broadcast (not
     // free, violating the zero-jobs guarantee pinned by ScaleSpec) — a
-    // caller that wants a broadcast-join output fanned out checkpoints
-    // first, exactly like the shuffle-join consumers (q22/q23/q67).
+    // caller that wants a broadcast-join output fanned out goes through
+    // [[fanOut]], exactly like the shuffle-join consumers.
     val exchangeNode = "(?m)(^|[+:]- )(BroadcastExchange|Exchange) \\S".r
     val hasExchange =
       exchangeNode.findFirstIn(df.queryExecution.executedPlan.toString).isDefined
@@ -110,4 +110,14 @@ object Tables {
       if (df.rdd.getNumPartitions < p) df.repartition(p) else df
     }
   }
+
+  /** Materialize a candidate id-pair frame, then re-split it for the
+    * CPU-bound verify of every filter–verify join (set intersection or a
+    * vector dot per pair): AQE's size-based coalescing packs a
+    * tiny-by-bytes id-pair list onto a few cores, and checkpointing first
+    * lets [[resplit]]'s partition probe read a materialized RDD instead
+    * of re-running the candidate join (which, exchange-bearing, it would
+    * pass through untouched).
+    */
+  def fanOut(cand: DataFrame): DataFrame = resplit(cand.localCheckpoint(true))
 }

@@ -103,19 +103,22 @@ object Clustering {
     // consumed by the degree aggregate and the core-flag annotation
     val pairs = dbscanPairs(s, dir).select(col("keep_id"), col("drop_id"))
       .localCheckpoint(true)
-    val (dg, ann, labels) = labelCores(pairs,
+    val (dg, core, ann0) = coreGraph(pairs,
       embeddings(s, dir).select(col("vec_id").as("id")))
+    // each read twice (labelling + border attachment; two role joins)
+    val ann = ann0.localCheckpoint(true)
+    val labels = coreLabels(core, ann).localCheckpoint(true)
     // materialized once for its consumers (q173's dump, q179's report)
     assembleRoles(ann, dg, labels).localCheckpoint(true)
   }
 
   /** DBSCAN core labelling over an undirected (keep_id, drop_id) ε-pair
-    * list: the one path behind q173's batch roles and q178's stored base
-    * labels. `ids` is every vector's `id`, isolated ones included.
-    * Returns the (id, degree) frame, the core-flag-annotated pairs
-    * ([[annotatePairs]]) and (doc, comp) for every core.
+    * list, step 1 of 2 ([[coreLabels]]): the one path behind q173's batch
+    * roles and q178's stored base labels. `ids` is every vector's `id`,
+    * isolated ones included. Returns the (id, degree) frame, the core ids
+    * and the un-materialized core-flag-annotated pairs ([[annotatePairs]]).
     */
-  private def labelCores(pairs: DataFrame,
+  private def coreGraph(pairs: DataFrame,
       ids: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     // ONE degree aggregate straight off the undirected pair list (r20-opt:
     // the r19 shape materialized a doubled `edges` frame — 2E rows through
@@ -132,18 +135,20 @@ object Clustering {
     // subgraph and the border attachment both derive as filters of this
     // one annotated frame, replacing the r19 shape's two semi-joins (core
     // pairs) plus semi+anti joins over the doubled edge list (borders).
-    val ann = annotatePairs(pairs, core).localCheckpoint(true)
+    (dg, core, annotatePairs(pairs, core))
+  }
+
+  /** Step 2: (doc, comp) for every core, un-materialized. */
+  private def coreLabels(core: DataFrame, ann: DataFrame): DataFrame = {
     // component collapse over the core-core subgraph only
     val corePairs = ann.filter(col("a_core") && col("b_core"))
       .select(col("keep_id").as("doc_a"), col("drop_id").as("doc_b"))
     val propagated = Dedup.minLabelPropagation(corePairs)
     // isolated cores (dense but no core neighbor) form singleton clusters
-    val labels = propagated
+    propagated
       .union(core
         .join(propagated.select(col("doc").as("id")), Seq("id"), "left_anti")
         .select(col("id").as("doc"), col("id").as("comp")))
-      .localCheckpoint(true)
-    (dg, ann, labels)
   }
 
   /** The undirected pair list with both endpoints' core flags attached —
@@ -613,8 +618,11 @@ object Clustering {
   private[graft] val storedDbscanLabels =
     new Dedup.Memo[DataFrame]("dbscan_base_labels")((s, dir) =>
       Layout.materializeBucketed(s, "dbscan_labels", "doc") {
-        labelCores(storedDbscanPairs(s, dir), embeddings(s, dir)
-          .filter(!isDeltaVec).select(col("vec_id").as("id")))._3
+        // no checkpoints: the annotated pairs feed only the labelling,
+        // and the bucketed write materializes the labels
+        val (_, core, ann) = coreGraph(storedDbscanPairs(s, dir), embeddings(s, dir)
+          .filter(!isDeltaVec).select(col("vec_id").as("id")))
+        coreLabels(core, ann)
       })
 
   /** q178: INCREMENTAL density-clustering maintenance — fold a vector

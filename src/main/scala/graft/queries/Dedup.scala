@@ -114,51 +114,62 @@ object Dedup {
   }
 
   /** The q22 pipeline, built fresh (no memo): prefix-filtered candidate
-    * generation + exact verify. Package-visible so PlanSpec pins the join
-    * shapes of the real computation, not a memoized RDD scan. Output is
-    * UNSORTED — consumers order or join as they need.
+    * generation + exact verify — the compute behind [[q22Cached]]. Output
+    * is UNSORTED — consumers order or join as they need.
     */
-  private[graft] def q22Fresh(s: SparkSession, dir: String): DataFrame =
+  private def q22Fresh(s: SparkSession, dir: String): DataFrame =
     q22Pipeline(s, dir, Long.MaxValue)
 
-  private def q22Pipeline(s: SparkSession, dir: String, dfCap: Long): DataFrame = {
-    // ONE eager localCheckpoint on the ordered per-doc sets: Spark does
-    // not CSE across self-join branches, so without it the tokenize +
-    // index + aggregate subtree would be recomputed for both prefix sides
-    // and both verify sides. Doc-count-sized, not corpus-text-sized;
-    // memoized (below) because q121's incremental fold probes the same
-    // index surface — one build per session, not one per consumer.
-    val ordered = orderedSetsCached(s, dir)
-    val pref = jaccardPrefixOf(ordered, dfCap)
-    // checkpoint THEN resplit before the verify: candidate verification is
-    // CPU-bound (set intersection per pair), and AQE's size-based
-    // coalescing would schedule the tiny-by-bytes candidate list onto a
-    // couple of cores. The checkpoint first means resplit's partition
-    // probe reads a materialized RDD instead of re-executing the join.
-    val cand = resplit(pref.as("a").join(pref.as("b"),
+  private def q22Pipeline(s: SparkSession, dir: String, dfCap: Long): DataFrame =
+    jaccardVerified(fanOut(prefixCandidates(s, dir, dfCap)), shingleSets(s, dir))
+      .select(col("doc_a"), col("doc_b"), col("inter"),
+        round(col("jacc_raw"), 6).as("jaccard"))
+
+  /** q22/q158's candidates: the prefix-index self-join, deduped to bare
+    * (doc_a < doc_b) id pairs, un-materialized — package-visible so
+    * PlanSpec pins the join tree the pipelines see only behind
+    * [[graft.Tables.fanOut]]'s checkpoint.
+    */
+  private[graft] def prefixCandidates(s: SparkSession, dir: String,
+      dfCap: Long): DataFrame = {
+    val pref = jaccardPrefixOf(orderedSetsCached(s, dir), dfCap)
+    pref.as("a").join(pref.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-      .localCheckpoint(true))
-    // exact verification on the full sets (same checkpointed frame as the
-    // prefix); sets is O(corpus docs) — no broadcast hint (AQE broadcasts
-    // it when it actually fits)
-    val sets = ordered.select(col("doc_id"),
+  }
+
+  /** The full per-doc shingle sets (doc_id, sh, n), the verify side of
+    * every prefix-index join, off the ordered-sets memo that also feeds
+    * the index (Spark does not CSE across self-join branches). O(corpus
+    * docs) — no broadcast hint (AQE broadcasts it when it actually fits).
+    */
+  private def shingleSets(s: SparkSession, dir: String): DataFrame =
+    orderedSetsCached(s, dir).select(col("doc_id"),
       transform(col("ord"), _.getField("shingle")).as("sh"), col("n"))
+
+  /** The one set-overlap verify: bare (doc_a, doc_b) candidates re-join
+    * per-doc state (doc_id, sh, n, …) BY ID as `sa`/`sb` — shingle arrays
+    * never ride the candidate join — and gain `inter` = |sh_a ∩ sh_b|.
+    */
+  private def withOverlap(cand: DataFrame, state: DataFrame): DataFrame =
     cand
-      .join(sets.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sets.as("sb"), col("doc_b") === col("sb.doc_id"))
+      .join(state.as("sa"), col("doc_a") === col("sa.doc_id"))
+      .join(state.as("sb"), col("doc_b") === col("sb.doc_id"))
       .withColumn("inter", size(array_intersect(col("sa.sh"), col("sb.sh"))).cast("long"))
-      // filter on the UNROUNDED ratio: the prefix filter guarantees
-      // candidate recall exactly for true J ≥ t, so a round-then-filter
-      // would admit pairs with J ∈ [t − 5e-7, t) that the prefix may have
-      // pruned — rounding is presentation only (oracle SQL matches)
+
+  /** Jaccard over [[withOverlap]]: pairs with J ≥ [[JaccardT]], the ratio
+    * kept as `jacc_raw`. Filtered on the UNROUNDED ratio: the prefix and
+    * band filters guarantee candidate recall exactly for true J ≥ t, so a
+    * round-then-filter would admit pairs with J ∈ [t − 5e-7, t) that the
+    * filter may have pruned — rounding is presentation only (the oracle
+    * SQL matches).
+    */
+  private def jaccardVerified(cand: DataFrame, state: DataFrame): DataFrame =
+    withOverlap(cand, state)
       .withColumn("jacc_raw", col("inter").cast("double")
         / (col("sa.n") + col("sb.n") - col("inter")).cast("double"))
       .filter(col("jacc_raw") >= JaccardT)
-      .select(col("doc_a"), col("doc_b"), col("inter"),
-        round(col("jacc_raw"), 6).as("jaccard"))
-  }
 
   /** Every memo in the engine (including [[graft.queries.TrainingData]]'s
     * and [[graft.queries.CorpusStats]]'s shared gram surfaces), so
@@ -366,31 +377,25 @@ object Dedup {
     // does not CSE across self-join branches. Band rows carry ONLY
     // (doc_id, band, band_sig) — shingle arrays never ride the band
     // fan-out (cf. q67); state is re-fetched by id in the verify joins.
-    val base = minhashStateCached(s, dir)
-    val bands = bandRows(base)
-    // checkpoint THEN resplit before the verify (cf. q22): candidate
-    // verification is CPU-bound set intersection, and AQE's size-based
-    // coalescing would pack the tiny-by-bytes id-pair list onto few cores
-    val cand = resplit(bands.as("a").join(bands.as("b"),
+    jaccardVerified(fanOut(bandCandidates(s, dir)), minhashStateCached(s, dir))
+      .select(col("doc_a"), col("doc_b"),
+        round(size(filter(zip_with(col("sa.sig"), col("sb.sig"), (x, y) => x === y),
+          b => b)).cast("double") / MinHashK, 6).as("est_sim"),
+        round(col("jacc_raw"), 6).as("jaccard"))
+      .orderBy(col("doc_a"), col("doc_b"))
+  }
+
+  /** q23's candidates: the (band, band_sig) self-join of the band rows,
+    * deduped to bare (doc_a < doc_b) id pairs, un-materialized.
+    * Package-visible for PlanSpec's candidate-join pins.
+    */
+  private[graft] def bandCandidates(s: SparkSession, dir: String): DataFrame = {
+    val bands = bandRows(minhashStateCached(s, dir))
+    bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.band_sig") === col("b.band_sig")
           && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-      .localCheckpoint(true))
-    cand
-      .join(base.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(base.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .withColumn("est_sim", round(
-        size(filter(zip_with(col("sa.sig"), col("sb.sig"), (x, y) => x === y), b => b))
-          .cast("double") / MinHashK, 6))
-      .withColumn("inter", size(array_intersect(col("sa.sh"), col("sb.sh"))).cast("long"))
-      // unrounded threshold, same boundary semantics as q22/q45
-      .withColumn("jacc_raw", col("inter").cast("double")
-        / (col("sa.n") + col("sb.n") - col("inter")).cast("double"))
-      .filter(col("jacc_raw") >= JaccardT)
-      .select(col("doc_a"), col("doc_b"), col("est_sim"),
-        round(col("jacc_raw"), 6).as("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** DuckDB fragment: per-doc MinHash signatures + band rows — the SQL
@@ -946,34 +951,28 @@ object Dedup {
 
   /** The probe-vs-index core of q108, factored so STREAMING ingest can run
     * it per micro-batch (StreamingSpec drives it under foreachBatch):
-    * delta band rows probe the base band rows, candidates dedup to bare id
-    * pairs, exact verification re-joins per-doc state by id, and the
-    * verdict frame is anchored on `deltaDocs` so zero-match documents
-    * can't vanish.
+    * delta band rows probe the base band rows, candidates dedup to bare
+    * (doc_a = delta, doc_b = base) id pairs, the shared Jaccard verify
+    * ([[jaccardVerified]]) re-joins per-doc state by id, and the verdict
+    * frame is anchored on `deltaDocs` so zero-match documents can't
+    * vanish.
     */
   private[graft] def probeVerdicts(state: DataFrame, baseBands: DataFrame,
       deltaBands: DataFrame, deltaDocs: DataFrame): DataFrame = {
-    val cand = resplit(deltaBands.as("d")
+    val cand = deltaBands.as("d")
       .join(baseBands.as("b"),
         col("d.band") === col("b.band") && col("d.band_sig") === col("b.band_sig"))
-      .select(col("d.doc_id").as("delta_id"), col("b.doc_id").as("base_id"))
+      .select(col("d.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-      .localCheckpoint(true))
-    val matches = cand
-      .join(state.as("sa"), col("delta_id") === col("sa.doc_id"))
-      .join(state.as("sb"), col("base_id") === col("sb.doc_id"))
-      .withColumn("inter", size(array_intersect(col("sa.sh"), col("sb.sh"))).cast("long"))
-      .withColumn("jacc_raw", col("inter").cast("double")
-        / (col("sa.n") + col("sb.n") - col("inter")).cast("double"))
-      .filter(col("jacc_raw") >= JaccardT)
-      .groupBy(col("delta_id"))
+    val matches = jaccardVerified(fanOut(cand), state)
+      .groupBy(col("doc_a"))
       .agg(count(lit(1)).as("nm"), round(max(col("jacc_raw")), 6).as("bj"))
     deltaDocs.select(col("doc_id"), col("lang"))
-      .join(matches, col("doc_id") === col("delta_id"), "left")
+      .join(matches, col("doc_id") === col("doc_a"), "left")
       .select(col("doc_id"), col("lang"),
         coalesce(col("nm"), lit(0L)).as("n_base_matches"),
         col("bj").as("best_jaccard"),
-        when(col("delta_id").isNotNull, "dup").otherwise("novel").as("verdict"))
+        when(col("doc_a").isNotNull, "dup").otherwise("novel").as("verdict"))
       .orderBy(col("doc_id"))
   }
 
@@ -1120,23 +1119,14 @@ object Dedup {
     // per-increment probe: delta prefixes vs the full prefix index (the
     // persisted index substrate, reconstructed per run and shared with
     // q22 through the ordered-sets memo)
-    val ordered = orderedSetsCached(s, dir)
-    val pref = jaccardPrefixOf(ordered)
-    val cand = resplit(pref.filter(isDelta).as("d")
+    val pref = jaccardPrefixOf(orderedSetsCached(s, dir))
+    val cand = pref.filter(isDelta).as("d")
       .join(pref.as("i"), col("d.shingle") === col("i.shingle")
         && col("d.doc_id") =!= col("i.doc_id"))
       .select(least(col("d.doc_id"), col("i.doc_id")).as("doc_a"),
         greatest(col("d.doc_id"), col("i.doc_id")).as("doc_b"))
       .distinct()
-      .localCheckpoint(true))
-    val sets = ordered.select(col("doc_id"),
-      transform(col("ord"), _.getField("shingle")).as("sh"), col("n"))
-    val newPairs = cand
-      .join(sets.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sets.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .withColumn("inter", size(array_intersect(col("sa.sh"), col("sb.sh"))).cast("long"))
-      .filter(col("inter").cast("double")
-        / (col("sa.n") + col("sb.n") - col("inter")).cast("double") >= JaccardT)
+    val newPairs = jaccardVerified(fanOut(cand), shingleSets(s, dir))
       .select(col("doc_a"), col("doc_b"))
       .localCheckpoint(true)
     // persisted base state: labels over the base-only graph
@@ -1385,21 +1375,29 @@ object Dedup {
   def q154Containment(s: SparkSession, dir: String): DataFrame =
     containmentPipeline(s, dir, Long.MaxValue)
 
-  /** q154 WITHOUT the checkpoint+resplit (PlanSpec only, q22Fresh's
-    * role): the plan pin must see the real candidate join tree — the
-    * production pipeline truncates it behind the eager checkpoint. */
-  private[graft] def q154Fresh(s: SparkSession, dir: String): DataFrame =
-    containmentPipeline(s, dir, Long.MaxValue, fresh = true)
-
   /** The containment pipeline shared by q154 (uncapped) and q206 (df cap
-    * on the indexed side): prefix-filtered probe, full-or-capped
-    * container index, candidate-time length filter, exact full-set
-    * verify. The cap, like q158's ([[jaccardPrefixOf]]), filters AFTER
-    * the prefix cut so prefix positions stay defined on the full
-    * rarest-first order — the retention theorem depends on it.
+    * on the indexed side): [[containmentCandidates]], then the shared
+    * set-overlap verify ([[withOverlap]]) against the full sets, kept at
+    * containment inter / n_a ≥ [[ContainT]] on the unrounded ratio.
     */
   private def containmentPipeline(s: SparkSession, dir: String,
-      dfCap: Long, fresh: Boolean = false): DataFrame = {
+      dfCap: Long): DataFrame =
+    withOverlap(fanOut(containmentCandidates(s, dir, dfCap)), shingleSets(s, dir))
+      .withColumn("cont_raw", col("inter").cast("double") / col("sa.n").cast("double"))
+      .filter(col("cont_raw") >= ContainT)
+      .select(col("doc_a"), col("doc_b"), col("sa.n").as("n_a"), col("inter"),
+        round(col("cont_raw"), 6).as("containment"))
+      .orderBy(col("doc_a"), col("doc_b"))
+
+  /** q154/q206's candidates, un-materialized (package-visible for
+    * PlanSpec's candidate-join pins): prefix-filtered probe, full-or-capped
+    * container index, candidate-time length filter, deduped to ordered
+    * (doc_a, doc_b) id pairs. The cap, like q158's ([[jaccardPrefixOf]]),
+    * filters AFTER the prefix cut so prefix positions stay defined on the
+    * full rarest-first order — the retention theorem depends on it.
+    */
+  private[graft] def containmentCandidates(s: SparkSession, dir: String,
+      dfCap: Long): DataFrame = {
     val ordered = orderedSetsCached(s, dir)
     val p = (col("n") - ceil(col("n") * ContainT) + 1).cast("int")
     val probe0 = ordered.select(col("doc_id").as("doc_a"), col("n").as("n_a_p"),
@@ -1423,34 +1421,10 @@ object Dedup {
     // pair dies on a 2-int compare instead of surviving to a set verify.
     // Zero false negatives by the inequality above, so the oracle hash
     // (which checks every shingle-sharing pair) is unchanged.
-    // checkpoint THEN resplit before the verify (q22/q23's idiom, which
-    // this pipeline was MISSING through r18): the verify is CPU-bound set
-    // intersection per pair, and AQE's size-based coalescing schedules the
-    // tiny-by-bytes id-pair list onto a couple of cores — measured as
-    // q154's bimodal cost (8.7 s at sf0.1 / a flaky 38-56 s in-suite mode
-    // at sf1-realistic across r16-r18, vs ~5 s when the coalesce happened
-    // to keep parallelism; the r18 "candidate mass" diagnosis did not
-    // reproduce — the prefix-bounded candidate count is ~617k at
-    // sf1-realistic, cap or no cap). The checkpoint first means resplit's
-    // partition probe reads a materialized RDD instead of re-running the
-    // join.
-    val cands0 = probe.join(index, Seq("shingle"))
+    probe.join(index, Seq("shingle"))
       .filter(col("doc_a") =!= col("doc_b") &&
         col("n_b_i") >= ceil(col("n_a_p") * ContainT))
       .select(col("doc_a"), col("doc_b")).distinct()
-    val cands = if (fresh) cands0 else resplit(cands0.localCheckpoint(true))
-    val sa = ordered.select(col("doc_id").as("a_id"),
-      transform(col("ord"), _.getField("shingle")).as("sha"), col("n").as("n_a"))
-    val sb = ordered.select(col("doc_id").as("b_id"),
-      transform(col("ord"), _.getField("shingle")).as("shb"))
-    cands.join(sa, col("doc_a") === col("a_id"))
-      .join(sb, col("doc_b") === col("b_id"))
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))).cast("long"))
-      .withColumn("cont_raw", col("inter").cast("double") / col("n_a").cast("double"))
-      .filter(col("cont_raw") >= ContainT)
-      .select(col("doc_a"), col("doc_b"), col("n_a"), col("inter"),
-        round(col("cont_raw"), 6).as("containment"))
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   val q154Sql: String =

@@ -494,16 +494,7 @@ object Similarity {
     // embedding-space kernel). Tiny frame: (vec_id, band, band_sig) = 3
     // longs × nBands rows per vector.
     val bands = bandSigs(e, rung, nBands).localCheckpoint(true)
-    // checkpoint + resplit (cf. q22's verify): scoring the candidates is
-    // CPU-bound (one 64-dim dot per pair), and AQE's size-based coalescing
-    // would pack the small-by-bytes id-pair list onto a couple of cores
-    val cand = resplit(bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.band_sig") === col("b.band_sig")
-          && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("keep_id"), col("b.vec_id").as("drop_id"))
-      .distinct()
-      .localCheckpoint(true))
-    val verified = verifyCandidates(cand, e, threshold)
+    val verified = verifyCandidates(fanOut(bandPairs(bands).distinct()), e, threshold)
     if (ordered) verified.orderBy(col("keep_id"), col("drop_id")) else verified
   }
 
@@ -533,6 +524,18 @@ object Similarity {
     e.select(col("vec_id"), explode(bandStructs).as("bs"))
       .select(col("vec_id"), col("bs.band").as("band"), col("bs.band_sig").as("band_sig"))
   }
+
+  /** The banded candidate join: every (keep_id < drop_id) vector pair
+    * sharing a (band, band_sig) bucket of `sigs` ([[bandSigs]]' format),
+    * NOT deduped — a pair colliding in several bands appears once per band,
+    * so callers dedup (after any union) before [[verifyCandidates]].
+    * Package-visible for PlanSpec's candidate-join pins.
+    */
+  private[graft] def bandPairs(sigs: DataFrame): DataFrame =
+    sigs.as("a").join(sigs.as("b"),
+        col("a.band") === col("b.band") && col("a.band_sig") === col("b.band_sig")
+          && col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("keep_id"), col("b.vec_id").as("drop_id"))
 
   /** Exact verification of a bare (keep_id, drop_id) candidate list
     * against the full vectors of `e` — the shared tail of the batch
@@ -943,12 +946,7 @@ object Similarity {
   private val storedBasePairs = new Dedup.Memo[DataFrame]("nd_base_pairs")((s, dir) => {
     val sigB = storedBandSigs(s, dir)
     val (corpus, isDelta, _, _) = ndIndexInput(s, dir)
-    val cand = resplit(sigB.as("a").join(sigB.as("b"),
-        col("a.band") === col("b.band") && col("a.band_sig") === col("b.band_sig")
-          && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("keep_id"), col("b.vec_id").as("drop_id"))
-      .distinct()
-      .localCheckpoint(true))
+    val cand = fanOut(bandPairs(sigB).distinct())
     Layout.materializeBucketed(s, "nd_base_pairs", "keep_id")(
       verifyCandidates(cand, corpus.filter(!isDelta), ProdNearDupThreshold))
   })
@@ -988,11 +986,7 @@ object Similarity {
         col("d.band") === col("b.band") && col("d.band_sig") === col("b.band_sig"))
       .select(least(col("d.vec_id"), col("b.vec_id")).as("keep_id"),
         greatest(col("d.vec_id"), col("b.vec_id")).as("drop_id"))
-    val candDD = sigD.as("a").join(sigD.as("b"),
-        col("a.band") === col("b.band") && col("a.band_sig") === col("b.band_sig")
-          && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("keep_id"), col("b.vec_id").as("drop_id"))
-    val cand = resplit(candBD.unionByName(candDD).distinct().localCheckpoint(true))
+    val cand = fanOut(candBD.unionByName(bandPairs(sigD)).distinct())
     basePairs.unionByName(verifyCandidates(cand, corpus, ProdNearDupThreshold))
       .orderBy(col("keep_id"), col("drop_id"))
   }

@@ -29,9 +29,10 @@ import graft.queries.Dedup
   *     paired — the within-watermark contract.
   *
   * Downstream, exact Jaccard verification of the candidate pairs is the
-  * same id-rejoin q23/q108 run per micro-batch (q108's probeVerdicts
-  * under foreachBatch, already spec-driven) — this operator contributes
-  * the missing STATEFUL candidate generation between stream arrivals.
+  * batch joins' shared verify (`Dedup.jaccardVerified`) via q108's
+  * probeVerdicts under foreachBatch (already spec-driven) — this
+  * operator contributes the missing STATEFUL candidate generation
+  * between stream arrivals.
   */
 object NearDupStream {
 

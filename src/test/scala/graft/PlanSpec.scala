@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{Dedup, Relational, TrainingData}
+import graft.queries.{Dedup, Relational, Similarity, TrainingData}
 
 /** Plan-shape regression tests: the properties that make these queries
   * scale are plan properties (pushdown, pruning, broadcast, top-k
@@ -31,9 +31,17 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("dedup similarity joins never plan a cartesian product") {
-    // q22Fresh, not the memoized q22: the pin must see the real join tree,
-    // not a checkpointed-RDD scan
-    Seq(Dedup.q22Fresh(spark, sf), Dedup.q23MinHashLsh(spark, sf),
+    // the candidate functions, not the pipelines: a pipeline reads its
+    // candidates behind Tables.fanOut's eager checkpoint, so its plan shows
+    // only a checkpointed-RDD scan and the id-keyed verify joins. q24 has
+    // no such checkpoint, so its own plan holds the band join.
+    val vecSigs = Similarity.bandSigs(Similarity.vecs(spark, sf), 3, Similarity.ndBandsFor(3))
+    Seq(Dedup.prefixCandidates(spark, sf, Long.MaxValue),
+      Dedup.prefixCandidates(spark, sf, Dedup.JaccardDfCap),
+      Dedup.bandCandidates(spark, sf),
+      Dedup.containmentCandidates(spark, sf, Long.MaxValue),
+      Dedup.containmentCandidates(spark, sf, Dedup.ContainDfCap),
+      Similarity.bandPairs(vecSigs).distinct(),
       Dedup.q24SimHash(spark, sf)).foreach { df =>
       val p = plan(df)
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
@@ -480,19 +488,20 @@ class PlanSpec extends SparkTestBase {
   test("q154: the container length filter sits in the candidate join, below the verify") {
     // containment ≥ t ⇒ n_b ≥ ⌈t·n_a⌉ (inter ≤ n_b), so short containers
     // must die inside the shingle join — before the distinct and the
-    // array_intersect verify — not after. Since the r19 checkpoint+resplit
-    // fix the production plan truncates the candidate join behind an
-    // ExistingRDD scan (q23's witness pattern), so the join-tree pin reads
-    // q154Fresh (q22Fresh's role). The plan prints top-down, so the
-    // predicate's attributes must appear DEEPER (later) than the verify's
-    // array_intersect; a refactor that lifts the filter above the verify
-    // (or drops it) re-opens the hot-shingle fan-out and fails here.
-    val p = plan(Dedup.q154Fresh(spark, sf))
+    // array_intersect verify — not after. The production plan reads the
+    // candidates behind Tables.fanOut's ExistingRDD scan (q23's witness
+    // pattern), so the join-tree pin reads the candidate frame itself,
+    // whose output is the bare (doc_a, doc_b) pair: the verify can only
+    // see what survives its distinct. The plan prints top-down, so the
+    // predicate's attribute must appear DEEPER (later) than the distinct's
+    // aggregate; a refactor that drops the filter (column pruning then
+    // removes n_b_i) re-opens the hot-shingle fan-out and fails here.
+    val p = plan(Dedup.containmentCandidates(spark, sf, Long.MaxValue))
     val fi = p.indexOf("n_b_i")
-    val vi = p.indexOf("array_intersect")
+    val di = p.indexOf("HashAggregate")
     assert(fi >= 0, s"container length predicate missing from the plan:\n$p")
-    assert(vi >= 0, s"verify intersect missing from the plan:\n$p")
-    assert(fi > vi, s"length predicate not below the verify join:\n$p")
+    assert(di >= 0, s"candidate distinct missing from the plan:\n$p")
+    assert(fi > di, s"length predicate not below the candidate distinct:\n$p")
     // and the production q154 DOES checkpoint: the candidate list must
     // enter the verify as a bare-id RDD scan (the resplit witness)
     val prod = plan(Dedup.q154Containment(spark, sf))

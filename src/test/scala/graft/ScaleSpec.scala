@@ -64,12 +64,14 @@ class ScaleSpec extends SparkTestBase {
       assert(jobs.get() === 0,
         s"resplit on an exchange-bearing plan ran ${jobs.get()} eager job(s)")
     } finally spark.sparkContext.removeSparkListener(listener)
-    // a checkpointed join is scan-shaped again: the probe applies and
-    // guarantees ≥ defaultParallelism splits for the CPU-bound consumer
-    // (the q22/q23/q67 pattern)
-    val ck = joined.localCheckpoint(true)
-    assert(Tables.resplit(ck).rdd.getNumPartitions >=
-      spark.sparkContext.defaultParallelism)
+    // fanOut checkpoints first, so its join is scan-shaped again: the
+    // probe applies and guarantees ≥ defaultParallelism splits for the
+    // CPU-bound consumer (the near-dup verify pattern)
+    val fanned = Tables.fanOut(joined)
+    val fp = fanned.queryExecution.executedPlan.toString
+    assert(fp.contains("Scan ExistingRDD") && !fp.contains("Join"),
+      s"fanOut did not read a checkpoint scan:\n$fp")
+    assert(fanned.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism)
   }
 
   test("bucketed tables co-locate the join: no Exchange in the plan") {
