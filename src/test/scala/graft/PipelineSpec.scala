@@ -1,7 +1,11 @@
 package graft
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+import org.apache.parquet.hadoop.ParquetOutputCommitter
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -9,6 +13,7 @@ import org.scalatest.prop.TableDrivenPropertyChecks
 
 import graft.pipeline.CustomerPipeline
 import graft.pipeline.CustomerPipeline._
+import graft.pipeline.EventsIngestJob.upsertWindows
 
 /** Reference-parity semantics of the customer pipeline: JSON wire
   * round-trip, decimal laundering, single-array export, seeded generator
@@ -122,12 +127,65 @@ class PipelineSpec extends SparkTestBase with TableDrivenPropertyChecks {
     val work = Files.createTempDirectory("graft_ev_job").toString
     assert(graft.pipeline.EventsIngestJob.run(spark, sf, work),
       "conservation invariant failed — see [events-ingest] log lines")
-    val store = spark.read.parquet(s"$work/agg")
+    val cols = Seq("w_start", "event_type", "n_events", "sum_value").map(col)
+    val store = spark.read.parquet(s"$work/agg").select(cols: _*)
     val batch = graft.streaming.EventStreams.tumbling(
       Tables.events(spark, sf).select(
         col("ts"), col("user_id"), col("event_type"), col("value")), "1 hour")
-    val diff = store.select(col("w_start"), col("event_type"), col("n_events"))
-      .exceptAll(batch.select(col("w_start"), col("event_type"), col("n_events")))
-    assert(diff.isEmpty, "upserted store diverges from the batch recompute")
+      .select(cols: _*)
+    // all four columns, both directions: a wrong total and a missing
+    // window each fail
+    assert(store.exceptAll(batch).isEmpty, "store holds rows the batch recompute lacks")
+    assert(batch.exceptAll(store).isEmpty, "store lacks rows of the batch recompute")
   }
+
+  private def windows(rows: (Int, String, Long, Double)*) = {
+    import spark.implicits._
+    rows.map { case (h, t, n, v) => (new java.sql.Timestamp(h * 3600000L), t, n, v) }
+      .toDF("w_start", "event_type", "n_events", "sum_value")
+  }
+  private def sorted(df: org.apache.spark.sql.DataFrame): Seq[Row] =
+    df.orderBy("w_start", "event_type").collect().toSeq
+  private def storeRows(dir: String): Seq[Row] = sorted(spark.read.parquet(dir))
+  private lazy val stored = windows((0, "a", 1L, 1.5), (1, "b", 2L, 2.5))
+  private lazy val arriving = windows((1, "b", 5L, 7.25), (2, "c", 3L, 3.0))
+  private lazy val merged = windows((0, "a", 1L, 1.5), (1, "b", 5L, 7.25), (2, "c", 3L, 3.0))
+
+  test("upsertWindows: a store write that dies at job commit leaves the store whole; replay converges") {
+    val dir = Files.createTempDirectory("graft_upsert_crash").toString + "/agg"
+    upsertWindows(spark, stored, dir)
+    val key = "spark.sql.parquet.output.committer.class"
+    spark.conf.set(key, classOf[CommitFailingCommitter].getName)
+    try intercept[Exception](upsertWindows(spark, arriving, dir))
+    finally spark.conf.unset(key)
+    assert(storeRows(dir) === sorted(stored), "the failed write changed the store")
+    upsertWindows(spark, arriving, dir) // replay
+    assert(storeRows(dir) === sorted(merged))
+    upsertWindows(spark, arriving, dir) // replay again
+    assert(storeRows(dir) === sorted(merged), "a second replay changed the store")
+  }
+
+  test("upsertWindows resolves a leftover .prev: restored with no store, deleted beside one") {
+    val root = Files.createTempDirectory("graft_upsert_prev").toString
+    val (dir, prev) = (s"$root/agg", Paths.get(s"$root/agg.prev"))
+    // a crash between the two renames: the old store sits at .prev alone
+    upsertWindows(spark, stored, dir)
+    Files.move(Paths.get(dir), prev)
+    upsertWindows(spark, arriving, dir)
+    assert(storeRows(dir) === sorted(merged), ".prev was not restored before the merge")
+    assert(!Files.exists(prev) && !Files.exists(Paths.get(s"$dir.next")))
+    // a crash after the second rename: a stale .prev beside the store
+    stored.write.parquet(prev.toString)
+    upsertWindows(spark, arriving.limit(0), dir)
+    assert(storeRows(dir) === sorted(merged), "a stale .prev replaced the store")
+    assert(!Files.exists(prev), "stale .prev was kept")
+  }
+}
+
+/** A parquet committer whose job commit always fails: the write has run
+  * every task, and dies where a crashed driver would. */
+class CommitFailingCommitter(out: Path, ctx: TaskAttemptContext)
+    extends ParquetOutputCommitter(out, ctx) {
+  override def commitJob(job: JobContext): Unit =
+    throw new java.io.IOException("injected job-commit failure")
 }
