@@ -9,18 +9,20 @@ import org.apache.spark.sql.functions._
   * Everything here is a pure Catalyst expression (no UDFs) so it stays
   * inside whole-stage codegen, and every hash is derived from md5 — the one
   * cryptographic hash both Spark and DuckDB expose with identical output —
-  * so each operator can ship an exact SQL oracle. The matching DuckDB SQL
-  * fragments live next to each query in [[graft.queries]]; the shared
-  * numeric constants live in [[HashConsts]] so the two sides can never
-  * drift.
+  * so each operator can ship an exact SQL oracle. Each kernel's DuckDB
+  * rendering (`…Sql`) sits next to its Spark definition, and every oracle
+  * in [[graft.queries]] spells the kernel through it; the shared numeric
+  * constants live in [[HashConsts]] so the two sides can never drift.
   */
 object TextFns {
 
   /** Whitespace tokenization. `trim` first so leading/trailing blanks don't
-    * produce empty tokens (split semantics match DuckDB's
-    * `regexp_split_to_array(trim(x), '\s+')`).
+    * produce empty tokens (split semantics match DuckDB's, [[wordsSql]]).
     */
   def words(text: Column): Column = split(trim(text), "\\s+")
+
+  /** DuckDB twin of [[words]] over the SQL expression `text`. */
+  def wordsSql(text: String): String = s"regexp_split_to_array(trim($text), '\\s+')"
 
   /** Word-level n-gram shingles, space-joined, in document order (may
     * contain duplicates — pair with explode+distinct, which runs in the
@@ -35,6 +37,18 @@ object TextFns {
       i => array_join(slice(ws, i, lit(n)), " "))
     when(size(ws) >= n, raw).otherwise(array())
   }
+
+  /** DuckDB twin of the distinct `n`-gram [[shingles]] per `key`: CTE
+    * `name` of distinct (key, s) rows over CTE `from`, whose column `w`
+    * holds [[wordsSql]] tokens. */
+  def shingleSetSql(name: String, key: String, n: Int, from: String): String =
+    s"""$name AS (
+       |  SELECT DISTINCT $key, s FROM (
+       |    SELECT $key, unnest(CASE WHEN len(w) >= $n
+       |      THEN list_transform(range(1, len(w) - ${n - 2}),
+       |             i -> array_to_string(w[i:i+${n - 1}], ' '))
+       |      ELSE [] END) AS s
+       |    FROM $from))""".stripMargin
 
   /** The composite document-quality score shared by q18 (scoring), q58
     * (funnel filter), and q82 (keeper selection): a product of a length
@@ -58,7 +72,7 @@ object TextFns {
   }
 
   /** DuckDB rendering of [[qualityScore]]. `ww` names a
-    * `regexp_split_to_array(trim(text), '\s+')` column and `text` the raw
+    * [[wordsSql]] column and `text` the raw
     * text column in the surrounding query. Single-line so it embeds safely
     * inside callers' stripMargin blocks.
     */
@@ -67,11 +81,12 @@ object TextFns {
       s" * (1.0 - CAST(length($text) - length(regexp_replace($text, '[^a-z0-9\\s]', '', 'g')) AS DOUBLE) / length($text))" +
       s" * (0.5 + 0.5 * CAST(len(list_distinct($ww)) AS DOUBLE) / len($ww)), 4)"
 
-  /** 60-bit positive hash: first 15 hex chars of md5, base-16 → long.
-    * DuckDB oracle: `CAST(concat('0x', substr(md5(x), 1, 15)) AS BIGINT)`.
-    */
+  /** 60-bit positive hash: first 15 hex chars of md5, base-16 → long. */
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+
+  /** DuckDB twin of [[hash60]] over the SQL expression `x`. */
+  def hash60Sql(x: String): String = s"CAST(concat('0x', substr(md5($x), 1, 15)) AS BIGINT)"
 
   /** 32-bit positive hash (first 8 hex chars of md5). Small enough that
     * `a * hash32 + b` never overflows a signed 64-bit for the MinHash
@@ -80,6 +95,9 @@ object TextFns {
     */
   def hash32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
+
+  /** DuckDB twin of [[hash32]] over the SQL expression `x`. */
+  def hash32Sql(x: String): String = s"CAST(concat('0x', substr(md5($x), 1, 8)) AS BIGINT)"
 }
 
 /** Shared constants for the hash-family operators. Rendered into BOTH the

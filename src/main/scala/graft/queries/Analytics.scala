@@ -280,16 +280,7 @@ object Analytics {
   }
 
   val q95Sql: String =
-    s"""WITH o AS (
-       |  SELECT user_id, ts,
-       |   CASE WHEN lag(ts) OVER w IS NULL
-       |         OR ts - lag(ts) OVER w >= INTERVAL '30 minutes' THEN 1 ELSE 0 END AS new_s
-       |  FROM events
-       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-       |g AS (
-       |  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-       |  FROM o),
+    s"""WITH ${Streaming.sessionSqlCtes("ts", "ts")},
        |sess AS (
        |  SELECT user_id, grp, CAST(count(*) AS BIGINT) AS n_events,
        |   (epoch_us(max(ts)) - epoch_us(min(ts))) // ${SessBucketMin * 60L * 1000000L}
@@ -857,16 +848,7 @@ object Analytics {
   }
 
   val q149Sql: String =
-    """WITH o AS (
-      |  SELECT user_id, ts, event_id, event_type,
-      |   CASE WHEN lag(ts) OVER w IS NULL
-      |         OR ts - lag(ts) OVER w >= INTERVAL '30 minutes' THEN 1 ELSE 0 END AS new_s
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      |g AS (
-      |  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-      |  FROM o),
+    s"""WITH ${Streaming.sessionSqlCtes("ts, event_id, event_type", "ts, event_id")},
       |st AS (SELECT DISTINCT user_id, grp, event_type FROM g),
       |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_sessions
       |        FROM (SELECT DISTINCT user_id, grp FROM st)),

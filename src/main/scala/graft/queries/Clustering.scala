@@ -462,9 +462,7 @@ object Clustering {
       val prev = if (t == 1) s"${prefix}0" else s"$prefix${t - 1}"
       s"""$prefix${t}w AS (
          |  SELECT list_transform(range(1, ${dd + 1}), i ->
-         |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(range(1, ${dd + 1}), j -> m[i][j] * v[j])),
-         |      (x, y) -> x + y)) AS w
+         |    ${Similarity.sqlFold(s"list_transform(range(1, ${dd + 1}), j -> m[i][j] * v[j])")}) AS w
          |  FROM $prev, $mat),
          |$prefix$t AS (
          |  SELECT list_transform(w, x -> x / sqrt(list_reduce(
@@ -481,12 +479,10 @@ object Clustering {
   private def pcaSqlCtes: String = {
     val dd = Similarity.AnnDims
     val rng = s"range(1, ${dd + 1})"
-    def foldSql(terms: String): String =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), $terms), (x, y) -> x + y)"
     def matvecSql: String =
-      s"list_transform($rng, i -> ${foldSql(s"list_transform($rng, j -> m[i][j] * v[j])")})"
+      s"list_transform($rng, i -> ${Similarity.sqlFold(s"list_transform($rng, j -> m[i][j] * v[j])")})"
     s"""e AS (
-       |  SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+       |  SELECT ${Similarity.sqlWiden} AS v FROM embeddings),
        |cnt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM e),
        |xp AS (
        |  SELECT ti.i AS i, tj.j AS j,
@@ -510,7 +506,7 @@ object Clustering {
        |fin1 AS (SELECT v, $matvecSql AS w FROM p1$PowerIters, gm),
        |ev1 AS (
        |  SELECT v AS v1,
-       |   ${foldSql(s"list_transform($rng, i -> v[i] * w[i])")} AS lam1
+       |   ${Similarity.sqlFold(s"list_transform($rng, i -> v[i] * w[i])")} AS lam1
        |  FROM fin1),
        |gm2 AS (
        |  SELECT list_transform($rng, i -> list_transform($rng, j ->
@@ -521,10 +517,10 @@ object Clustering {
        |fin2 AS (SELECT v, $matvecSql AS w FROM p2$PowerIters, gm2),
        |ev2 AS (
        |  SELECT v AS v2,
-       |   ${foldSql(s"list_transform($rng, i -> v[i] * w[i])")} AS lam2
+       |   ${Similarity.sqlFold(s"list_transform($rng, i -> v[i] * w[i])")} AS lam2
        |  FROM fin2),
        |tr AS (
-       |  SELECT ${foldSql(s"list_transform($rng, i -> m[i][i])")} AS trace
+       |  SELECT ${Similarity.sqlFold(s"list_transform($rng, i -> m[i][i])")} AS trace
        |  FROM gm)""".stripMargin
   }
 
@@ -828,9 +824,6 @@ object Clustering {
   val q179Sql: String = {
     val minDeg = DbscanMinPts - 1
     val dd = Similarity.AnnDims
-    def fold(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |     list_transform(range(1, ${dd + 1}), i -> $a[i] * $b[i])), (x, y) -> x + y)""".stripMargin
     s"""WITH ${dbscanCtes(DbscanCrossover)},
        |members AS MATERIALIZED (
        |  SELECT dg.id AS vec_id,
@@ -847,15 +840,15 @@ object Clustering {
        |  SELECT cluster, t.i AS pos, ROUND(avg(v[t.i]), 6) AS c
        |  FROM mv, unnest(range(1, ${dd + 1})) AS t(i) GROUP BY cluster, t.i),
        |cn AS MATERIALIZED (
-       |  SELECT cluster, cv, sqrt(${fold("cv", "cv")}) AS cnorm FROM (
+       |  SELECT cluster, cv, sqrt(${Similarity.sqlDot("cv", "cv")}) AS cnorm FROM (
        |    SELECT cluster, list(c ORDER BY pos) AS cv FROM cd GROUP BY cluster) cq),
        |own AS (
        |  SELECT mv.vec_id, mv.cluster, mv.is_core,
-       |   ${fold("mv.v", "cn.cv")} / (mv.norm * cn.cnorm) AS cos_own
+       |   ${Similarity.sqlDot("mv.v", "cn.cv")} / (mv.norm * cn.cnorm) AS cos_own
        |  FROM mv JOIN cn ON mv.cluster = cn.cluster),
        |oth AS (
        |  SELECT mv.vec_id,
-       |   max(${fold("mv.v", "cn.cv")} / (mv.norm * cn.cnorm)) AS cos_oth
+       |   max(${Similarity.sqlDot("mv.v", "cn.cv")} / (mv.norm * cn.cnorm)) AS cos_oth
        |  FROM mv JOIN cn ON mv.cluster <> cn.cluster GROUP BY mv.vec_id),
        |sil AS (
        |  SELECT own.cluster, own.is_core, own.cos_own,
@@ -930,8 +923,6 @@ object Clustering {
   val q180Sql: String = {
     val dd = Similarity.AnnDims
     val rng = s"range(1, ${dd + 1})"
-    def fold(terms: String): String =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), $terms), (x, y) -> x + y)"
     def cell(v: String, mn: String, mx: String): String =
       s"""CASE WHEN $mx = $mn THEN 0
          |      ELSE LEAST(${PcaGrid - 1},
@@ -940,12 +931,12 @@ object Clustering {
        |ml AS (SELECT list(sm.s / cnt.n ORDER BY sm.i) AS m FROM sm, cnt),
        |e2 AS (
        |  SELECT vec_id, label,
-       |   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+       |   ${Similarity.sqlWiden} AS v
        |  FROM embeddings),
        |proj AS MATERIALIZED (
        |  SELECT e2.label,
-       |   ${fold(s"list_transform($rng, i -> (e2.v[i] - ml.m[i]) * e1.v1[i])")} AS p1,
-       |   ${fold(s"list_transform($rng, i -> (e2.v[i] - ml.m[i]) * e2v.v2[i])")} AS p2
+       |   ${Similarity.sqlFold(s"list_transform($rng, i -> (e2.v[i] - ml.m[i]) * e1.v1[i])")} AS p1,
+       |   ${Similarity.sqlFold(s"list_transform($rng, i -> (e2.v[i] - ml.m[i]) * e2v.v2[i])")} AS p2
        |  FROM e2, ml, ev1 e1, ev2 e2v),
        |ext AS (
        |  SELECT min(p1) AS mn1, max(p1) AS mx1, min(p2) AS mn2, max(p2) AS mx2
@@ -1134,16 +1125,13 @@ object Clustering {
   /** The SQL twin of [[rawEpsPairs]] — the mode-aware ε₀ pair CTEs plus
     * the raw-cosine recovery, shared by the q184 and q193 oracles. */
   private def rawPairsSqlCtes: String = {
-    def fold(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |     list_transform(range(1, ${Similarity.AnnDims + 1}), i -> $a[i] * $b[i])), (x, y) -> x + y)""".stripMargin
     s"""${Similarity.ndPairsSqlCtes(DbscanEps, DbscanCrossover)},
        |pairs AS MATERIALIZED (
        |  SELECT keep_id, drop_id FROM brute
        |  UNION ALL SELECT keep_id, drop_id FROM banded),
        |raw AS MATERIALIZED (
        |  SELECT p.keep_id, p.drop_id,
-       |   ${fold("a.v", "b.v")} / (a.norm * b.norm) AS rsim
+       |   ${Similarity.sqlDot("a.v", "b.v")} / (a.norm * b.norm) AS rsim
        |  FROM pairs p JOIN n a ON p.keep_id = a.vec_id JOIN n b ON p.drop_id = b.vec_id)""".stripMargin
   }
 

@@ -260,14 +260,8 @@ object CorpusStats {
 
   val q80Sql: String =
     s"""WITH w AS (
-       |  SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents),
-       |g AS (
-       |  SELECT DISTINCT source, s FROM (
-       |    SELECT source, unnest(CASE WHEN len(w) >= $SrcN
-       |      THEN list_transform(range(1, len(w) - ${SrcN - 2}),
-       |             i -> array_to_string(w[i:i+${SrcN - 1}], ' '))
-       |      ELSE [] END) AS s
-       |    FROM w)),
+       |  SELECT doc_id, source, ${wordsSql("text")} AS w FROM documents),
+       |${shingleSetSql("g", "source", SrcN, "w")},
        |sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM g GROUP BY source),
        |p AS (
        |  SELECT a.source AS src_a, b.source AS src_b, CAST(count(*) AS BIGINT) AS inter
@@ -317,8 +311,8 @@ object CorpusStats {
   }
 
   val q84Sql: String =
-    """WITH t AS (
-      |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w
+    s"""WITH t AS (
+      |  SELECT doc_id, unnest(${wordsSql("text")}) AS w
       |  FROM documents),
       |dt AS (
       |  SELECT doc_id, w, CAST(count(*) AS BIGINT) AS k FROM t GROUP BY doc_id, w),
@@ -384,7 +378,7 @@ object CorpusStats {
 
   val q86Sql: String =
     s"""WITH w AS (
-       |  SELECT regexp_split_to_array(trim(text), '\\s+') AS ww FROM documents),
+       |  SELECT ${wordsSql("text")} AS ww FROM documents),
        |u AS (
        |  SELECT w, CAST(count(*) AS BIGINT) AS c1
        |  FROM (SELECT unnest(ww) AS w FROM w) GROUP BY w),
@@ -437,14 +431,8 @@ object CorpusStats {
 
   val q87Sql: String =
     s"""WITH w AS (
-       |  SELECT source, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents),
-       |g AS (
-       |  SELECT DISTINCT source, s FROM (
-       |    SELECT source, unnest(CASE WHEN len(w) >= $SrcN
-       |      THEN list_transform(range(1, len(w) - ${SrcN - 2}),
-       |             i -> array_to_string(w[i:i+${SrcN - 1}], ' '))
-       |      ELSE [] END) AS s
-       |    FROM w)),
+       |  SELECT source, ${wordsSql("text")} AS w FROM documents),
+       |${shingleSetSql("g", "source", SrcN, "w")},
        |v AS (SELECT source, CAST(count(*) AS BIGINT) AS n_grams FROM g GROUP BY source),
        |f AS (SELECT s, min(source) AS first_source FROM g GROUP BY s),
        |nv AS (SELECT first_source, CAST(count(*) AS BIGINT) AS n_novel
@@ -487,9 +475,9 @@ object CorpusStats {
   }
 
   val q91Sql: String =
-    """WITH c AS (
+    s"""WITH c AS (
       |  SELECT source,
-      |   CAST(sum(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS n_tok
+      |   CAST(sum(len(${wordsSql("text")})) AS BIGINT) AS n_tok
       |  FROM documents GROUP BY source),
       |t AS (SELECT CAST(sum(n_tok) AS BIGINT) AS n_total FROM c),
       |p AS (
@@ -637,7 +625,7 @@ object CorpusStats {
          |  FROM $src LEFT JOIN $rule ON TRUE""".stripMargin
     s"""w0 AS (
        |  SELECT doc_id,
-       |    array_to_string(regexp_split_to_array(trim(text), '\\s+'), ' ') AS txt
+       |    array_to_string(${wordsSql("text")}, ' ') AS txt
        |  FROM documents),
        |c1 AS (${pc("w0")}),
        |t1 AS (SELECT * FROM c1 ORDER BY pair_count DESC, left_sym, right_sym LIMIT 1),
@@ -772,7 +760,7 @@ object CorpusStats {
 
   val q115Sql: String =
     s"""WITH w AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ww FROM documents),
+       |  SELECT doc_id, ${wordsSql("text")} AS ww FROM documents),
        |db AS (
        |  SELECT doc_id, b.l AS l, b.r AS r, CAST(count(*) AS BIGINT) AS k FROM (
        |    SELECT doc_id, unnest(list_transform(range(1, len(ww)),
@@ -910,10 +898,10 @@ object CorpusStats {
 
   val q143Sql: String =
     s"""WITH w AS (
-       |  SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS word
+       |  SELECT unnest(${wordsSql("text")}) AS word
        |  FROM documents),
        |v AS (SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM w GROUP BY 1)
-       |SELECT CAST(CAST(concat('0x', substr(md5(word), 1, 8)) AS BIGINT)
+       |SELECT CAST(${hash32Sql("word")}
        |         % $HashFeatBuckets AS BIGINT) AS bucket,
        | CAST(count(*) AS BIGINT) AS n_features,
        | CAST(SUM(cnt) AS BIGINT) AS n_occurrences,
@@ -927,8 +915,8 @@ object CorpusStats {
     * colliding (the 31-word stress vocabulary fits, but the Heaps-law
     * corpora overflow it hard), d=3 is the textbook δ=e⁻³≈5% row count.
     */
-  val CmsWidth: Int = 256
-  val CmsDepth: Int = 3
+  final val CmsWidth = 256
+  final val CmsDepth = 3
 
   /** Heavy hitters tracked by q165 (top-k exact occurrence counts). */
   val CmsTrackK: Int = 12
@@ -968,46 +956,49 @@ object CorpusStats {
     * addition equal this batch form exactly (linearity — the property
     * that makes CMS the streaming/distributed standard).
     */
-  private[graft] def cmsCountersFromCounts(cnt: DataFrame): DataFrame = {
-    def bucketAt(r: Int): Column =
-      hash60(concat(col("term"), lit(s":cms$r"))) % CmsWidth
-    val rowBuckets = array((0 until CmsDepth).map(r =>
-      struct(lit(r).as("r"), bucketAt(r).as("bucket"))): _*)
-    cnt.select(col("cnt"), explode(rowBuckets).as("rb"))
+  private[graft] def cmsCountersFromCounts(cnt: DataFrame): DataFrame =
+    cnt.select(col("cnt"), explode(cmsRowBuckets).as("rb"))
       .groupBy(col("rb.r").as("r"), col("rb.bucket").as("bucket"))
       .agg(sum(col("cnt")).as("c"))
-  }
 
-  private[graft] def cmsCountersFromTokens(toks: DataFrame): DataFrame =
-    cmsCountersFromCounts(
-      toks.groupBy(col("term")).agg(count(lit(1)).as("cnt")))
+  /** A `term`'s [[CmsDepth]] sketch cells as an array of (r, bucket):
+    * row r hashes hash60(term ':cms' r) mod [[CmsWidth]]. */
+  private def cmsRowBuckets: Column =
+    array((0 until CmsDepth).map(r => struct(lit(r).as("r"),
+      (hash60(concat(col("term"), lit(s":cms$r"))) % CmsWidth).as("bucket"))): _*)
 
-  def q165CmsHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    def bucketAt(r: Int): Column =
-      hash60(concat(col("term"), lit(s":cms$r"))) % CmsWidth
-    val rowBuckets = array((0 until CmsDepth).map(r =>
-      struct(lit(r).as("r"), bucketAt(r).as("bucket"))): _*)
+  /** DuckDB twin of one [[cmsRowBuckets]] cell: `term`'s bucket in row `r`. */
+  private def cmsBucketSql(term: String, r: String): String =
+    s"${hash60Sql(s"concat($term, ':cms', CAST($r AS VARCHAR))")} % $CmsWidth"
 
-    val cnt = documents(s, dir)
-      .select(explode(words(col("text"))).as("term"))
-      .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-
-    val counters = cmsCountersFromCounts(cnt)
-
-    // Tracked-set selection carries the term STRING through an
-    // orderBy.limit (TakeOrderedAndProject — a bounded distributed heap
-    // over the vocabulary), total order (cnt DESC, term ASC). No hash id
-    // and no join-back: the previous hash60 heap carried a ~|V|²/2⁶¹
-    // md5-prefix collision window on the join-back (r13 advice #3).
-    val tracked = cnt
+  /** The [[CmsTrackK]] tracked heavy hitters of a (term, cnt) frame as
+    * (rnk, term, cnt). It carries the term STRING through an
+    * orderBy.limit (TakeOrderedAndProject — a bounded distributed heap
+    * over the vocabulary), total order (cnt DESC, term ASC). No hash id
+    * and no join-back: the previous hash60 heap carried a ~|V|²/2⁶¹
+    * md5-prefix collision window on the join-back (r13 advice #3).
+    */
+  private def cmsTracked(cnt: DataFrame): DataFrame =
+    cnt
       .orderBy(col("cnt").desc, col("term").asc).limit(CmsTrackK)
       .agg(sort_array(collect_list(struct((-col("cnt")).as("nc"), col("term")))).as("sel"))
       .select(posexplode(col("sel")).as(Seq("pos", "t")))
       .select((col("pos") + 1).cast("long").as("rnk"), col("t.term").as("term"),
         (-col("t.nc")).as("cnt"))
 
-    tracked
-      .select(col("rnk"), col("term"), col("cnt"), explode(rowBuckets).as("rb"))
+  private[graft] def cmsCountersFromTokens(toks: DataFrame): DataFrame =
+    cmsCountersFromCounts(
+      toks.groupBy(col("term")).agg(count(lit(1)).as("cnt")))
+
+  def q165CmsHeavyHitters(s: SparkSession, dir: String): DataFrame = {
+    val cnt = documents(s, dir)
+      .select(explode(words(col("text"))).as("term"))
+      .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
+
+    val counters = cmsCountersFromCounts(cnt)
+
+    cmsTracked(cnt)
+      .select(col("rnk"), col("term"), col("cnt"), explode(cmsRowBuckets).as("rb"))
       .join(broadcast(counters),
         col("rb.r") === counters("r") && col("rb.bucket") === counters("bucket"))
       .groupBy(col("rnk"), col("term"), col("cnt"))
@@ -1017,14 +1008,13 @@ object CorpusStats {
       .orderBy(col("rnk"))
   }
 
-  val q165Sql: String = {
-    val h60r = "CAST(concat('0x', substr(md5(concat(term, ':cms', CAST(r AS VARCHAR))), 1, 15)) AS BIGINT)"
+  val q165Sql: String =
     s"""WITH w AS (
-       |  SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
+       |  SELECT unnest(${wordsSql("text")}) AS term
        |  FROM documents),
        |cnt AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt FROM w GROUP BY 1),
        |rb AS (
-       |  SELECT term, cnt, r, $h60r % $CmsWidth AS bucket
+       |  SELECT term, cnt, r, ${cmsBucketSql("term", "r")} AS bucket
        |  FROM cnt CROSS JOIN (SELECT unnest([${(0 until CmsDepth).mkString(", ")}]) AS r)),
        |counters AS (SELECT r, bucket, CAST(SUM(cnt) AS BIGINT) AS c FROM rb GROUP BY 1, 2),
        |tracked AS (
@@ -1035,7 +1025,6 @@ object CorpusStats {
        |FROM tracked t JOIN rb b USING (term) JOIN counters c USING (r, bucket)
        |WHERE t.rnk <= $CmsTrackK
        |GROUP BY t.rnk, t.term, t.cnt ORDER BY t.rnk""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q169
 
@@ -1064,16 +1053,11 @@ object CorpusStats {
     * frames, never the vocabulary.
     */
   def q169CmsMerge(s: SparkSession, dir: String): DataFrame = {
-    def bucketAt(r: Int): Column =
-      hash60(concat(col("term"), lit(s":cms$r"))) % CmsWidth
-    val rowBuckets = array((0 until CmsDepth).map(r =>
-      struct(lit(r).as("r"), bucketAt(r).as("bucket"))): _*)
-
     val cntSrc = documents(s, dir)
       .select(col("source"), explode(words(col("text"))).as("term"))
       .groupBy(col("source"), col("term")).agg(count(lit(1)).as("cnt"))
     val countersSrc = cntSrc
-      .select(col("source"), col("cnt"), explode(rowBuckets).as("rb"))
+      .select(col("source"), col("cnt"), explode(cmsRowBuckets).as("rb"))
       .groupBy(col("source"), col("rb.r").as("r"), col("rb.bucket").as("bucket"))
       .agg(sum(col("cnt")).as("c"))
     // THE merge: counter addition over (r, bucket) — linearity makes it exact
@@ -1081,19 +1065,14 @@ object CorpusStats {
       .groupBy(col("r"), col("bucket")).agg(sum(col("c")).as("c"))
 
     val cnt = cntSrc.groupBy(col("term")).agg(sum(col("cnt")).as("cnt"))
-    // string-carrying tracked-set selection — same rationale as q165's
-    val tracked = cnt
-      .orderBy(col("cnt").desc, col("term").asc).limit(CmsTrackK)
-      .agg(sort_array(collect_list(struct((-col("cnt")).as("nc"), col("term")))).as("sel"))
-      .select(posexplode(col("sel")).as(Seq("pos", "t")))
-      .select((col("pos") + 1).cast("long").as("rnk"), col("t.term").as("term"))
+    val tracked = cmsTracked(cnt).select(col("rnk"), col("term"))
 
     val grid = tracked.crossJoin(broadcast(cntSrc.select(col("source")).distinct()))
     val probes = grid
       .join(cntSrc.withColumnRenamed("cnt", "src_exact"), Seq("source", "term"), "left")
       .na.fill(0L, Seq("src_exact"))
       .select(col("rnk"), col("term"), col("source"), col("src_exact"),
-        explode(rowBuckets).as("rb"))
+        explode(cmsRowBuckets).as("rb"))
       .select(col("rnk"), col("term"), col("source"), col("src_exact"),
         col("rb.r").as("r"), col("rb.bucket").as("bucket"))
     // LEFT join + 0-fill for the source sketch: a bucket the source never
@@ -1112,14 +1091,13 @@ object CorpusStats {
       .orderBy(col("rnk"), col("source"))
   }
 
-  val q169Sql: String = {
-    val h60r = "CAST(concat('0x', substr(md5(concat(term, ':cms', CAST(r AS VARCHAR))), 1, 15)) AS BIGINT)"
+  val q169Sql: String =
     s"""WITH w AS (
-       |  SELECT source, unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
+       |  SELECT source, unnest(${wordsSql("text")}) AS term
        |  FROM documents),
        |cnt_src AS (SELECT source, term, CAST(count(*) AS BIGINT) AS cnt FROM w GROUP BY 1, 2),
        |rb AS (
-       |  SELECT source, term, cnt, r, $h60r % $CmsWidth AS bucket
+       |  SELECT source, term, cnt, r, ${cmsBucketSql("term", "r")} AS bucket
        |  FROM cnt_src CROSS JOIN (SELECT unnest([${(0 until CmsDepth).mkString(", ")}]) AS r)),
        |counters_src AS (
        |  SELECT source, r, bucket, CAST(SUM(cnt) AS BIGINT) AS c FROM rb GROUP BY 1, 2, 3),
@@ -1136,8 +1114,7 @@ object CorpusStats {
        |pr AS (
        |  SELECT g.rnk, g.term, g.source,
        |   COALESCE(c.cnt, 0) AS src_exact, b.r,
-       |   CAST(concat('0x', substr(md5(concat(g.term, ':cms', CAST(b.r AS VARCHAR))), 1, 15)) AS BIGINT)
-       |     % $CmsWidth AS bucket
+       |   ${cmsBucketSql("g.term", "b.r")} AS bucket
        |  FROM grid g
        |  LEFT JOIN cnt_src c ON c.source = g.source AND c.term = g.term
        |  CROSS JOIN (SELECT unnest([${(0 until CmsDepth).mkString(", ")}]) AS r) b)
@@ -1148,7 +1125,6 @@ object CorpusStats {
        |JOIN counters_all ca ON ca.r = p.r AND ca.bucket = p.bucket
        |GROUP BY p.rnk, p.term, p.source, p.src_exact
        |ORDER BY p.rnk, p.source""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q186
 
@@ -1255,7 +1231,7 @@ object CorpusStats {
   val q186Sql: String = {
     val pcts = GrowthPcts.map(p => s"($p)").mkString(", ")
     s"""WITH d AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ww FROM documents),
+       |  SELECT doc_id, ${wordsSql("text")} AS ww FROM documents),
        |rk AS (
        |  SELECT doc_id, CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT) AS rnk
        |  FROM documents),
@@ -1527,7 +1503,7 @@ object CorpusStats {
 
   val q191Sql: String =
     s"""WITH w AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ww FROM documents),
+       |  SELECT doc_id, ${wordsSql("text")} AS ww FROM documents),
        |db AS (
        |  SELECT doc_id, b.l AS l, b.r AS r, CAST(count(*) AS BIGINT) AS k FROM (
        |    SELECT doc_id, unnest(list_transform(range(1, len(ww)),

@@ -49,7 +49,7 @@ object Curation {
 
   val q69Sql: String =
     s"""WITH w AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents),
+       |  SELECT doc_id, ${wordsSql("text")} AS w FROM documents),
        |g AS (
        |  SELECT doc_id, unnest(CASE WHEN len(w) >= $PassageN
        |    THEN list_transform(range(1, len(w) - ${PassageN - 2}),
@@ -137,14 +137,8 @@ object Curation {
 
   val q70Sql: String =
     s"""WITH w AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents),
-       |g AS (
-       |  SELECT DISTINCT doc_id, s FROM (
-       |    SELECT doc_id, unnest(CASE WHEN len(w) >= $BloomN
-       |      THEN list_transform(range(1, len(w) - ${BloomN - 2}),
-       |             i -> array_to_string(w[i:i+${BloomN - 1}], ' '))
-       |      ELSE [] END) AS s
-       |    FROM w)),
+       |  SELECT doc_id, ${wordsSql("text")} AS w FROM documents),
+       |${shingleSetSql("g", "doc_id", BloomN, "w")},
        |ev AS (SELECT DISTINCT s FROM g WHERE doc_id % 10 = 0),
        |tr AS (SELECT doc_id, s FROM g WHERE doc_id % 10 <> 0),
        |per AS (
@@ -201,7 +195,7 @@ object Curation {
   val q82Sql: String =
     s"""WITH RECURSIVE ${Dedup.sqlComponentsCtes},
        |qd AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ww, text
+       |  SELECT doc_id, ${wordsSql("text")} AS ww, text
        |  FROM documents),
        |qs AS (
        |  SELECT doc_id, ${qualitySqlExpr("ww", "text")} AS quality
@@ -286,7 +280,7 @@ object Curation {
 
   val q83Sql: String =
     s"""WITH w AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ww FROM documents),
+       |  SELECT doc_id, ${wordsSql("text")} AS ww FROM documents),
        |b AS (
        |  SELECT doc_id, unnest(list_transform(
        |    range(0, CAST(ceil(len(ww) / $BlockW.0) AS BIGINT)),
@@ -349,7 +343,7 @@ object Curation {
 
   val q88Sql: String =
     s"""WITH qd AS (
-       |  SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS ww, text
+       |  SELECT doc_id, source, ${wordsSql("text")} AS ww, text
        |  FROM documents),
        |sc AS (
        |  SELECT doc_id, source, ${qualitySqlExpr("ww", "text")} AS quality FROM qd),
@@ -412,7 +406,7 @@ object Curation {
   val q93Sql: String =
     s"""WITH RECURSIVE ${Dedup.sqlComponentsCtes},
        |qd AS (
-       |  SELECT doc_id, lang, regexp_split_to_array(trim(text), '\\s+') AS ww, text
+       |  SELECT doc_id, lang, ${wordsSql("text")} AS ww, text
        |  FROM documents),
        |qs AS (
        |  SELECT doc_id, ${qualitySqlExpr("ww", "text")} AS quality FROM qd),
@@ -472,7 +466,7 @@ object Curation {
   val q94Sql: String =
     s"""WITH RECURSIVE ${Dedup.sqlComponentsCtes},
        |qd AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ww, text
+       |  SELECT doc_id, ${wordsSql("text")} AS ww, text
        |  FROM documents),
        |qs AS (
        |  SELECT doc_id, ${qualitySqlExpr("ww", "text")} AS quality FROM qd),
@@ -522,7 +516,7 @@ object Curation {
 
   val q98Sql: String =
     s"""WITH qd AS (
-       |  SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS ww, text
+       |  SELECT doc_id, source, ${wordsSql("text")} AS ww, text
        |  FROM documents),
        |sc AS (
        |  SELECT doc_id, source, ${qualitySqlExpr("ww", "text")} AS quality FROM qd),
@@ -648,7 +642,7 @@ object Curation {
     val taus = SweepThresholds.mkString("[", ", ", "]")
     s"""WITH RECURSIVE ${Dedup.sqlComponentsCtes},
        |qd AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ww, text
+       |  SELECT doc_id, ${wordsSql("text")} AS ww, text
        |  FROM documents),
        |sc AS (
        |  SELECT doc_id, ${qualitySqlExpr("ww", "text")} AS quality FROM qd),
@@ -720,7 +714,7 @@ object Curation {
 
   val q125Sql: String =
     s"""WITH qd AS (
-       |  SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS ww, text
+       |  SELECT doc_id, source, ${wordsSql("text")} AS ww, text
        |  FROM documents),
        |sc AS (
        |  SELECT doc_id, source, CAST(len(ww) AS BIGINT) AS n_tok,
@@ -782,7 +776,7 @@ object Curation {
   val q136Sql: String = {
     val lens = PadLens.mkString("[", ", ", "]")
     s"""WITH t AS (
-       |  SELECT CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tok
+       |  SELECT CAST(len(${wordsSql("text")}) AS BIGINT) AS n_tok
        |  FROM documents),
        |l AS (SELECT UNNEST($lens) AS max_len)
        |SELECT CAST(max_len AS INT) AS max_len, CAST(count(*) AS BIGINT) AS n_docs,
@@ -964,9 +958,9 @@ object Curation {
   }
 
   val q176Sql: String =
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT doc_id, n_chars,
-      |   CAST(len(list_distinct(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS vocab
+      |   CAST(len(list_distinct(${wordsSql("text")})) AS BIGINT) AS vocab
       |  FROM documents),
       |w AS (
       |  SELECT doc_id, n_chars, vocab,

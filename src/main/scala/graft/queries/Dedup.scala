@@ -291,15 +291,10 @@ object Dedup {
     q22Cached(s, dir).orderBy(col("doc_a"), col("doc_b"))
 
   /** DuckDB fragment: distinct (doc_id, shingle) pairs + per-doc size. */
-  private val sqlShingles: String =
-    """w AS (
-      |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, s FROM (
-      |    SELECT doc_id, unnest(CASE WHEN len(w) >= 3
-      |      THEN list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))
-      |      ELSE [] END) AS s
-      |    FROM w)),
+  private def sqlShingles: String =
+    s"""w AS (
+      |  SELECT doc_id, ${wordsSql("text")} AS w FROM documents),
+      |${shingleSetSql("sh", "doc_id", 3, "w")},
       |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id)""".stripMargin
 
   val q22Sql: String =
@@ -412,7 +407,7 @@ object Dedup {
        |  SELECT doc_id, sh, CAST(len(sh) AS BIGINT) AS n,
        |   list_transform(range(0, $MinHashK), j ->
        |     list_min(list_transform(sh, s ->
-       |       (($aList)[j + 1] * CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT)
+       |       (($aList)[j + 1] * ${hash32Sql("s")}
        |        + ($bList)[j + 1]) % $MinHashPrime))) AS sig
        |  FROM docs),
        |bands AS (
@@ -642,7 +637,7 @@ object Dedup {
   val q159Sql: String = {
     val L = DupSpanLen
     s"""WITH w AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents),
+       |  SELECT doc_id, ${wordsSql("text")} AS w FROM documents),
        |grams AS (
        |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
        |   array_to_string(w[i:i+${L - 1}], ' ') AS g
@@ -768,8 +763,8 @@ object Dedup {
     val mask = (1L << SimHashBandBits) - 1
     s"""WITH t AS (
        |  SELECT doc_id,
-       |   list_transform(regexp_split_to_array(trim(text), '\\s+'),
-       |     x -> CAST(concat('0x', substr(md5(x), 1, 15)) AS BIGINT) % ${1L << SimHashBits}) AS hs
+       |   list_transform(${wordsSql("text")},
+       |     x -> ${hash60Sql("x")} % ${1L << SimHashBits}) AS hs
        |  FROM documents),
        |sigs AS (
        |  SELECT doc_id,
@@ -1572,7 +1567,7 @@ object Dedup {
   val q166Sql: String =
     s"""WITH p AS (
        |  SELECT p_partkey, p_name, p_size,
-       |   list_extract(regexp_split_to_array(trim(p_name), '\\s+'), -1) AS block
+       |   list_extract(${wordsSql("p_name")}, -1) AS block
        |  FROM part),
        |f AS (
        |  SELECT block, p_size AS sz, p_name,
@@ -1638,8 +1633,8 @@ object Dedup {
   val q167Sql: String =
     s"""WITH p AS (
        |  SELECT p_partkey, p_name, p_size,
-       |   list_extract(regexp_split_to_array(trim(p_name), '\\s+'), 1) AS adj,
-       |   list_extract(regexp_split_to_array(trim(p_name), '\\s+'), -1) AS noun
+       |   list_extract(${wordsSql("p_name")}, 1) AS adj,
+       |   list_extract(${wordsSql("p_name")}, -1) AS noun
        |  FROM part),
        |f AS (
        |  SELECT adj, noun, p_size AS sz, p_name, CAST(count(*) AS BIGINT) AS members

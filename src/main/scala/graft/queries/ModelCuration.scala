@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
-import graft.functions.TextFns.{hash32, qualityScore, qualitySqlExpr, words}
+import graft.functions.TextFns.{hash32, hash32Sql, qualityScore, qualitySqlExpr, words, wordsSql}
 
 /** Model-based curation — the two trained-model stages a production
   * pipeline runs after the heuristic filters (r17 verdict asks #2/#3):
@@ -265,7 +265,7 @@ object ModelCuration {
          |  FROM $prev w LEFT JOIN g$i g USING (b) CROSS JOIN nn)""".stripMargin
     }
     s"""ww AS MATERIALIZED (
-       |  SELECT doc_id, text, regexp_split_to_array(trim(text), '\\s+') AS w
+       |  SELECT doc_id, text, ${wordsSql("text")} AS w
        |  FROM documents),
        |lab AS MATERIALIZED (
        |  SELECT doc_id,
@@ -274,7 +274,7 @@ object ModelCuration {
        |tok AS MATERIALIZED (SELECT doc_id, unnest(w) AS t FROM ww),
        |bow AS MATERIALIZED (
        |  SELECT doc_id,
-       |   CAST(concat('0x', substr(md5(t), 1, 8)) AS BIGINT) % $QfBuckets AS b,
+       |   ${hash32Sql("t")} % $QfBuckets AS b,
        |   CAST(count(*) AS BIGINT) AS x
        |  FROM tok GROUP BY 1, 2),
        |eng AS MATERIALIZED (
@@ -381,12 +381,12 @@ object ModelCuration {
 
   val q202Sql: String =
     s"""WITH ww AS (
-       |  SELECT doc_id, lang, regexp_split_to_array(trim(text), '\\s+') AS w
+       |  SELECT doc_id, lang, ${wordsSql("text")} AS w
        |  FROM documents),
        |tok AS (SELECT doc_id, lang, unnest(w) AS t FROM ww),
        |x AS (
        |  SELECT doc_id, lang,
-       |   CAST(concat('0x', substr(md5(t), 1, 8)) AS BIGINT) % $DsBuckets AS b,
+       |   ${hash32Sql("t")} % $DsBuckets AS b,
        |   CAST(count(*) AS BIGINT) AS c
        |  FROM tok GROUP BY 1, 2, 3),
        |raw AS (SELECT b, CAST(sum(c) AS BIGINT) AS cr FROM x GROUP BY b),
@@ -546,12 +546,12 @@ object ModelCuration {
          |  FROM u$i u CROSS JOIN t$i t CROSS JOIN kk)""".stripMargin
     }
     s"""WITH ww AS (
-       |  SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS w
+       |  SELECT doc_id, source, ${wordsSql("text")} AS w
        |  FROM documents),
        |tok AS (SELECT source, unnest(w) AS t FROM ww),
        |cc AS (
        |  SELECT source,
-       |   CAST(concat('0x', substr(md5(t), 1, 8)) AS BIGINT) % $DmBuckets AS b,
+       |   ${hash32Sql("t")} % $DmBuckets AS b,
        |   CAST(count(*) AS BIGINT) AS c
        |  FROM tok GROUP BY 1, 2),
        |srcs AS (SELECT DISTINCT source FROM documents),

@@ -180,7 +180,7 @@ object Retrieval {
 
   val q164Sql: String =
     s"""WITH d AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ww FROM documents),
+       |  SELECT doc_id, ${wordsSql("text")} AS ww FROM documents),
        |tok AS (SELECT doc_id, unnest(ww) AS term FROM d),
        |wc AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2),
        |dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM wc GROUP BY term),
@@ -451,11 +451,8 @@ object Retrieval {
     * oracle can never drift from the q170/q171/q172 family's arithmetic.
     */
   private def hybridCtesWith(qSelect: String): String = {
-    def fold(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |     list_transform(range(1, ${Similarity.AnnDims + 1}), i -> $a[i] * $b[i])), (x, y) -> x + y)""".stripMargin
     s"""d AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ww FROM documents),
+       |  SELECT doc_id, ${wordsSql("text")} AS ww FROM documents),
        |tok AS (SELECT doc_id, unnest(ww) AS term FROM d),
        |wc AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2),
        |dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM wc GROUP BY term),
@@ -488,17 +485,10 @@ object Retrieval {
        |   row_number() OVER (PARTITION BY query_id
        |     ORDER BY CAST(score_dec AS DOUBLE) DESC, doc_id) AS rnk
        |  FROM perdoc),
-       |e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-       |  FROM e),
+       |${Similarity.sqlVecs},
        |sem0 AS (
        |  SELECT q.query_id, b.vec_id AS doc_id,
-       |   ROUND(${fold("a.v", "b.v")} / (a.norm * b.norm), 6) AS sim
+       |   ROUND(${Similarity.sqlDot("a.v", "b.v")} / (a.norm * b.norm), 6) AS sim
        |  FROM q JOIN n a ON a.vec_id = q.query_id
        |  JOIN n b ON b.vec_id <> q.query_id),
        |sem AS (

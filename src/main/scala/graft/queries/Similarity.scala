@@ -35,12 +35,46 @@ object Similarity {
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("norm", sqrt(dotFold(col("v"), col("v"))))
 
+  /** DuckDB twin of [[vecs]]: CTE `e` holds each vector widened to the
+    * DOUBLE list `v`, CTE `n` adds its L2 `norm`. Place inside a `WITH`. */
+  private[graft] def sqlVecs: String =
+    s"""e AS (
+       |  SELECT vec_id, $sqlWiden AS v
+       |  FROM embeddings),
+       |$sqlNormCte""".stripMargin
+
+  /** DuckDB twin of [[vecs]]' widening of `embedding` to doubles. */
+  private[graft] def sqlWiden: String = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
+
+  /** CTE `n`: CTE `e`'s (vec_id, v) rows with their L2 `norm`. */
+  private def sqlNormCte: String =
+    s"""n AS (
+       |  SELECT vec_id, v,
+       |   ${sqlNorm("v")} AS norm
+       |  FROM e)""".stripMargin
+
+  /** DuckDB twin of `sqrt(dotFold(v, v))`: the L2 norm of a DOUBLE list. */
+  private def sqlNorm(v: String): String =
+    s"""sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
+       |     list_transform($v, x -> x * x)), (a, b) -> a + b))""".stripMargin
+
   /** Sequential-fold dot product — the codegen'd [[graft.functions
     * .DotFold]] expression (bit-identical to the interpreted
     * aggregate-over-zip_with it replaced, ~10× cheaper on the O(n²) pair
     * stream).
     */
   private def dot(a: Column, b: Column): Column = dotFold(a, b)
+
+  /** DuckDB twin of [[dot]] over two [[AnnDims]]-long lists: the same
+    * left fold from 0.0, so both engines sum in one order. */
+  private[graft] def sqlDot(a: String, b: String): String =
+    sqlFold(s"list_transform(range(1, ${AnnDims + 1}), i -> $a[i] * $b[i])")
+
+  /** The left fold 0.0 + t1 + t2 + … of a DOUBLE list `terms`, in
+    * [[graft.functions.DotFold]]'s order. */
+  private[graft] def sqlFold(terms: String): String =
+    s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
+       |     $terms), (x, y) -> x + y)""".stripMargin
 
   /** q25: exact cosine top-k (k=5) for every vector — the brute-force
     * baseline: an O(n²) pairwise join scored with a fold, then a
@@ -72,18 +106,10 @@ object Similarity {
   }
 
   val q25Sql: String =
-    """WITH e AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |  FROM embeddings),
-      |n AS (
-      |  SELECT vec_id, v,
-      |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-      |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-      |  FROM e),
+    s"""WITH $sqlVecs,
       |p AS (
       |  SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-      |   ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-      |       list_transform(range(1, 65), i -> a.v[i] * b.v[i])), (x, y) -> x + y)
+      |   ROUND(${sqlDot("a.v", "b.v")}
       |     / (a.norm * b.norm), 6) AS sim
       |  FROM n a, n b WHERE a.vec_id <> b.vec_id),
       |r AS (
@@ -93,20 +119,25 @@ object Similarity {
       |SELECT vec_id, neighbor_id, sim, rnk FROM r WHERE rnk <= 5
       |ORDER BY vec_id, rnk""".stripMargin
 
+  // Literal constants, inlined where read: the oracle vals above reach
+  // them through the SQL fragment defs while the object is initializing,
+  // when a plain val here would still read 0.
   /** Hyperplane count for the LSH signature (2^8 = 256 buckets). */
-  val AnnPlanes: Int = 8
-  val AnnDims: Int = 64
+  final val AnnPlanes = 8
+  final val AnnDims = 64
+
+  /** ±1 from the parity of the last md5 byte of `s`: the seed of every
+    * hyperplane coefficient ([[PlaneCoeffs]], [[ndPlaneCoeffs]]). */
+  private def md5Parity(s: String): Long = {
+    val d = MessageDigest.getInstance("MD5").digest(s.getBytes(StandardCharsets.UTF_8))
+    if ((d(15) & 1) == 1) 1L else -1L
+  }
 
   /** Deterministic ±1 hyperplane coefficients from md5 parity of
     * "p{plane}d{dim}" — reproducible literals shared with the oracle SQL.
     */
-  val PlaneCoeffs: Seq[Seq[Long]] = {
-    def parity(s: String): Long = {
-      val d = MessageDigest.getInstance("MD5").digest(s.getBytes(StandardCharsets.UTF_8))
-      if ((d(15) & 1) == 1) 1L else -1L
-    }
-    (0 until AnnPlanes).map(p => (0 until AnnDims).map(d => parity(s"p${p}d$d")))
-  }
+  val PlaneCoeffs: Seq[Seq[Long]] =
+    (0 until AnnPlanes).map(p => (0 until AnnDims).map(d => md5Parity(s"p${p}d$d")))
 
   /** q26: LSH-bucketed approximate nearest neighbors — the scale path.
     * Each vector gets an 8-bit signature (sign of the dot product with 8
@@ -129,6 +160,17 @@ object Similarity {
       (acc, p) => acc + when(dot(col("v"), element_at(planesLit, p + 1)) > 0,
         element_at(pow2, p + 1)).otherwise(0L))
     vecs(s, dir).withColumn("bucket", sig)
+  }
+
+  /** DuckDB twin of [[lshBucketsFresh]]' `bucket` over a row's `v`: the
+    * sign bits of the dots with the [[PlaneCoeffs]] literal, summed. */
+  private def sqlLshBucket: String = {
+    val planes = PlaneCoeffs.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
+    val dotPlane = sqlFold(
+      s"list_transform(range(1, ${AnnDims + 1}), i -> CAST((($planes)[p + 1])[i] AS DOUBLE) * v[i])")
+    s"""CAST(list_sum(list_transform(range(0, $AnnPlanes), p ->
+       |     CASE WHEN $dotPlane > 0
+       |     THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)) AS BIGINT)""".stripMargin
   }
 
   /** Memoized + materialized signatures, one build per (session, dir)
@@ -221,23 +263,11 @@ object Similarity {
       .orderBy(col("vec_id"), col("rnk"))
   }
 
-  val q160Sql: String = {
-    val planes = PlaneCoeffs.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-       |  FROM e),
+  val q160Sql: String =
+    s"""WITH $sqlVecs,
        |sg AS (
        |  SELECT vec_id, v, norm,
-       |   CAST(list_sum(list_transform(range(0, $AnnPlanes), p ->
-       |     CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |            list_transform(range(1, ${AnnDims + 1}), i ->
-       |              CAST((($planes)[p + 1])[i] AS DOUBLE) * v[i])), (x, y) -> x + y) > 0
-       |     THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)) AS BIGINT) AS bucket
+       |   $sqlLshBucket AS bucket
        |  FROM n),
        |pr AS (
        |  SELECT vec_id, v, norm,
@@ -246,8 +276,7 @@ object Similarity {
        |  FROM sg, unnest(range(0, ${AnnPlanes + 1})) AS u(i)),
        |p AS (
        |  SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-       |   ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |       list_transform(range(1, ${AnnDims + 1}), i -> a.v[i] * b.v[i])), (x, y) -> x + y)
+       |   ROUND(${sqlDot("a.v", "b.v")}
        |     / (a.norm * b.norm), 6) AS sim
        |  FROM pr a JOIN sg b ON a.probe = b.bucket AND a.vec_id <> b.vec_id),
        |r AS (
@@ -256,7 +285,6 @@ object Similarity {
        |  FROM p)
        |SELECT vec_id, neighbor_id, sim, rnk FROM r WHERE rnk <= 3
        |ORDER BY vec_id, rnk""".stripMargin
-  }
 
   /** Cosine threshold shared by q40 (brute-force) and q67 (LSH-bucketed).
     * Corpus-calibrated: this synthetic corpus's max pairwise cosine is
@@ -456,14 +484,9 @@ object Similarity {
     * coefficients depend only on (b, j, d), so lower rungs' planes are a
     * prefix of higher rungs' — the rung never reshuffles geometry.
     */
-  def ndPlaneCoeffs(bands: Int, planes: Int): Seq[Seq[Seq[Long]]] = {
-    def parity(s: String): Long = {
-      val d = MessageDigest.getInstance("MD5").digest(s.getBytes(StandardCharsets.UTF_8))
-      if ((d(15) & 1) == 1) 1L else -1L
-    }
+  def ndPlaneCoeffs(bands: Int, planes: Int): Seq[Seq[Seq[Long]]] =
     (0 until bands).map(b => (0 until planes).map(p =>
-      (0 until AnnDims).map(d => parity(s"nd${b}p${p}d$d"))))
-  }
+      (0 until AnnDims).map(d => md5Parity(s"nd${b}p${p}d$d"))))
 
   /** The banded-LSH near-dup core over a prepared (vec_id, v, norm)
     * frame: banded random-hyperplane LSH produces candidate pairs via a
@@ -524,6 +547,31 @@ object Similarity {
     e.select(col("vec_id"), explode(bandStructs).as("bs"))
       .select(col("vec_id"), col("bs.band").as("band"), col("bs.band_sig").as("band_sig"))
   }
+
+  /** DuckDB twin of [[bandSigs]] then [[bandPairs]]`.distinct()`: CTE
+    * `coef` rebuilds [[ndPlaneCoeffs]] from md5 for the (np, nb) row of
+    * CTE `geom`, `sigs` signs CTE `n`'s vectors, `cand` holds the distinct
+    * candidate pairs. Place inside a `WITH`. */
+  private def sqlBandCandCtes: String =
+    s"""coef AS (
+       |  SELECT b, j, list(CASE WHEN CAST(concat('0x',
+       |      substr(md5('nd' || b || 'p' || j || 'd' || d), 32, 1)) AS BIGINT) % 2 = 1
+       |    THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END ORDER BY d) AS w
+       |  FROM geom,
+       |   unnest(range(0, nb)) AS ub(b),
+       |   unnest(range(0, np)) AS uj(j),
+       |   unnest(range(0, $AnnDims)) AS ud(d)
+       |  GROUP BY b, j),
+       |sigs AS (
+       |  SELECT n.vec_id, c.b AS band,
+       |   CAST(sum(CASE WHEN ${sqlDot("c.w", "n.v")} > 0
+       |     THEN (CAST(1 AS BIGINT) << c.j) ELSE 0 END) AS BIGINT) AS band_sig
+       |  FROM n CROSS JOIN coef c
+       |  GROUP BY n.vec_id, c.b),
+       |cand AS (
+       |  SELECT DISTINCT a.vec_id AS keep_id, b.vec_id AS drop_id
+       |  FROM sigs a JOIN sigs b
+       |    ON a.band = b.band AND a.band_sig = b.band_sig AND a.vec_id < b.vec_id)""".stripMargin
 
   /** The banded candidate join: every (keep_id < drop_id) vector pair
     * sharing a (band, band_sig) bucket of `sigs` ([[bandSigs]]' format),
@@ -617,21 +665,12 @@ object Similarity {
   }
 
   val q40Sql: String =
-    """WITH e AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |  FROM embeddings),
-      |n AS (
-      |  SELECT vec_id, v,
-      |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-      |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-      |  FROM e)
+    s"""WITH $sqlVecs
       |SELECT a.vec_id AS keep_id, b.vec_id AS drop_id,
-      | ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-      |     list_transform(range(1, 65), i -> a.v[i] * b.v[i])), (x, y) -> x + y)
+      | ROUND(${sqlDot("a.v", "b.v")}
       |   / (a.norm * b.norm), 6) AS sim
       |FROM n a JOIN n b ON a.vec_id < b.vec_id
-      |WHERE list_reduce(list_prepend(CAST(0 AS DOUBLE),
-      |     list_transform(range(1, 65), i -> a.v[i] * b.v[i])), (x, y) -> x + y)
+      |WHERE ${sqlDot("a.v", "b.v")}
       |   / (a.norm * b.norm) >= 0.45
       |ORDER BY keep_id, drop_id""".stripMargin
 
@@ -667,52 +706,24 @@ object Similarity {
   private[graft] def ndPairsSqlCtes(threshold: Double, crossover: Long): String = {
     val ladder = (3 to NdMaxPlanes)
       .map(p => s"(${p}, ${ndBandsForAt(p, threshold)}, ${NdTargetOcc << p})").mkString(", ")
-    def fold(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |     list_transform(range(1, ${AnnDims + 1}), i -> $a[i] * $b[i])), (x, y) -> x + y)""".stripMargin
-    s"""e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-       |  FROM e),
+    s"""$sqlVecs,
        |cnt AS (SELECT CAST(count(*) AS BIGINT) AS c FROM embeddings),
        |brute AS (
        |  SELECT a.vec_id AS keep_id, b.vec_id AS drop_id,
-       |   ROUND(${fold("a.v", "b.v")} / (a.norm * b.norm), 6) AS sim
+       |   ROUND(${sqlDot("a.v", "b.v")} / (a.norm * b.norm), 6) AS sim
        |  FROM n a JOIN n b ON a.vec_id < b.vec_id, cnt
        |  WHERE c <= $crossover
-       |   AND ${fold("a.v", "b.v")} / (a.norm * b.norm) >= $threshold),
+       |   AND ${sqlDot("a.v", "b.v")} / (a.norm * b.norm) >= $threshold),
        |geom AS (
        |  SELECT np, nb FROM (VALUES $ladder) l(np, nb, hi), cnt
        |  WHERE c > $crossover AND (c <= hi OR np = $NdMaxPlanes)
        |  ORDER BY np LIMIT 1),
-       |coef AS (
-       |  SELECT b, j, list(CASE WHEN CAST(concat('0x',
-       |      substr(md5('nd' || b || 'p' || j || 'd' || d), 32, 1)) AS BIGINT) % 2 = 1
-       |    THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END ORDER BY d) AS w
-       |  FROM geom,
-       |   unnest(range(0, nb)) AS ub(b),
-       |   unnest(range(0, np)) AS uj(j),
-       |   unnest(range(0, $AnnDims)) AS ud(d)
-       |  GROUP BY b, j),
-       |sigs AS (
-       |  SELECT n.vec_id, c.b AS band,
-       |   CAST(sum(CASE WHEN ${fold("c.w", "n.v")} > 0
-       |     THEN (CAST(1 AS BIGINT) << c.j) ELSE 0 END) AS BIGINT) AS band_sig
-       |  FROM n CROSS JOIN coef c
-       |  GROUP BY n.vec_id, c.b),
-       |cand AS (
-       |  SELECT DISTINCT a.vec_id AS keep_id, b.vec_id AS drop_id
-       |  FROM sigs a JOIN sigs b
-       |    ON a.band = b.band AND a.band_sig = b.band_sig AND a.vec_id < b.vec_id),
+       |$sqlBandCandCtes,
        |banded AS (
        |  SELECT keep_id, drop_id,
-       |   ROUND(${fold("ka.v", "kb.v")} / (ka.norm * kb.norm), 6) AS sim
+       |   ROUND(${sqlDot("ka.v", "kb.v")} / (ka.norm * kb.norm), 6) AS sim
        |  FROM cand JOIN n ka ON keep_id = ka.vec_id JOIN n kb ON drop_id = kb.vec_id
-       |  WHERE ${fold("ka.v", "kb.v")} / (ka.norm * kb.norm) >= $threshold)""".stripMargin
+       |  WHERE ${sqlDot("ka.v", "kb.v")} / (ka.norm * kb.norm) >= $threshold)""".stripMargin
   }
 
   // ---- q161: production-threshold near-dup (the banded-beats-brute
@@ -835,11 +846,8 @@ object Similarity {
   private def prodBandedSql(cntWhere: String): String = {
     val ladder = (NdProdMinPlanes to NdMaxPlanes)
       .map(p => s"(${p}, ${prodBandsFor(p)}, ${NdTargetOcc << p})").mkString(", ")
-    def fold(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |     list_transform(range(1, ${AnnDims + 1}), i -> $a[i] * $b[i])), (x, y) -> x + y)""".stripMargin
     s"""WITH e0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+       |  SELECT vec_id, $sqlWiden AS v
        |  FROM embeddings),
        |sh AS (SELECT CAST(max(vec_id) + 1 AS BIGINT) AS m FROM embeddings),
        |jit AS (
@@ -851,38 +859,16 @@ object Similarity {
        |        THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END)) AS jv
        |    FROM e0 WHERE vec_id % 8 = 0) j),
        |e AS (SELECT vec_id, v FROM e0 UNION ALL SELECT vec_id, v FROM jit),
-       |n AS (
-       |  SELECT vec_id, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-       |  FROM e),
+       |$sqlNormCte,
        |cnt AS (SELECT CAST(count(*) AS BIGINT) AS c FROM e$cntWhere),
        |geom AS (
        |  SELECT np, nb FROM (VALUES $ladder) l(np, nb, hi), cnt
        |  WHERE c <= hi OR np = $NdMaxPlanes ORDER BY np LIMIT 1),
-       |coef AS (
-       |  SELECT b, j, list(CASE WHEN CAST(concat('0x',
-       |      substr(md5('nd' || b || 'p' || j || 'd' || d), 32, 1)) AS BIGINT) % 2 = 1
-       |    THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END ORDER BY d) AS w
-       |  FROM geom,
-       |   unnest(range(0, nb)) AS ub(b),
-       |   unnest(range(0, np)) AS uj(j),
-       |   unnest(range(0, $AnnDims)) AS ud(d)
-       |  GROUP BY b, j),
-       |sigs AS (
-       |  SELECT n.vec_id, c.b AS band,
-       |   CAST(sum(CASE WHEN ${fold("c.w", "n.v")} > 0
-       |     THEN (CAST(1 AS BIGINT) << c.j) ELSE 0 END) AS BIGINT) AS band_sig
-       |  FROM n CROSS JOIN coef c
-       |  GROUP BY n.vec_id, c.b),
-       |cand AS (
-       |  SELECT DISTINCT a.vec_id AS keep_id, b.vec_id AS drop_id
-       |  FROM sigs a JOIN sigs b
-       |    ON a.band = b.band AND a.band_sig = b.band_sig AND a.vec_id < b.vec_id)
+       |$sqlBandCandCtes
        |SELECT keep_id, drop_id,
-       | ROUND(${fold("ka.v", "kb.v")} / (ka.norm * kb.norm), 6) AS sim
+       | ROUND(${sqlDot("ka.v", "kb.v")} / (ka.norm * kb.norm), 6) AS sim
        |FROM cand JOIN n ka ON keep_id = ka.vec_id JOIN n kb ON drop_id = kb.vec_id
-       |WHERE ${fold("ka.v", "kb.v")} / (ka.norm * kb.norm) >= $ProdNearDupThreshold
+       |WHERE ${sqlDot("ka.v", "kb.v")} / (ka.norm * kb.norm) >= $ProdNearDupThreshold
        |ORDER BY keep_id, drop_id""".stripMargin
   }
 
@@ -1048,12 +1034,9 @@ object Similarity {
 
   val q195Sql: String = {
     val qs = Clustering.PcaQuantScale
-    def fold(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |     list_transform(range(1, ${AnnDims + 1}), i -> $a[i] * $b[i])), (x, y) -> x + y)""".stripMargin
     s"""WITH e AS (
        |  SELECT label, vec_id,
-       |   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
+       |   $sqlWiden AS v,
        |   CASE WHEN vec_id % 10 = 3 THEN 'delta' ELSE 'base' END AS side
        |  FROM embeddings),
        |x AS (
@@ -1073,14 +1056,14 @@ object Similarity {
        |b AS (SELECT label, n AS n_base, m AS mb FROM means WHERE side = 'base'),
        |d2 AS (SELECT label, n AS n_delta, m AS md FROM means WHERE side = 'delta')
        |SELECT b.label, b.n_base, d2.n_delta,
-       | ROUND(${fold("mb", "md")}
-       |   / (sqrt(${fold("mb", "mb")}) * sqrt(${fold("md", "md")})), 6) AS drift_cos
+       | ROUND(${sqlDot("mb", "md")}
+       |   / (sqrt(${sqlDot("mb", "mb")}) * sqrt(${sqlDot("md", "md")})), 6) AS drift_cos
        |FROM b JOIN d2 ON b.label = d2.label
        |ORDER BY b.label""".stripMargin
   }
 
   /** IVF cell count (√n-ish for the test corpora). */
-  val IvfCells: Int = 16
+  final val IvfCells = 16
 
   /** q39: IVF-style ANN — the second scale path next to LSH (q26).
     * Structure matches production IVF exactly: a small centroid table is
@@ -1096,8 +1079,8 @@ object Similarity {
   /** Nearest-centroid assignment — one map-side pass of the BROADCAST
     * centroid table (c_id, cv, cnorm) over the vector frame (vec_id, v,
     * norm); 6dp-rounded cosine, ties to the lowest c_id. ONE copy shared
-    * by q39's probe and q101's per-round training + trained probe, so the
-    * two queries' assignment semantics can never drift apart.
+    * by q39's probe, q85's Lloyd step and q101's per-round training +
+    * trained probe, so their assignment semantics can never drift apart.
     */
   private def assignToCells(e: DataFrame, cents: DataFrame): DataFrame = {
     val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("cscore").desc, col("c_id"))
@@ -1107,6 +1090,32 @@ object Similarity {
       .filter(col("crn") === 1)
       .select(col("vec_id"), col("v"), col("norm"), col("c_id").as("cell"))
   }
+
+  /** Nearest-centroid assignment CTE (vec_id, v, norm, cell) against a
+    * centroid CTE `cents` — the SQL twin of [[assignToCells]]; shared by
+    * q101's unrolled training and q155's candidate counting. Assumes a
+    * CTE `n` (vec_id, v, norm) is in scope. */
+  private def sqlAssignCte(name: String, cents: String,
+      materialized: Boolean = false): String =
+    s"""$name AS ${if (materialized) "MATERIALIZED " else ""}(
+       |  SELECT vec_id, v, norm, cell FROM (
+       |    SELECT n.vec_id, n.v, n.norm, c.c_id AS cell,
+       |     row_number() OVER (PARTITION BY n.vec_id ORDER BY
+       |       ROUND(${sqlDot("n.v", "c.cv")} / (n.norm * c.cnorm), 6) DESC, c.c_id) AS crn
+       |    FROM n CROSS JOIN $cents c) WHERE crn = 1)""".stripMargin
+
+  /** The IVF seed centroids (c_id, cv, cnorm): the [[IvfCells]]
+    * lowest-vec_id vectors of a (vec_id, v, norm) frame — the seed rule of
+    * q39, q85, q101 and every consumer of their cells. */
+  private def seedCells(e: DataFrame): DataFrame =
+    e.orderBy(col("vec_id")).limit(IvfCells)
+      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("norm").as("cnorm"))
+
+  /** DuckDB twin of [[seedCells]] over CTE `n`, as CTE `name`. */
+  private def sqlSeedCells(name: String): String =
+    s"""$name AS (
+       |  SELECT vec_id AS c_id, v AS cv, norm AS cnorm FROM n
+       |  ORDER BY vec_id LIMIT $IvfCells)""".stripMargin
 
   /** IVF probe over an assignment frame: per-cell self-join (shuffle
     * equi-join on `cell`), 6dp cosine, bounded top-3 via the TopKPairs
@@ -1130,35 +1139,23 @@ object Similarity {
 
   def q39AnnIvf(s: SparkSession, dir: String): DataFrame = {
     val e = vecs(s, dir)
-    val cents = e.orderBy(col("vec_id")).limit(IvfCells)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("norm").as("cnorm"))
+    val cents = seedCells(e)
     probeCells(assignToCells(e, cents))
   }
 
   val q39Sql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-       |  FROM e),
-       |cents AS (
-       |  SELECT vec_id AS c_id, v AS cv, norm AS cnorm FROM n
-       |  ORDER BY vec_id LIMIT $IvfCells),
+    s"""WITH $sqlVecs,
+       |${sqlSeedCells("cents")},
        |assign AS (
        |  SELECT vec_id, v, norm, c_id AS cell,
        |   row_number() OVER (PARTITION BY vec_id ORDER BY
-       |     ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |         list_transform(range(1, ${AnnDims + 1}), i -> n.v[i] * cents.cv[i])), (x, y) -> x + y)
+       |     ROUND(${sqlDot("n.v", "cents.cv")}
        |       / (n.norm * cents.cnorm), 6) DESC, c_id) AS crn
        |  FROM n CROSS JOIN cents),
        |cells AS (SELECT vec_id, v, norm, cell FROM assign WHERE crn = 1),
        |p AS (
        |  SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id, a.cell AS cell,
-       |   ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |       list_transform(range(1, ${AnnDims + 1}), i -> a.v[i] * b.v[i])), (x, y) -> x + y)
+       |   ROUND(${sqlDot("a.v", "b.v")}
        |     / (a.norm * b.norm), 6) AS sim
        |  FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id <> b.vec_id),
        |r AS (
@@ -1168,28 +1165,15 @@ object Similarity {
        |SELECT vec_id, neighbor_id, cell, sim, rnk FROM r WHERE rnk <= 3
        |ORDER BY vec_id, rnk""".stripMargin
 
-  val q26Sql: String = {
-    val planes = PlaneCoeffs.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-       |  FROM e),
+  val q26Sql: String =
+    s"""WITH $sqlVecs,
        |sg AS (
        |  SELECT vec_id, v, norm,
-       |   CAST(list_sum(list_transform(range(0, $AnnPlanes), p ->
-       |     CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |            list_transform(range(1, ${AnnDims + 1}), i ->
-       |              CAST((($planes)[p + 1])[i] AS DOUBLE) * v[i])), (x, y) -> x + y) > 0
-       |     THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)) AS BIGINT) AS bucket
+       |   $sqlLshBucket AS bucket
        |  FROM n),
        |p AS (
        |  SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id, a.bucket AS bucket,
-       |   ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |       list_transform(range(1, ${AnnDims + 1}), i -> a.v[i] * b.v[i])), (x, y) -> x + y)
+       |   ROUND(${sqlDot("a.v", "b.v")}
        |     / (a.norm * b.norm), 6) AS sim
        |  FROM sg a JOIN sg b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
        |r AS (
@@ -1198,7 +1182,6 @@ object Similarity {
        |  FROM p)
        |SELECT vec_id, neighbor_id, bucket, sim, rnk FROM r WHERE rnk <= 3
        |ORDER BY vec_id, rnk""".stripMargin
-  }
 
   /** q61: int8 max-abs quantization of the embedding column — the
     * storage/IO lever for petabyte embedding tables (4× smaller than
@@ -1221,8 +1204,8 @@ object Similarity {
   }
 
   val q61Sql: String =
-    """WITH e AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+    s"""WITH e AS (
+      |  SELECT vec_id, $sqlWiden AS v
       |  FROM embeddings),
       |sc AS (
       |  SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS scale FROM e)
@@ -1254,15 +1237,8 @@ object Similarity {
     */
   def q85KmeansIteration(s: SparkSession, dir: String): DataFrame = {
     val e = vecs(s, dir)
-    val cents = e.orderBy(col("vec_id")).limit(IvfCells)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("norm").as("cnorm"))
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("cscore").desc, col("c_id"))
-    val assigned = e.crossJoin(broadcast(cents))
-      .withColumn("cscore", round(dot(col("v"), col("cv")) / (col("norm") * col("cnorm")), 6))
-      .withColumn("crn", row_number().over(wAssign))
-      .filter(col("crn") === 1)
-      .select(col("vec_id"), col("v"), col("c_id").as("cell"))
-    val dims = assigned.select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
+    val cents = seedCells(e)
+    val dims = assignToCells(e, cents).select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy(col("cell"), col("pos"))
       .agg(round(avg(col("x")), 6).as("c_val"), count(lit(1)).as("n_members"))
       .localCheckpoint()
@@ -1279,22 +1255,12 @@ object Similarity {
   }
 
   val q85Sql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-       |  FROM e),
-       |cents AS (
-       |  SELECT vec_id AS c_id, v AS cv, norm AS cnorm FROM n
-       |  ORDER BY vec_id LIMIT $IvfCells),
+    s"""WITH $sqlVecs,
+       |${sqlSeedCells("cents")},
        |assign AS (
        |  SELECT vec_id, v, c_id AS cell,
        |   row_number() OVER (PARTITION BY vec_id ORDER BY
-       |     ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |         list_transform(range(1, ${AnnDims + 1}), i -> n.v[i] * cents.cv[i])), (x, y) -> x + y)
+       |     ROUND(${sqlDot("n.v", "cents.cv")}
        |       / (n.norm * cents.cnorm), 6) DESC, c_id) AS crn
        |  FROM n CROSS JOIN cents),
        |cells AS (SELECT vec_id, v, cell FROM assign WHERE crn = 1),
@@ -1309,10 +1275,8 @@ object Similarity {
        |nv AS (SELECT cell, list(c_val ORDER BY pos) AS nv FROM g GROUP BY cell),
        |sh AS (
        |  SELECT nv.cell AS cell, ROUND(
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(range(1, ${AnnDims + 1}), i -> nv.nv[i] * cents.cv[i])), (x, y) -> x + y)
-       |    / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |         list_transform(nv.nv, x -> x * x)), (a, b) -> a + b)) * cents.cnorm), 6)
+       |    ${sqlDot("nv.nv", "cents.cv")}
+       |    / (${sqlNorm("nv.nv")} * cents.cnorm), 6)
        |    AS cos_old_new
        |  FROM nv JOIN cents ON nv.cell = cents.c_id)
        |SELECT g.cell AS cell, n_members, cos_old_new, pos, c_val
@@ -1377,8 +1341,7 @@ object Similarity {
     // trained probe and the untrained yardstick can't drift apart
     def assign(cents: DataFrame): DataFrame = assignToCells(e, cents)
     // round-0 seeds: the K lowest-vec_id vectors (q39/q85's seed rule)
-    var cents = e.orderBy(col("vec_id")).limit(IvfCells)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("norm").as("cnorm"))
+    var cents = seedCells(e)
     var prev: Option[DataFrame] = None
     // the final iteration's checkpointed assignment: on the CONVERGED
     // exit it is exactly assign(cents) for the current centroids (the
@@ -1421,25 +1384,6 @@ object Similarity {
   def q101IvfTrained(s: SparkSession, dir: String): DataFrame =
     probeCells(trainedAssignment(s, dir))
 
-  /** The 64-dim sequential-fold dot product in DuckDB SQL — shared by
-    * every oracle CTE builder below. */
-  private def sqlDotL(a: String, b: String): String =
-    s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(range(1, ${AnnDims + 1}), i -> $a[i] * $b[i])), (x, y) -> x + y)""".stripMargin
-
-  /** Nearest-centroid assignment CTE (vec_id, v, norm, cell) against a
-    * centroid CTE `cents` — the SQL twin of [[assignToCells]]; shared by
-    * q101's unrolled training and q155's candidate counting. Assumes a
-    * CTE `n` (vec_id, v, norm) is in scope. */
-  private def sqlAssignCte(name: String, cents: String,
-      materialized: Boolean = false): String =
-    s"""$name AS ${if (materialized) "MATERIALIZED " else ""}(
-       |  SELECT vec_id, v, norm, cell FROM (
-       |    SELECT n.vec_id, n.v, n.norm, c.c_id AS cell,
-       |     row_number() OVER (PARTITION BY n.vec_id ORDER BY
-       |       ROUND(${sqlDotL("n.v", "c.cv")} / (n.norm * c.cnorm), 6) DESC, c.c_id) AS crn
-       |    FROM n CROSS JOIN $cents c) WHERE crn = 1)""".stripMargin
-
   /** The unrolled [[TrainRounds]] Lloyd rounds (a1/c1 … aN/cN CTE pairs)
     * — q101's training chain, reused verbatim by q155's oracle. */
   private def sqlTrainedRoundsCtes: String = {
@@ -1452,29 +1396,13 @@ object Similarity {
          |  SELECT cell, CAST(u.pos AS BIGINT) AS pos, ROUND(avg(u.x), 6) AS c_val
          |  FROM d$r GROUP BY cell, u.pos),
          |c$r AS (
-         |  SELECT c_id, cv, sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |    list_transform(cv, x -> x * x)), (a, b) -> a + b)) AS cnorm
+         |  SELECT c_id, cv, ${sqlNorm("cv")} AS cnorm
          |  FROM (SELECT cell AS c_id, list(c_val ORDER BY pos) AS cv
          |        FROM g$r GROUP BY cell) t$r)""".stripMargin
     (1 to TrainRounds)
       .map(r => sqlAssignCte(s"a$r", s"c${r - 1}") + ",\n" + rebuildCtes(r))
       .mkString(",\n")
   }
-
-  /** Shared `e`/`n`/`c0` head CTEs: widened vectors, norms, and the
-    * K-lowest-vec_id seed centroids (q39/q85/q101's seed rule). */
-  private def sqlVecHeadCtes: String =
-    s"""e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-       |  FROM e),
-       |c0 AS (
-       |  SELECT vec_id AS c_id, v AS cv, norm AS cnorm FROM n
-       |  ORDER BY vec_id LIMIT $IvfCells)""".stripMargin
 
   /** Oracle for q101: [[TrainRounds]] Lloyd rounds unrolled as CTE pairs
     * (aN = assignment against cN-1's centroids, cN = 6dp means + norm),
@@ -1483,12 +1411,13 @@ object Similarity {
     * [[q101IvfTrained]].
     */
   val q101Sql: String =
-    s"""WITH $sqlVecHeadCtes,
+    s"""WITH $sqlVecs,
+       |${sqlSeedCells("c0")},
        |$sqlTrainedRoundsCtes,
        |${sqlAssignCte("af", s"c$TrainRounds")},
        |p AS (
        |  SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id, a.cell AS cell,
-       |   ROUND(${sqlDotL("a.v", "b.v")} / (a.norm * b.norm), 6) AS sim
+       |   ROUND(${sqlDot("a.v", "b.v")} / (a.norm * b.norm), 6) AS sim
        |  FROM af a JOIN af b ON a.cell = b.cell AND a.vec_id <> b.vec_id),
        |r AS (
        |  SELECT vec_id, neighbor_id, cell, sim,
@@ -1521,6 +1450,10 @@ object Similarity {
     val diff = zip_with(a, b, (x, y) => x - y)
     dotFold(diff, diff)
   }
+
+  /** DuckDB twin of [[l2sq]] over two `dims`-long lists. */
+  private def sqlL2Sq(a: String, b: String, dims: Int): String =
+    sqlFold(s"list_transform(range(1, ${dims + 1}), i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))")
 
   /** q109: product-quantization ANN — encode every vector as [[PqM]]
     * one-byte codewords (nearest codebook centroid per subspace, squared
@@ -1598,14 +1531,10 @@ object Similarity {
   }
 
   val q109Sql: String = {
-    def l2(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(range(1, ${PqSubDims + 1}),
-         |        i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))), (x, y) -> x + y)""".stripMargin
     val adist = (1 to PqM)
       .map(m => s"dtm[$m][CAST(codes[$m] + 1 AS INT)]").mkString(" + ")
     s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+       |  SELECT vec_id, $sqlWiden AS v
        |  FROM embeddings),
        |sub AS (
        |  SELECT vec_id, u.m AS m, u.sv AS sv FROM (
@@ -1624,14 +1553,14 @@ object Similarity {
        |  SELECT vec_id, m, c_id AS code FROM (
        |    SELECT sub.vec_id, sub.m, cb.c_id,
        |      row_number() OVER (PARTITION BY sub.vec_id, sub.m
-       |        ORDER BY ROUND(${l2("sub.sv", "cb.cv")}, 6), cb.c_id) AS ern
+       |        ORDER BY ROUND(${sqlL2Sq("sub.sv", "cb.cv", PqSubDims)}, 6), cb.c_id) AS ern
        |    FROM sub JOIN cb ON sub.m = cb.m) WHERE ern = 1),
        |codes AS (
        |  SELECT vec_id, list(code ORDER BY m) AS codes FROM enc GROUP BY vec_id),
        |qs AS (SELECT vec_id FROM e ORDER BY vec_id LIMIT $PqQueries),
        |dt AS (
        |  SELECT sub.vec_id AS q_id, sub.m, cb.c_id,
-       |    CAST(round(${l2("sub.sv", "cb.cv")} * 1e6) AS BIGINT) AS qd2_u
+       |    CAST(round(${sqlL2Sq("sub.sv", "cb.cv", PqSubDims)} * 1e6) AS BIGINT) AS qd2_u
        |  FROM sub JOIN cb ON sub.m = cb.m
        |  WHERE sub.vec_id IN (SELECT vec_id FROM qs)),
        |dtr AS (
@@ -1709,8 +1638,7 @@ object Similarity {
     * q155's frontier report can drive it from its SHARED (checkpointed)
     * assignment instead of re-deriving the n×16 scoring. */
   private[graft] def ivfPqFrom(s: SparkSession, dir: String, cells: DataFrame): DataFrame = {
-    val cents = vecs(s, dir).orderBy(col("vec_id")).limit(IvfCells)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("norm").as("cnorm"))
+    val cents = seedCells(vecs(s, dir))
     // residual frame: r = v − centroid(cell), centroid fetched broadcast.
     // ONE checkpointed copy — the codebook seeds, the encode, and the
     // cell carry all read it, and without the checkpoint each reference
@@ -1783,27 +1711,12 @@ object Similarity {
     * arithmetic at every scale.
     */
   val q163Sql: String = {
-    def l2(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(range(1, ${PqSubDims + 1}),
-         |        i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))), (x, y) -> x + y)""".stripMargin
     def cos(av: String, an: String, bv: String, bn: String): String =
-      s"""ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(range(1, ${AnnDims + 1}), i -> $av[i] * $bv[i])),
-         |      (x, y) -> x + y) / ($an * $bn), 6)""".stripMargin
+      s"ROUND(${sqlDot(av, bv)} / ($an * $bn), 6)"
     val adist = (1 to PqM)
       .map(m => s"dtm[$m][CAST(codes[$m] + 1 AS INT)]").mkString(" + ")
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-       |  FROM e),
-       |cents AS (
-       |  SELECT vec_id AS c_id, v AS cv, norm AS cnorm FROM n
-       |  ORDER BY vec_id LIMIT $IvfCells),
+    s"""WITH $sqlVecs,
+       |${sqlSeedCells("cents")},
        |assign AS (
        |  SELECT vec_id, v, norm, c_id AS cell,
        |   row_number() OVER (PARTITION BY vec_id ORDER BY
@@ -1830,7 +1743,7 @@ object Similarity {
        |  SELECT vec_id, cell, m, c_id AS code FROM (
        |    SELECT rsub.vec_id, rsub.cell, rsub.m, rcb.c_id,
        |      row_number() OVER (PARTITION BY rsub.vec_id, rsub.m
-       |        ORDER BY ROUND(${l2("rsub.sv", "rcb.cv")}, 6), rcb.c_id) AS ern
+       |        ORDER BY ROUND(${sqlL2Sq("rsub.sv", "rcb.cv", PqSubDims)}, 6), rcb.c_id) AS ern
        |    FROM rsub JOIN rcb ON rsub.m = rcb.m) WHERE ern = 1),
        |codes AS (
        |  SELECT vec_id, any_value(cell) AS cell, list(code ORDER BY m) AS codes
@@ -1852,7 +1765,7 @@ object Similarity {
        |    FROM probes)),
        |dt AS (
        |  SELECT qsub.q_id, qsub.cell, qsub.m, rcb.c_id,
-       |    CAST(round(${l2("qsub.sv", "rcb.cv")} * 1e6) AS BIGINT) AS qd2_u
+       |    CAST(round(${sqlL2Sq("qsub.sv", "rcb.cv", PqSubDims)} * 1e6) AS BIGINT) AS qd2_u
        |  FROM qsub JOIN rcb ON qsub.m = rcb.m),
        |dtr AS (
        |  SELECT q_id, cell, m, list(qd2_u ORDER BY c_id) AS row_k
@@ -1879,8 +1792,7 @@ object Similarity {
   private[graft] val seededAssignment =
     new Dedup.Memo[DataFrame]("ivf_seeded_assign")((s, dir) => {
       val e = vecs(s, dir)
-      val cents = e.orderBy(col("vec_id")).limit(IvfCells)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("norm").as("cnorm"))
+      val cents = seedCells(e)
       // eager materialization: five queries consume this frame (q117's
       // self-join, q130, q163's IVFADC scan, q155's audit, the SemDeDup
       // spec) and each previously re-ran the corpus × centroid pass
@@ -1916,32 +1828,20 @@ object Similarity {
   }
 
   val q117Sql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-       |  FROM e),
-       |cents AS (
-       |  SELECT vec_id AS c_id, v AS cv, norm AS cnorm FROM n
-       |  ORDER BY vec_id LIMIT $IvfCells),
+    s"""WITH $sqlVecs,
+       |${sqlSeedCells("cents")},
        |assign AS (
        |  SELECT vec_id, v, norm, c_id AS cell,
        |   row_number() OVER (PARTITION BY vec_id ORDER BY
-       |     ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |         list_transform(range(1, ${AnnDims + 1}), i -> n.v[i] * cents.cv[i])), (x, y) -> x + y)
+       |     ROUND(${sqlDot("n.v", "cents.cv")}
        |       / (n.norm * cents.cnorm), 6) DESC, c_id) AS crn
        |  FROM n CROSS JOIN cents),
        |cells AS (SELECT vec_id, v, norm, cell FROM assign WHERE crn = 1)
        |SELECT a.vec_id AS keep_id, b.vec_id AS drop_id, a.cell AS cell,
-       | ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(range(1, ${AnnDims + 1}), i -> a.v[i] * b.v[i])), (x, y) -> x + y)
+       | ROUND(${sqlDot("a.v", "b.v")}
        |   / (a.norm * b.norm), 6) AS sim
        |FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-       |WHERE list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(range(1, ${AnnDims + 1}), i -> a.v[i] * b.v[i])), (x, y) -> x + y)
+       |WHERE ${sqlDot("a.v", "b.v")}
        |   / (a.norm * b.norm) >= $NearDupThreshold
        |ORDER BY keep_id, drop_id""".stripMargin
 
@@ -2000,17 +1900,13 @@ object Similarity {
   }
 
   val q110Sql: String = {
-    val dotL =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |     list_transform(range(1, ${AnnDims + 1}), i -> n.v[i] * p.pv[i])), (x, y) -> x + y)""".stripMargin
     s"""WITH e AS (
        |  SELECT vec_id, CAST(label AS BIGINT) AS label,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+       |    $sqlWiden AS v
        |  FROM embeddings),
        |n AS (
        |  SELECT vec_id, label, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
+       |   ${sqlNorm("v")} AS norm
        |  FROM e),
        |d AS (
        |  SELECT label, unnest(list_transform(range(1, ${AnnDims + 1}),
@@ -2020,13 +1916,12 @@ object Similarity {
        |  SELECT label, CAST(u.pos AS BIGINT) AS pos, ROUND(avg(u.x), 6) AS c_val
        |  FROM d GROUP BY label, u.pos),
        |p AS (
-       |  SELECT p_label, pv, sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |    list_transform(pv, x -> x * x)), (a, b) -> a + b)) AS pnorm
+       |  SELECT p_label, pv, ${sqlNorm("pv")} AS pnorm
        |  FROM (SELECT label AS p_label, list(c_val ORDER BY pos) AS pv
        |        FROM g GROUP BY label) t),
        |sc AS (
        |  SELECT n.vec_id, n.label, p.p_label,
-       |   ROUND($dotL / (n.norm * p.pnorm), 6) AS pcos
+       |   ROUND(${sqlDot("n.v", "p.pv")} / (n.norm * p.pnorm), 6) AS pcos
        |  FROM n CROSS JOIN p),
        |own AS (
        |  SELECT vec_id, label, pcos AS cos_own FROM sc WHERE p_label = label),
@@ -2066,8 +1961,7 @@ object Similarity {
     // must stay VISIBLE in the plan (checkpointing truncates to a raw RDD
     // scan, which the suite's nested-loop boundedness guard rightly
     // rejects as an unbounded cross side) — the q39/q117 convention
-    val cents = e.orderBy(col("vec_id")).limit(IvfCells)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("norm").as("cnorm"))
+    val cents = seedCells(e)
     val sizes = seededAssignment(s, dir)
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
     // every centroid appears, empty cells at 0 — the rows a rebalancer
@@ -2099,22 +1993,12 @@ object Similarity {
   }
 
   val q130Sql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-       |  FROM e),
-       |cents AS (
-       |  SELECT vec_id AS c_id, v AS cv, norm AS cnorm FROM n
-       |  ORDER BY vec_id LIMIT $IvfCells),
+    s"""WITH $sqlVecs,
+       |${sqlSeedCells("cents")},
        |assign AS (
        |  SELECT vec_id, c_id AS cell,
        |   row_number() OVER (PARTITION BY vec_id ORDER BY
-       |     ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |         list_transform(range(1, ${AnnDims + 1}), i -> n.v[i] * cents.cv[i])), (x, y) -> x + y)
+       |     ROUND(${sqlDot("n.v", "cents.cv")}
        |       / (n.norm * cents.cnorm), 6) DESC, c_id) AS crn
        |  FROM n CROSS JOIN cents),
        |sz AS (SELECT cell, CAST(count(*) AS BIGINT) AS n FROM assign WHERE crn = 1 GROUP BY cell),
@@ -2124,8 +2008,7 @@ object Similarity {
        |tot AS (SELECT CAST(sum(n_vectors) AS BIGINT) AS t FROM szc),
        |cc AS (
        |  SELECT a.c_id AS cell, b.c_id AS other,
-       |   ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |       list_transform(range(1, ${AnnDims + 1}), i -> a.cv[i] * b.cv[i])), (x, y) -> x + y)
+       |   ROUND(${sqlDot("a.cv", "b.cv")}
        |     / (a.cnorm * b.cnorm), 6) AS csim
        |  FROM cents a CROSS JOIN cents b WHERE a.c_id <> b.c_id),
        |nn AS (
@@ -2174,7 +2057,7 @@ object Similarity {
 
   val q131Sql: String =
     s"""WITH e AS (
-       |  SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+       |  SELECT $sqlWiden AS v FROM embeddings),
        |f AS (
        |  SELECT CAST(t.i AS BIGINT) AS dim, v[t.i] AS x
        |  FROM e, unnest(range(1, ${AnnDims + 1})) AS t(i))
@@ -2236,22 +2119,12 @@ object Similarity {
   }
 
   val q148Sql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-       |  FROM e),
-       |cents AS (
-       |  SELECT vec_id AS c_id, v AS cv, norm AS cnorm FROM n
-       |  ORDER BY vec_id LIMIT $IvfCells),
+    s"""WITH $sqlVecs,
+       |${sqlSeedCells("cents")},
        |assign AS (
        |  SELECT vec_id, v, c_id AS cell,
        |   row_number() OVER (PARTITION BY vec_id ORDER BY
-       |     ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |         list_transform(range(1, ${AnnDims + 1}), i -> n.v[i] * cents.cv[i])), (x, y) -> x + y)
+       |     ROUND(${sqlDot("n.v", "cents.cv")}
        |       / (n.norm * cents.cnorm), 6) DESC, c_id) AS crn
        |  FROM n CROSS JOIN cents),
        |cells AS (SELECT vec_id, v, cell FROM assign WHERE crn = 1),
@@ -2377,8 +2250,7 @@ object Similarity {
     // checkpointed assignment the scan uses.
     val qsPq = ev.orderBy(col("vec_id")).limit(PqQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qnorm"))
-    val centsPq = ev.orderBy(col("vec_id")).limit(IvfCells)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("norm").as("cnorm"))
+    val centsPq = seedCells(ev)
     val pcells = ivfPqProbeCells(qsPq, centsPq).select(col("q_id"), col("cell"))
       .localCheckpoint(true)
     val cellHist = sa.groupBy(col("cell")).agg(count(lit(1)).as("c"))
@@ -2413,13 +2285,9 @@ object Similarity {
     * counts from the shared signature/assignment CTE builders, and the
     * PQ ground truth from a fresh exact-L2 rank over the query set.
     */
-  val q155Sql: String = {
-    val planes = PlaneCoeffs.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    def l2full(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(range(1, ${AnnDims + 1}),
-         |        i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))), (x, y) -> x + y)""".stripMargin
-    s"""WITH $sqlVecHeadCtes,
+  val q155Sql: String =
+    s"""WITH $sqlVecs,
+       |${sqlSeedCells("c0")},
        |nv AS (SELECT CAST(count(*) AS BIGINT) AS n_vec FROM e),
        |ex AS MATERIALIZED (SELECT vec_id, neighbor_id FROM ($q25Sql) x25 WHERE rnk <= 3),
        |lshp AS (SELECT vec_id, neighbor_id FROM ($q26Sql) x26),
@@ -2430,11 +2298,7 @@ object Similarity {
        |pqvp AS (SELECT q_id AS vec_id, neighbor_id FROM ($q163Sql) x163),
        |sg155 AS MATERIALIZED (
        |  SELECT vec_id,
-       |   CAST(list_sum(list_transform(range(0, $AnnPlanes), p ->
-       |     CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |            list_transform(range(1, ${AnnDims + 1}), i ->
-       |              CAST((($planes)[p + 1])[i] AS DOUBLE) * v[i])), (x, y) -> x + y) > 0
-       |     THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)) AS BIGINT) AS bucket
+       |   $sqlLshBucket AS bucket
        |  FROM n),
        |${sqlAssignCte("sa", "c0", materialized = true)},
        |$sqlTrainedRoundsCtes,
@@ -2444,7 +2308,7 @@ object Similarity {
        |  SELECT vec_id, neighbor_id FROM (
        |    SELECT q.vec_id AS vec_id, b.vec_id AS neighbor_id,
        |     row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |       ROUND(${l2full("q.v", "b.v")}, 6), b.vec_id) AS rnk
+       |       ROUND(${sqlL2Sq("q.v", "b.v", AnnDims)}, 6), b.vec_id) AS rnk
        |    FROM n q JOIN n b ON b.vec_id <> q.vec_id
        |    WHERE q.vec_id IN (SELECT vec_id FROM qs)) zx WHERE rnk <= $PqTopK),
        |lshc AS (SELECT CAST(COALESCE(SUM(c * (c - 1)), 0) AS BIGINT) AS cands
@@ -2465,7 +2329,7 @@ object Similarity {
        |  SELECT q_id, cell FROM (
        |    SELECT q.vec_id AS q_id, c.c_id AS cell,
        |     row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |       ROUND(${sqlDotL("nq.v", "c.cv")} / (nq.norm * c.cnorm), 6) DESC, c.c_id) AS prn
+       |       ROUND(${sqlDot("nq.v", "c.cv")} / (nq.norm * c.cnorm), 6) DESC, c.c_id) AS prn
        |    FROM qs q JOIN n nq ON nq.vec_id = q.vec_id CROSS JOIN c0 c) zp
        |  WHERE prn <= $IvfPqProbes),
        |pqh AS (SELECT cell, CAST(count(*) AS BIGINT) AS c FROM sa GROUP BY 1),
@@ -2521,7 +2385,6 @@ object Similarity {
        | candidates_scanned,
        | ROUND(CAST(candidates_scanned AS DOUBLE) / exhaustive, 6) AS scan_frac
        |FROM rows_ ORDER BY method""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q175
 
@@ -2695,9 +2558,6 @@ object Similarity {
         sims.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))))
 
   val q175Sql: String = {
-    def fold(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |     list_transform(range(1, ${AnnDims + 1}), i -> $a[i] * $b[i])), (x, y) -> x + y)""".stripMargin
     val steps = (2 to MmrK).map { t =>
       val sel = (1 until t).map(u => s"SELECT qid, id FROM s$u").mkString(" UNION ALL ")
       s"""sel$t AS MATERIALIZED ($sel),
@@ -2721,18 +2581,11 @@ object Similarity {
         s"CAST(CAST(rel AS DECIMAL(18,6)) * 7 - CAST(maxsim AS DECIMAL(18,6)) * 3" +
         s" AS DOUBLE) AS mmr_score_x10 FROM s$t")
     val outSql = out.mkString(" UNION ALL ")
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-       |  FROM e),
+    s"""WITH $sqlVecs,
        |qs AS (SELECT vec_id AS qid, v AS qv, norm AS qn FROM n ORDER BY vec_id LIMIT $PqQueries),
        |scored AS (
        |  SELECT qid, n.vec_id AS id,
-       |   ROUND(${fold("qv", "n.v")} / (qn * n.norm), 6) AS rel
+       |   ROUND(${sqlDot("qv", "n.v")} / (qn * n.norm), 6) AS rel
        |  FROM qs JOIN n ON n.vec_id <> qs.qid),
        |cand AS MATERIALIZED (
        |  SELECT qid, id, rel FROM (
@@ -2741,7 +2594,7 @@ object Similarity {
        |    FROM scored) WHERE rn <= $MmrCand),
        |ps AS MATERIALIZED (
        |  SELECT a.qid, a.id AS ca, b.id AS cb,
-       |   ROUND(${fold("na.v", "nb.v")} / (na.norm * nb.norm), 6) AS sim
+       |   ROUND(${sqlDot("na.v", "nb.v")} / (na.norm * nb.norm), 6) AS sim
        |  FROM cand a JOIN cand b ON a.qid = b.qid AND a.id <> b.id
        |  JOIN n na ON na.vec_id = a.id JOIN n nb ON nb.vec_id = b.id),
        |s1 AS MATERIALIZED (

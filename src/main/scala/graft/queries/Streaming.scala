@@ -28,16 +28,7 @@ object Streaming {
       .orderBy(col("user_id"), col("s_start"))
 
   val q27Sql: String =
-    """WITH o AS (
-      |  SELECT user_id, ts, value,
-      |   CASE WHEN lag(ts) OVER w IS NULL
-      |         OR ts - lag(ts) OVER w >= INTERVAL '30 minutes' THEN 1 ELSE 0 END AS new_s
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-      |g AS (
-      |  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-      |  FROM o)
+    s"""WITH ${sessionSqlCtes("ts, value", "ts")}
       |SELECT min(ts) AS s_start, max(ts) + INTERVAL '30 minutes' AS s_end,
       | user_id, CAST(count(*) AS BIGINT) AS n_events,
       | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
@@ -65,7 +56,24 @@ object Streaming {
   /** Session inactivity gap for q72, microseconds (30 minutes — the q27
     * convention).
     */
-  val GapUs: Long = 30L * 60L * 1000000L
+  final val GapUs = 30L * 60L * 1000000L
+
+  /** DuckDB twin of the [[GapUs]] sessionization (gaps and islands): CTE
+    * `o` carries `cols` of each event and flags `new_s` where the gap from
+    * the user's previous event in `order` reaches the timeout; CTE `g`
+    * numbers the user's sessions as the running sum `grp`. Place inside a
+    * `WITH`. */
+  def sessionSqlCtes(cols: String, order: String): String =
+    s"""o AS (
+       |  SELECT user_id, $cols,
+       |   CASE WHEN lag(ts) OVER w IS NULL
+       |         OR ts - lag(ts) OVER w >= INTERVAL '${GapUs / 60000000L} minutes' THEN 1 ELSE 0 END AS new_s
+       |  FROM events
+       |  WINDOW w AS (PARTITION BY user_id ORDER BY $order)),
+       |g AS (
+       |  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY $order
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
+       |  FROM o)""".stripMargin
 
   /** q72: typed-API sessionization — the `Dataset[T].groupByKey.
     * flatMapGroups` surface, for per-key logic `session_window` can't
@@ -117,16 +125,7 @@ object Streaming {
   }
 
   val q72Sql: String =
-    """WITH o AS (
-      |  SELECT user_id, ts, event_type, value,
-      |   CASE WHEN lag(ts) OVER w IS NULL
-      |         OR ts - lag(ts) OVER w >= INTERVAL '30 minutes' THEN 1 ELSE 0 END AS new_s
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-      |g AS (
-      |  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-      |  FROM o)
+    s"""WITH ${sessionSqlCtes("ts, event_type, value", "ts")}
       |SELECT user_id, CAST(grp AS BIGINT) AS session_idx,
       | min(ts) AS s_start, max(ts) AS s_last,
       | date_diff('microsecond', min(ts), max(ts)) AS duration_us,

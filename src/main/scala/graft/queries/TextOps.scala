@@ -67,7 +67,7 @@ object TextOps {
     val m = langsAlpha.map(l => s"s_$l").mkString("greatest(", ", ", ")")
     val pred = langsAlpha.map(l => s"WHEN $m > 0 AND s_$l = $m THEN '$l'").mkString(" ")
     s"""WITH t AS (
-       |  SELECT doc_id, lang AS claimed_lang, regexp_split_to_array(trim(text), '\\s+') AS w
+       |  SELECT doc_id, lang AS claimed_lang, ${wordsSql("text")} AS w
        |  FROM documents),
        |s AS (
        |  SELECT doc_id, claimed_lang, CAST(len(w) AS BIGINT) AS n_words,
@@ -119,7 +119,7 @@ object TextOps {
 
   val q18Sql: String =
     s"""WITH t AS (
-       |  SELECT doc_id, text, regexp_split_to_array(trim(text), '\\s+') AS w
+       |  SELECT doc_id, text, ${wordsSql("text")} AS w
        |  FROM documents),
        |s AS (
        |  SELECT doc_id,
@@ -156,12 +156,12 @@ object TextOps {
   }
 
   val q19Sql: String =
-    """SELECT doc_id,
+    s"""SELECT doc_id,
       | CAST(length(text) AS BIGINT) AS n_chars,
-      | CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS ws_tokens,
-      | CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS BIGINT) AS re_tokens,
+      | CAST(len(${wordsSql("text")}) AS BIGINT) AS ws_tokens,
+      | CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS BIGINT) AS re_tokens,
       | ROUND(CAST(length(text) AS DOUBLE)
-      |       / len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\s]')), 4) AS chars_per_token
+      |       / len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\\s]')), 4) AS chars_per_token
       |FROM documents ORDER BY doc_id""".stripMargin
 
   /** q20: document fingerprinting — full-content md5, a 60-bit content
@@ -182,11 +182,11 @@ object TextOps {
 
   val q20Sql: String =
     s"""SELECT doc_id, md5(text) AS md5_hex,
-       | CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT) AS content_key,
+       | ${hash60Sql("text")} AS content_key,
        | list_reduce(
        |   list_prepend(CAST(0 AS BIGINT),
-       |     list_transform(regexp_split_to_array(trim(text), '\\s+'),
-       |       x -> CAST(concat('0x', substr(md5(x), 1, 15)) AS BIGINT))),
+       |     list_transform(${wordsSql("text")},
+       |       x -> ${hash60Sql("x")})),
        |   (a, b) -> (a * 31 + b) % ${HashConsts.RollMod}) AS rolling_hash
        |FROM documents ORDER BY doc_id""".stripMargin
 }

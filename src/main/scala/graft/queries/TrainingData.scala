@@ -46,7 +46,7 @@ object TrainingData {
     (hash60(concat(key.cast("string"), lit(":" + salt))).cast("double") / HashUnit)
 
   private[queries] def uhashSql(keyExpr: String, salt: String): String =
-    s"(CAST(concat('0x', substr(md5(concat(CAST($keyExpr AS VARCHAR), ':$salt')), 1, 15)) AS BIGINT) / $HashUnit)"
+    s"(${hash60Sql(s"concat(CAST($keyExpr AS VARCHAR), ':$salt')")} / $HashUnit)"
 
   // ---------------------------------------------------------------- q47
 
@@ -249,8 +249,8 @@ object TrainingData {
   }
 
   val q51Sql: String =
-    """WITH w AS (
-      |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
+    s"""WITH w AS (
+      |  SELECT doc_id, ${wordsSql("text")} AS w FROM documents),
       |tok AS (SELECT doc_id, unnest(w) AS t FROM w),
       |wc AS (SELECT doc_id, t, count(*) AS c FROM tok GROUP BY 1, 2),
       |stats AS (
@@ -258,12 +258,7 @@ object TrainingData {
       |   CAST(count(*) AS BIGINT) AS n_distinct, CAST(max(c) AS BIGINT) AS max_tf,
       |   CAST(CASE WHEN sum(c) >= 3 THEN sum(c) - 2 ELSE 0 END AS BIGINT) AS tri_total
       |  FROM wc GROUP BY doc_id),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, s FROM (
-      |    SELECT doc_id, unnest(CASE WHEN len(w) >= 3
-      |      THEN list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))
-      |      ELSE [] END) AS s
-      |    FROM w)),
+      |${shingleSetSql("sh", "doc_id", 3, "w")},
       |trid AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS tri_distinct FROM sh GROUP BY doc_id)
       |SELECT stats.doc_id, n_words, n_distinct, max_tf,
       | ROUND(CAST(max_tf AS DOUBLE) / n_words, 6) AS top_word_ratio,
@@ -296,13 +291,13 @@ object TrainingData {
   }
 
   val q52Sql: String =
-    """SELECT lang, token, doc_freq, rn FROM (
+    s"""SELECT lang, token, doc_freq, rn FROM (
       |  SELECT lang, token, doc_freq,
       |   row_number() OVER (PARTITION BY lang ORDER BY doc_freq DESC, token) AS rn
       |  FROM (
       |    SELECT lang, token, CAST(count(*) AS BIGINT) AS doc_freq
       |    FROM (
-      |      SELECT DISTINCT lang, doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS token
+      |      SELECT DISTINCT lang, doc_id, unnest(${wordsSql("text")}) AS token
       |      FROM documents)
       |    GROUP BY lang, token))
       |WHERE rn <= 10 ORDER BY lang, rn""".stripMargin
@@ -336,8 +331,8 @@ object TrainingData {
   }
 
   val q53Sql: String =
-    """WITH tok AS (
-      |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS term
+    s"""WITH tok AS (
+      |  SELECT doc_id, unnest(${wordsSql("text")}) AS term
       |  FROM documents),
       |wc AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2),
       |dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM wc GROUP BY term),
@@ -439,7 +434,7 @@ object TrainingData {
 
   val q56Sql: String =
     s"""WITH w AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws FROM documents),
+       |  SELECT doc_id, ${wordsSql("text")} AS ws FROM documents),
        |c AS (
        |  SELECT doc_id, ws,
        |   (greatest(len(ws) - $ChunkSize, 0) + ${ChunkStride - 1}) // $ChunkStride + 1 AS n_chunks
@@ -540,20 +535,12 @@ object TrainingData {
   }
 
   val q66Sql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, v,
-       |   sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |     list_transform(v, x -> x * x)), (a, b) -> a + b)) AS norm
-       |  FROM e),
+    s"""WITH ${Similarity.sqlVecs},
        |ev AS (SELECT vec_id AS e_id, v AS evec, norm AS enorm FROM n WHERE vec_id % 10 = 0),
        |tr AS (SELECT vec_id, v, norm FROM n WHERE vec_id % 10 <> 0),
        |hits AS (
        |  SELECT tr.vec_id,
-       |   ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |       list_transform(range(1, 65), i -> tr.v[i] * ev.evec[i])), (x, y) -> x + y)
+       |   ROUND(${Similarity.sqlDot("tr.v", "ev.evec")}
        |     / (tr.norm * ev.enorm), 6) AS sim
        |  FROM tr JOIN ev ON TRUE)
        |SELECT vec_id, CAST(count(*) AS BIGINT) AS n_eval_hits, max(sim) AS max_sim
@@ -607,14 +594,8 @@ object TrainingData {
 
   val q60Sql: String =
     s"""WITH w AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents),
-       |g AS (
-       |  SELECT DISTINCT doc_id, s FROM (
-       |    SELECT doc_id, unnest(CASE WHEN len(w) >= $DecontamN
-       |      THEN list_transform(range(1, len(w) - ${DecontamN - 2}),
-       |             i -> array_to_string(w[i:i+${DecontamN - 1}], ' '))
-       |      ELSE [] END) AS s
-       |    FROM w)),
+       |  SELECT doc_id, ${wordsSql("text")} AS w FROM documents),
+       |${shingleSetSql("g", "doc_id", DecontamN, "w")},
        |ev AS (SELECT doc_id AS eval_doc, s FROM g WHERE doc_id % 10 = 0),
        |tr AS (SELECT doc_id, s FROM g WHERE doc_id % 10 <> 0)
        |SELECT tr.doc_id, CAST(count(*) AS BIGINT) AS n_hits,
@@ -653,7 +634,7 @@ object TrainingData {
 
   val q59Sql: String =
     s"""WITH w AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws FROM documents),
+       |  SELECT doc_id, ${wordsSql("text")} AS ws FROM documents),
        |c AS (
        |  SELECT doc_id, ws,
        |   (greatest(len(ws) - $ChunkSize, 0) + ${ChunkStride - 1}) // $ChunkStride + 1 AS n_chunks
@@ -715,7 +696,7 @@ object TrainingData {
   val q58Sql: String =
     s"""WITH RECURSIVE ${Dedup.sqlComponentsCtes},
        |qd AS (
-       |  SELECT doc_id, lang, text, regexp_split_to_array(trim(text), '\\s+') AS ww,
+       |  SELECT doc_id, lang, text, ${wordsSql("text")} AS ww,
        |   ${uhashSql("doc_id", "q58")} AS u
        |  FROM documents),
        |qs AS (
@@ -796,20 +777,14 @@ object TrainingData {
   val q100Sql: String =
     s"""WITH RECURSIVE ${Dedup.sqlComponentsCtes},
        |w5 AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents),
-       |g5 AS (
-       |  SELECT DISTINCT doc_id, s FROM (
-       |    SELECT doc_id, unnest(CASE WHEN len(w) >= $DecontamN
-       |      THEN list_transform(range(1, len(w) - ${DecontamN - 2}),
-       |             i -> array_to_string(w[i:i+${DecontamN - 1}], ' '))
-       |      ELSE [] END) AS s
-       |    FROM w5)),
+       |  SELECT doc_id, ${wordsSql("text")} AS w FROM documents),
+       |${shingleSetSql("g5", "doc_id", DecontamN, "w5")},
        |ev5 AS (SELECT DISTINCT s FROM g5 WHERE doc_id % 10 = 0),
        |contam AS (
        |  SELECT DISTINCT doc_id FROM g5
        |  WHERE doc_id % 10 <> 0 AND s IN (SELECT s FROM ev5)),
        |qd AS (
-       |  SELECT doc_id, lang, text, regexp_split_to_array(trim(text), '\\s+') AS ww,
+       |  SELECT doc_id, lang, text, ${wordsSql("text")} AS ww,
        |   ${uhashSql("doc_id", "q100")} AS u
        |  FROM documents WHERE doc_id % 10 <> 0),
        |qs AS (
@@ -1053,8 +1028,7 @@ object TrainingData {
        |  UNION ALL SELECT pos_id, anchor_id FROM pos),
        |att AS (
        |  SELECT anchor_id, pos_id, t.t AS attempt,
-       |   CAST(concat('0x', substr(md5(anchor_id || ':' || pos_id || ':' || t.t), 1, 15))
-       |     AS BIGINT) % c AS cand
+       |   ${hash60Sql("anchor_id || ':' || pos_id || ':' || t.t")} % c AS cand
        |  FROM pos, unnest(range(1, ${NegAttempts + 1})) AS t(t), cnt),
        |valid AS (
        |  SELECT att.anchor_id, att.pos_id, att.attempt, att.cand
@@ -1143,7 +1117,7 @@ object TrainingData {
   val q189Sql: String =
     s"""WITH d AS (
        |  SELECT doc_id,
-       |   CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS tc
+       |   CAST(len(${wordsSql("text")}) AS BIGINT) AS tc
        |  FROM documents),
        |c AS (
        |  SELECT doc_id, tc,
@@ -1263,14 +1237,8 @@ object TrainingData {
        |  SELECT keep_id AS a, drop_id AS b FROM pairs2
        |  UNION ALL SELECT drop_id, keep_id FROM pairs2),
        |w2 AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents),
-       |g2 AS (
-       |  SELECT DISTINCT doc_id, s FROM (
-       |    SELECT doc_id, unnest(CASE WHEN len(w) >= $DecontamN
-       |      THEN list_transform(range(1, len(w) - ${DecontamN - 2}),
-       |             i -> array_to_string(w[i:i+${DecontamN - 1}], ' '))
-       |      ELSE [] END) AS s
-       |    FROM w2)),
+       |  SELECT doc_id, ${wordsSql("text")} AS w FROM documents),
+       |${shingleSetSql("g2", "doc_id", DecontamN, "w2")},
        |ev AS (SELECT doc_id AS eval_doc, s FROM g2 WHERE doc_id % 10 = 0),
        |tr AS (SELECT doc_id, s FROM g2 WHERE doc_id % 10 <> 0),
        |direct AS (SELECT tr.doc_id FROM tr JOIN ev ON tr.s = ev.s GROUP BY tr.doc_id),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
-import graft.functions.TextFns.qualityScore
+import graft.functions.TextFns.{qualityScore, wordsSql}
 
 /** Pre-text web-curation operators (r17 verdict ask #4) plus the
   * multimodal curation capstone (ask #5): the stage a C4/RefinedWeb-class
@@ -254,7 +254,7 @@ object WebCuration {
        |  SELECT c.doc_id, url, ${registeredDomainSql("host")} AS domain,
        |   ${graft.functions.TextFns.qualitySqlExpr("ww", "text")} AS quality,
        |   ${TrainingData.uhashSql("c.doc_id", "q204")} AS u
-       |  FROM c JOIN (SELECT doc_id, text, regexp_split_to_array(trim(text), '\\s+') AS ww
+       |  FROM c JOIN (SELECT doc_id, text, ${wordsSql("text")} AS ww
        |               FROM documents) t ON c.doc_id = t.doc_id),
        |r AS (
        |  SELECT domain, url, quality,
@@ -495,7 +495,7 @@ object WebCuration {
        |  SELECT source, ${noisyPageSqlExpr} AS page FROM documents),
        |m AS (
        |  SELECT source,
-       |   regexp_split_to_array(trim(page), '\\s+') AS ww,
+       |   ${wordsSql("page")} AS ww,
        |   string_split(page, chr(10)) AS ll,
        |   CAST(length(regexp_replace(page, '\\s', '', 'g')) AS BIGINT) AS nonws,
        |   CAST(length(page) - length(replace(page, '#', ''))
@@ -699,7 +699,7 @@ object WebCuration {
        |  SELECT doc_id, source,
        |   string_split(page, chr(10)) AS ll,
        |   string_split(page, chr(10) || chr(10)) AS pp,
-       |   regexp_split_to_array(trim(page), '\\s+') AS ww,
+       |   ${wordsSql("page")} AS ww,
        |   CAST(length(page) AS BIGINT) AS pagel,
        |   CAST(length(regexp_replace(page, '\\s', '', 'g')) AS BIGINT) AS nonws
        |  FROM p),
@@ -806,11 +806,11 @@ object WebCuration {
 
   val q211Sql: String = {
     val keep =
-      """l -> NOT (l LIKE '- %') AND NOT (l LIKE '%...')
-        |    AND len(regexp_split_to_array(trim(l), '\s+')) >= 3
-        |    AND 2 * len(list_filter(regexp_split_to_array(trim(l), '\s+'),
+      s"""l -> NOT (l LIKE '- %') AND NOT (l LIKE '%...')
+        |    AND len(${wordsSql("l")}) >= 3
+        |    AND 2 * len(list_filter(${wordsSql("l")},
         |          w -> regexp_matches(w, '[A-Za-z]')))
-        |        >= len(regexp_split_to_array(trim(l), '\s+'))""".stripMargin
+        |        >= len(${wordsSql("l")})""".stripMargin
     s"""WITH p AS (
        |  SELECT doc_id, source, ${noisyPageSqlExpr} AS page FROM documents),
        |c AS (

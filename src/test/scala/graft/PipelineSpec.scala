@@ -123,20 +123,25 @@ class PipelineSpec extends SparkTestBase with TableDrivenPropertyChecks {
     // two AvailableNow drains off one checkpoint — the composed job must
     // aggregate every source event exactly once despite the redelivered
     // overlap (run() returns the conservation verdict), and the store's
-    // per-window totals must equal the batch recompute
-    val work = Files.createTempDirectory("graft_ev_job").toString
-    assert(graft.pipeline.EventsIngestJob.run(spark, sf, work),
-      "conservation invariant failed — see [events-ingest] log lines")
-    val cols = Seq("w_start", "event_type", "n_events", "sum_value").map(col)
-    val store = spark.read.parquet(s"$work/agg").select(cols: _*)
-    val batch = graft.streaming.EventStreams.tumbling(
-      Tables.events(spark, sf).select(
-        col("ts"), col("user_id"), col("event_type"), col("value")), "1 hour")
-      .select(cols: _*)
-    // all four columns, both directions: a wrong total and a missing
-    // window each fail
-    assert(store.exceptAll(batch).isEmpty, "store holds rows the batch recompute lacks")
-    assert(batch.exceptAll(store).isEmpty, "store lacks rows of the batch recompute")
+    // per-window totals must equal the batch recompute. sf0.001 has no
+    // window with events on both sides of the tick cut, so tick 2 there
+    // only adds windows; sf0.01 has such windows, so tick 2 replaces
+    // stored ones and the upsert's replace path is checked too
+    forAll(Table("corpus", sf, sf.replace("sf0.001", "sf0.01"))) { dir =>
+      val work = Files.createTempDirectory("graft_ev_job").toString
+      assert(graft.pipeline.EventsIngestJob.run(spark, dir, work),
+        s"$dir: conservation invariant failed — see [events-ingest] log lines")
+      val cols = Seq("w_start", "event_type", "n_events", "sum_value").map(col)
+      val store = spark.read.parquet(s"$work/agg").select(cols: _*)
+      val batch = graft.streaming.EventStreams.tumbling(
+        Tables.events(spark, dir).select(
+          col("ts"), col("user_id"), col("event_type"), col("value")), "1 hour")
+        .select(cols: _*)
+      // all four columns, both directions: a wrong total and a missing
+      // window each fail
+      assert(store.exceptAll(batch).isEmpty, s"$dir: store holds rows the batch recompute lacks")
+      assert(batch.exceptAll(store).isEmpty, s"$dir: store lacks rows of the batch recompute")
+    }
   }
 
   private def windows(rows: (Int, String, Long, Double)*) = {

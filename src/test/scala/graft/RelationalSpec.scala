@@ -26,6 +26,18 @@ class RelationalSpec extends SparkTestBase {
     assert(empty.isEmpty, s"registry rows with an empty oracle: $empty")
   }
 
+  test("no oracle renders a value read before its initializer") {
+    // oracle vals are assembled from SQL fragment defs while their object
+    // initializes; a fragment that reads a plain val declared further down
+    // sees its default instead: a String renders as `null`, a dimension as
+    // 0, which turns the 64-dim fold's range(1, 65) into range(1, 1)
+    def rendering(p: String => Boolean) = SparkEntry.registry.filter(q => p(q.oracleSql)).map(_.name)
+    val nulls = rendering(sql => """\bnull\b""".r.findFirstIn(sql).isDefined)
+    assert(nulls.isEmpty, s"oracles rendering an uninitialized String as null: $nulls")
+    val empty = rendering(_.contains("range(1, 1)"))
+    assert(empty.isEmpty, s"oracles rendering an uninitialized dimension as range(1, 1): $empty")
+  }
+
   test("select rejects an unknown name, naming it, and orders the rest alphabetically") {
     val e = intercept[IllegalArgumentException](
       SparkEntry.select(Seq("q22_ngram_jaccard", "q22_ngram_jacard", "q01_nope")))
